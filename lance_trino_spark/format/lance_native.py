@@ -55,6 +55,7 @@ import time as _time
 from dataclasses import dataclass, field
 
 from . import native_io as nio
+from .routing import route
 
 
 class LanceNativeError(RuntimeError):
@@ -419,15 +420,19 @@ def native_list_tags(root: str) -> dict[str, int]:
 
 
 def resolve_native_read_version(root: str, options: dict) -> int | None:
-    """Pinned version from native read options: ``version`` (int),
-    ``timestampAsOf`` (epoch ms), or ``tagAsOf`` (named tag) — at most
-    one; None = latest. Spark normalizes DSv2 option keys to lowercase."""
+    """Pinned version from native read options: ``version`` or its
+    own-format spelling ``versionAsOf`` (int), ``timestampAsOf`` (epoch
+    ms), or ``tagAsOf`` (named tag) — at most one; None = latest. Spark
+    normalizes DSv2 option keys to lowercase."""
     v = options.get("version")
+    va = options.get("versionasof")
     ts = options.get("timestampasof")
     tag = options.get("tagasof")
-    if sum(x is not None for x in (v, ts, tag)) > 1:
+    if sum(x is not None for x in (v, va, ts, tag)) > 1:
         raise LanceNativeError(
-            "specify at most one of version / timestampAsOf / tagAsOf")
+            "specify at most one of version / versionAsOf / timestampAsOf "
+            "/ tagAsOf")
+    v = va if v is None else v
     if tag is not None:
         tags = native_list_tags(root)
         if tag not in tags:
@@ -3775,6 +3780,35 @@ def _marker_encoding_names(m: NativeManifest) -> tuple:
     return frozenset(dc), frozenset(mb), frozenset(fz)
 
 
+def _stage_writer(root: str, m: "NativeManifest", file_version: int):
+    """(writer, binding) for executor-side staging into ``root``:
+    ``writer(root, specs) -> (file_name, n_rows)`` writes one data file
+    in the dataset's flavor, and the object-store binding rides the
+    cloudpickled closure into the staging tasks. Copy-semantics stores
+    refuse — a worker would stage into its own snapshot and the commit
+    would reference files the driver store never received."""
+    if file_version == 2:
+        # production v2 files write PAGED (the SDK writes ~8 MB pages):
+        # bounded page memory on write AND the unit of the reader's
+        # page-skip late materialization — a point probe on a staged
+        # fragment touches O(pages hit), not the whole column
+        _dc, _mb, _fz = _marker_encoding_names(m)
+
+        def writer(r, s):
+            return _write_v2_data_file(
+                r, s, page_rows=8192, dictionary_names=_dc,
+                miniblock_names=_mb, fullzip_names=_fz)
+    else:
+        writer = _write_v1_data_file
+    binding = nio.binding_for(root)
+    if binding is not None and not getattr(
+            binding[1], "shared_across_processes", False):
+        raise LanceNativeError(
+            "distributed staging needs a store shared across processes; "
+            f"{type(binding[1]).__name__} is a driver-local double")
+    return writer, binding
+
+
 def stage_native_fragments(
     df, root: str, m: "NativeManifest", file_version: int,
     rows_per_fragment: int = 1_000_000,
@@ -3798,30 +3832,7 @@ def stage_native_fragments(
         T.StructField("file_name", T.StringType()),
         T.StructField("n_rows", T.LongType()),
     ])
-    if file_version == 2:
-        # production v2 files write PAGED (the SDK writes ~8 MB pages):
-        # bounded page memory on write AND the unit of the reader's
-        # page-skip late materialization — a point probe on a staged
-        # fragment touches O(pages hit), not the whole column
-        _dc, _mb, _fz = _marker_encoding_names(m)
-
-        def writer(r, s):
-            return _write_v2_data_file(
-                r, s, page_rows=8192, dictionary_names=_dc,
-                miniblock_names=_mb, fullzip_names=_fz)
-    else:
-        writer = _write_v1_data_file
-
-    # object-store roots: the (root, store) binding rides the cloudpickled
-    # closure into the staging tasks. Copy-semantics stores refuse — a
-    # worker would stage into its own snapshot and the commit would
-    # reference files the driver store never received.
-    _binding = nio.binding_for(root)
-    if _binding is not None and not getattr(
-            _binding[1], "shared_across_processes", False):
-        raise LanceNativeError(
-            "distributed staging needs a store shared across processes; "
-            f"{type(_binding[1]).__name__} is a driver-local double")
+    writer, _binding = _stage_writer(root, m, file_version)
 
     def stage(it):
         import pyarrow as pa
@@ -3857,6 +3868,61 @@ def stage_native_fragments(
     staged = df.select(*data_cols).mapInArrow(
         stage, schema=out_schema).collect()
     return [(r["file_name"], int(r["n_rows"])) for r in staged]
+
+
+def _stage_ordered_fragments(
+    df, root: str, m: "NativeManifest", file_version: int,
+    rows_per_fragment: int, order: list,
+) -> list[tuple[str, int]]:
+    """``stage_native_fragments`` with EXACT cuts: the rows at positions
+    [i * rows_per_fragment, (i + 1) * rows_per_fragment) of the total
+    ``order`` form fragment i, and fragments come back in that order —
+    the cuts a driver-side writer makes over the same sorted rows. One
+    task writes each fragment (executor memory O(rows_per_fragment))."""
+    writer, binding = _stage_writer(root, m, file_version)
+    data_cols = [f.name for f in m.top_level_fields()]
+
+    def stage_chunk(tbl):
+        import pyarrow as pa
+
+        nio.restore_binding(binding)
+        tbl = tbl.sort_by("_ord")
+        fn, nr = writer(root, _specs_for_manifest(
+            m, _arrow_to_columns(tbl, m)))
+        return pa.table({"chunk": [tbl.column("_chunk")[0].as_py()],
+                         "file_name": [fn], "n_rows": [int(nr)]})
+
+    # one report row per staged file, as in stage_native_fragments
+    staged = (
+        _ordinal_chunks(df, order, rows_per_fragment)
+        .select(*data_cols, "_ord", "_chunk").groupBy("_chunk")
+        .applyInArrow(stage_chunk,
+                      "chunk long, file_name string, n_rows long")
+        .collect()
+    )
+    staged.sort(key=lambda r: r["chunk"])
+    return [(r["file_name"], int(r["n_rows"])) for r in staged]
+
+
+def _ordinal_chunks(df, order, chunk_rows: int):
+    """``df`` plus ``_ord``, each row's 0-based position in the total
+    ``order``, and ``_chunk`` = ``_ord div chunk_rows``. One range sort,
+    materialized once (localCheckpoint) so the per-partition row counts
+    and the positions numbered from them see the same partitioning."""
+    from pyspark.sql import functions as F
+
+    ranked = df.orderBy(*order).localCheckpoint()
+    pid = F.spark_partition_id()
+    offsets, acc = [], 0
+    for p, n in sorted(ranked.groupBy(pid).count().collect()):
+        offsets += [F.lit(p), F.lit(acc)]
+        acc += n
+    # monotonically_increasing_id keeps the row's index within its
+    # partition in the low 33 bits
+    ordinal = (F.create_map(*offsets)[pid]
+               + F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1))
+    return (ranked.withColumn("_ord", ordinal)
+            .withColumn("_chunk", F.expr(f"_ord div {int(chunk_rows)}")))
 
 
 def _dataset_file_version(root: str, m: NativeManifest, default: int = 1
@@ -4395,17 +4461,16 @@ def native_compact(
            if f.deletion is not None else ())
         for f in m.fragments if f.id not in victim_ids
     ]
-    # Adaptive routing (COMPACT_DISTRIBUTED_MIN_ROWS): a small victim set
-    # pays more in distributed-rewrite fixed costs than the rewrite is
-    # worth — route it to the serial arm below, which cuts the SAME
-    # rows_per_fragment chunks from the same sorted order. Z-order
-    # (list sort_by) always goes distributed: the Morton interleave is a
-    # Spark expression the serial arm does not reproduce.
-    if spark is not None and not isinstance(sort_by, (list, tuple)) and sum(
-        live_count(f) for f in victims
-    ) < COMPACT_DISTRIBUTED_MIN_ROWS:
-        spark = None
+    # Adaptive routing: a small victim set goes to the serial arm below;
+    # both arms write the same fragments. Z-order (list sort_by) always
+    # goes distributed: the Morton interleave is a Spark expression the
+    # serial arm does not reproduce.
+    zorder = isinstance(sort_by, (list, tuple))
+    if spark is not None and not zorder:
+        spark = route("compact", sum(live_count(f) for f in victims), spark)
     if spark is not None:
+        from pyspark.sql import functions as F
+
         from ..sources.lance_datasource import register_lance_datasource
 
         register_lance_datasource(spark)
@@ -4413,20 +4478,20 @@ def native_compact(
             spark.read.format("lance").options(**nio.spark_options(root))
             .option("fragments", ",".join(str(i) for i in sorted(
                 victim_ids)))
+            .option("row_address", str(not zorder).lower())
             .load(root)
         )
-        if sort_by is not None:
-            # total-order clustering: range-partition so each staging
-            # task (→ fragment) owns a disjoint slice of the sort key,
-            # then sort within — the same one-shuffle shape at 100 TB.
-            # A LIST of columns Z-ORDERS instead (Morton interleave of
-            # 16-bit buckets — the native OPTIMIZE ZORDER, own-format
-            # twin cat08): fragments cut from the Z-sorted order hold
-            # small ranges of EVERY named column, so the stats sidecars
-            # prune filters on any of them.
+        if zorder:
+            # A LIST of columns Z-ORDERS (Morton interleave of 16-bit
+            # buckets — the native OPTIMIZE ZORDER, own-format twin
+            # cat08): range-partition so each staging task (→ fragment)
+            # owns a disjoint slice of the Z-value, then sort within —
+            # fragments cut from the Z-sorted order hold small ranges of
+            # EVERY named column, so the stats sidecars prune filters on
+            # any of them.
             n_live = sum(live_count(f) for f in victims)
             n_parts = max(1, -(-n_live // rows_per_fragment))
-            keys = [sort_by] if isinstance(sort_by, str) else list(sort_by)
+            keys = list(sort_by)
             if len(keys) == 1:
                 key = keys[0]
             else:
@@ -4435,11 +4500,18 @@ def native_compact(
                 key = "_zval"
                 victim_df = victim_df.withColumn(
                     key, zorder_value(victim_df, keys))
-            victim_df = victim_df.repartitionByRange(
-                n_parts, key).sortWithinPartitions(key)
-        staged = stage_native_fragments(
-            victim_df, root, m, file_version,
-            rows_per_fragment=rows_per_fragment)
+            staged = stage_native_fragments(
+                victim_df.repartitionByRange(
+                    n_parts, key).sortWithinPartitions(key),
+                root, m, file_version, rows_per_fragment=rows_per_fragment)
+        else:
+            # the serial arm's order (sort key nulls last, ties and the
+            # unsorted case in address order) cut into its exact chunks
+            order = ([F.col(sort_by).asc_nulls_last()]
+                     if sort_by is not None else [])
+            staged = _stage_ordered_fragments(
+                victim_df, root, m, file_version, rows_per_fragment,
+                order + [F.col("_row_address")])
     else:
         merged: dict[str, list] = {c: [] for c in data_cols}
         struct_cols = {
@@ -4476,7 +4548,7 @@ def native_compact(
             _w = _w2
         else:
             _w = _write_v1_data_file
-        # cut the same ~rows_per_fragment chunks the distributed arm
+        # cut the rows_per_fragment chunks the distributed arm also
         # stages (a sorted order cut into contiguous chunks IS
         # range-disjoint); default rows_per_fragment leaves one file.
         n_rows = len(merged[data_cols[0]])
@@ -5777,12 +5849,9 @@ def extend_native_vector_index(root: str, column: str, spark=None
 
     live_ids = {f.id for f in manifest.fragments}
     coverage = sorted((cov & live_ids) | {f.id for f in new_frags})
-    # adaptive routing (r14, lf47 profile): a Spark fan-out costs a
-    # DataSource plan + Python-UDF stages + a shuffle — seconds of
-    # fixed overhead — so small jobs run the serial twin (the
-    # distributed arm's bit-parity reference, milliseconds at this
-    # size) even when spark is given; physical_rows is a cheap
-    # manifest upper bound on the delta
+    # adaptive routing: small jobs run the serial twin (the distributed
+    # arm's bit-parity reference) even when spark is given;
+    # physical_rows is a cheap manifest upper bound on the delta
     delta_rows = sum(int(f.physical_rows) for f in new_frags)
     if idx.cell_shards and idx.ivf_runs < MAX_INDEX_RUNS:
         # O(delta) in-place path (judge r11 #1): encode ONLY the delta
@@ -5793,7 +5862,7 @@ def extend_native_vector_index(root: str, column: str, spark=None
         # encode AND the delta-file writes are executor-staged.
         d = os.path.dirname(idx.path)
         # in-place append: the fan-out only ever touches the delta
-        if spark is not None and delta_rows >= IVF_DISTRIBUTED_MIN_ROWS:
+        if route("ivf_extend", delta_rows, spark) is not None:
             d_lengths, d_files = _distributed_ivf_cell_files(
                 root, d, manifest, nfield, new_frags, cent, codebook,
                 spark)
@@ -5838,9 +5907,9 @@ def extend_native_vector_index(root: str, column: str, spark=None
     # byte-identical to the serial fold (old body prefix + delta in
     # address order). The fold reads O(old index + delta), so the
     # adaptive gate counts BOTH before paying the fan-out.
-    if spark is not None and (
-            delta_rows + sum(int(n) for n in idx.part_lengths)
-            >= IVF_DISTRIBUTED_MIN_ROWS):
+    if route("ivf_extend",
+             delta_rows + sum(int(n) for n in idx.part_lengths),
+             spark) is not None:
         uid = str(uuidlib.uuid4())
         d = os.path.join(root, "_indices", uid)
         d_lengths, d_files = _distributed_ivf_cell_files(
@@ -7649,13 +7718,14 @@ def write_native_scalar_index(
     live-row intersection, exactly as the unindexed path does) so the
     index stays valid as deletion vectors evolve.
 
-    With ``spark`` given, the build is FULLY executor-staged (judge r11
-    #1): the distributed range-partitioned orderBy's own tasks serialize
-    their slice of the sorted run into complete shard files under the new
-    index dir and return one metadata row each — the driver commits
-    O(n_shards) metadata, never a row. Without ``spark``, a driver-side
-    numpy sort streamed into bounded ``shard_rows`` cuts (fixture
-    scale)."""
+    With ``spark`` given (and enough rows, see format/routing.py), the
+    build is FULLY executor-staged (judge r11 #1): one task per
+    ``shard_rows`` slice of the distributed sort serializes it into a
+    complete shard file under the new index dir and returns one metadata
+    row — the driver commits O(n_shards) metadata, never a row. Without
+    ``spark``, a driver-side numpy sort streamed into the same
+    ``shard_rows`` cuts (fixture scale); both arms write the same
+    files."""
     manifest = read_native_manifest(root)
     nfield = next(
         (f for f in manifest.top_level_fields() if f.name == column), None)
@@ -7666,11 +7736,11 @@ def write_native_scalar_index(
         raise LanceNativeError(
             f"column {column!r} type {nfield.logical_type!r} is not "
             "scalar-indexable (int/float/string only)")
-    # Adaptive routing (BTREE_DISTRIBUTED_MIN_ROWS): the serial twin is
-    # bit-identical and avoids the fan-out's fixed seconds on small data.
-    if spark is not None and sum(
-            f.physical_rows for f in manifest.fragments
-    ) >= BTREE_DISTRIBUTED_MIN_ROWS:
+    # Adaptive routing: the serial twin is bit-identical and avoids the
+    # fan-out's fixed seconds on small data.
+    spark = route(
+        "btree", sum(f.physical_rows for f in manifest.fragments), spark)
+    if spark is not None:
         return _write_btree_sharded_distributed(
             root, column, kind, manifest, page_rows, spark, shard_rows)
     return _write_btree_sharded(
@@ -7823,35 +7893,6 @@ MAX_INDEX_RUNS = 8
 # block); 2^18 = 262144 addresses per block bounds per-task memory at a
 # few MB however skewed the centroid distribution is.
 IVF_CELL_BLOCK_BITS = 18
-# Adaptive extend routing (r14, lf47 profile): a Spark fan-out costs a
-# DataSource plan + two Python-UDF stages + a shuffle — seconds of
-# fixed overhead — so deltas below this many rows encode serially even
-# when spark is given (the serial path is the bit-parity reference and
-# takes milliseconds at that size); real ingest deltas go distributed.
-IVF_DISTRIBUTED_MIN_ROWS = 65536
-# Same adaptive routing for the inverted-index family (r14 measure:
-# sf0.1 documents, 4.5k docs — ngram-v1 serial 3.3 s vs distributed
-# 9.9 s, whitespace-v1 serial 0.6 s vs 1.5 s; the fan-out's fixed cost
-# is a DataSource scan plan + a mapInPandas stage + the bucket shuffle
-# of one row per (doc, token)). Builds/extends below this many rows go
-# through the serial twin — the bit-parity reference — even with
-# spark=; corpus-scale runs go distributed.
-FTS_DISTRIBUTED_MIN_ROWS = 8192
-# And for the btree family (r14 measure: 150k-row fixture — serial
-# 0.2-0.4 s vs distributed 2.6-10.3 s; the executor-staged orderBy
-# fan-out costs ~2.5 s fixed). The serial twin's driver footprint is
-# the sorted (value, addr) numpy pair array — ~16-48 MB at this
-# threshold, bounded; corpus-scale builds go distributed.
-BTREE_DISTRIBUTED_MIN_ROWS = 1_048_576
-# And for compaction (r15 measure, st13 profile: each in-line compaction
-# of a ~15k-row streaming sink paid ~1.1 s of distributed-rewrite fixed
-# cost — scan plan + range shuffle + staging stage — for ~40 ms of data
-# work). Victim sets whose LIVE rows total under this go through the
-# serial rewrite even with spark=; the serial arm cuts the same
-# rows_per_fragment chunks (single-column sort or unsorted only —
-# Z-order stays distributed). Driver footprint is bounded by the
-# threshold (python lists of one small victim set).
-COMPACT_DISTRIBUTED_MIN_ROWS = 262_144
 
 
 def _write_btree_shard_meta(
@@ -7972,18 +8013,16 @@ def _write_btree_sharded_distributed(
     page_rows: int, spark, shard_rows: int,
 ) -> str:
     """EXECUTOR-STAGED sharded build — the 100 TB shape (judge r11 #1):
-    the distributed range-partitioned orderBy already places a contiguous
-    slice of the global (value, address) run in each task, so each task
-    serializes its own slice into complete shard files written directly
-    under the new index dir (rotating every ``shard_rows`` rows, O(shard)
-    task memory) and ships back ONE metadata row per shard. The driver
-    never materializes a (value, addr) pair: it collects O(n_shards)
-    metadata rows, orders them (partition, sequence) — which range
-    partitioning makes the global value order — and commits the meta
-    file. Replaces the r11 toLocalIterator single-threaded driver
-    serialization loop. Shard files carry a uuid suffix so a retried or
-    speculative task attempt never collides; files left by failed
-    attempts are unreferenced by the meta and reaped by vacuum."""
+    _btree_sink numbers the global (value, address) run and one task
+    per ``shard_rows`` slice serializes it into a complete shard file
+    written directly under the new index dir (O(shard) task memory),
+    shipping back ONE metadata row. The driver never materializes a
+    (value, addr) pair: it collects O(n_shards) metadata rows, orders
+    them by shard number and commits the meta file. Replaces the r11
+    toLocalIterator single-threaded driver serialization loop. Shard
+    files carry a uuid suffix so a retried or speculative task attempt
+    never collides; files left by failed attempts are unreferenced by
+    the meta and reaped by vacuum."""
     import uuid as uuidlib
 
     uid = str(uuidlib.uuid4())
@@ -8027,7 +8066,6 @@ def _distributed_btree_shards(
             F.col("_row_address").alias("a"),
         )
         .where(F.col("v").isNotNull())
-        .orderBy("v", "a")
     )
     return _btree_sink(df, d, column, kind, page_rows, shard_rows,
                        manifest.version, binding, vtype)
@@ -8036,74 +8074,46 @@ def _distributed_btree_shards(
 def _btree_sink(df, d: str, column: str, kind: str, page_rows: int,
                 shard_rows: int, dsver: int, binding, vtype: str) -> list:
     """The executor-staged shard SINK shared by the distributed build,
-    extend, and compaction: ``df`` must be (v, a) rows orderBy(v, a) —
-    range partitioning places a contiguous slice of the global run in
-    each task, which serializes its slice into complete shard files
-    (rotating every ``shard_rows``, O(shard) task memory) and ships one
-    metadata row per shard. Returns shard descriptors in global value
-    order."""
-    col_kind, pg_rows, sh_rows = kind, page_rows, shard_rows
-    col_name = column
+    extend, and compaction: ``df`` holds (v, a) rows; shard i is the
+    rows at positions [i * shard_rows, (i + 1) * shard_rows) of the
+    global (v, a) order — the serial writer's cuts, so both arms write
+    the same shard files. One task serializes each shard (O(shard) task
+    memory) and ships one metadata row. Returns shard descriptors in
+    global value order."""
 
-    def write_shards(batches):
+    def write_shard(tbl):
         import uuid as _uuidlib
 
-        import numpy as _np
-        import pandas as _pd
-        from pyspark import TaskContext
+        import pyarrow as _pa
 
         from lance_trino_spark.format import native_io as _nio
         from lance_trino_spark.format.lance_native import _btree_single_blob
 
         _nio.restore_binding(binding)
-        pid = TaskContext.get().partitionId()
-        chunks_v: list = []
-        chunks_a: list = []
-        nbuf = 0
-        metas: list = []
-
-        def flush():
-            vals = [x for c in chunks_v for x in c]
-            addrs = _np.concatenate(chunks_a) if chunks_a else \
-                _np.empty(0, dtype="u8")
-            name = (f"shard-{pid:05d}-{len(metas):04d}-"
-                    f"{_uuidlib.uuid4().hex[:8]}.idx")
-            blob, n_pages = _btree_single_blob(
-                col_name, col_kind, vals, addrs, pg_rows, dsver, ())
-            _nio.write_bytes(os.path.join(d, name), blob)
-            metas.append((pid, len(metas), name, len(addrs), n_pages,
-                          vals[0], vals[-1]))
-            chunks_v.clear()
-            chunks_a.clear()
-
-        for pdf in batches:
-            vs = pdf["v"].tolist()
-            avs = pdf["a"].to_numpy().astype("u8")
-            i = 0
-            while i < len(avs):
-                take = min(len(avs) - i, sh_rows - nbuf)
-                chunks_v.append(vs[i:i + take])
-                chunks_a.append(avs[i:i + take])
-                nbuf += take
-                i += take
-                if nbuf >= sh_rows:
-                    flush()
-                    nbuf = 0
-        if nbuf:
-            flush()
-        yield _pd.DataFrame(
-            metas,
-            columns=["pid", "seq", "name", "rows", "pages", "vmin", "vmax"],
-        )
+        tbl = tbl.sort_by("_ord")
+        seq = tbl.column("_chunk")[0].as_py()
+        vals = tbl.column("v").to_pylist()
+        name = f"shard-{seq:05d}-{_uuidlib.uuid4().hex[:8]}.idx"
+        blob, n_pages = _btree_single_blob(
+            column, kind, vals, tbl.column("a").to_numpy().astype("u8"),
+            page_rows, dsver, ())
+        _nio.write_bytes(os.path.join(d, name), blob)
+        return _pa.table({
+            "seq": [seq], "name": [name], "rows": [len(vals)],
+            "pages": [n_pages], "vmin": [vals[0]], "vmax": [vals[-1]]})
 
     # collect is O(n_shards) metadata rows — one row per shard file, a
     # few dozen bytes each; never row data (collect-audit entry)
-    rows = df.mapInPandas(
-        write_shards,
-        f"pid int, seq int, name string, rows long, pages long, "
-        f"vmin {vtype}, vmax {vtype}",
-    ).collect()
-    rows.sort(key=lambda r: (r["pid"], r["seq"]))
+    rows = (
+        _ordinal_chunks(df, ["v", "a"], shard_rows)
+        .groupBy("_chunk")
+        .applyInArrow(
+            write_shard,
+            f"seq long, name string, rows long, pages long, "
+            f"vmin {vtype}, vmax {vtype}")
+        .collect()
+    )
+    rows.sort(key=lambda r: r["seq"])
     return [
         (r["name"], int(r["rows"]), int(r["pages"]), r["vmin"], r["vmax"])
         for r in rows
@@ -8165,12 +8175,10 @@ def _btree_compact_distributed(root: str, idx: NativeScalarIndex,
     """Executor-parallel btree compaction (the serial heap-merge's
     100-TB shape): the EXISTING runs' shard files re-enter as (value,
     addr) rows via one task per shard file, union the delta scan, and
-    the shared range-partitioned orderBy + _btree_sink writes the fresh
-    single-run sidecar — the driver commits O(n_shards) metadata and
-    never holds a (value, addr) pair. Probe results equal the serial
-    merge (both are the global (value, addr) order; shard CUTS may
-    differ, which probes never observe — the same latitude the
-    distributed build already has)."""
+    the shared _btree_sink writes the fresh single-run sidecar — the
+    driver commits O(n_shards) metadata and never holds a (value, addr)
+    pair. The shards equal the serial merge's: both cut the global
+    (value, addr) order every ``shard_rows`` rows."""
     import uuid as uuidlib
 
     from pyspark.sql import functions as F
@@ -8217,7 +8225,7 @@ def _btree_compact_distributed(root: str, idx: NativeScalarIndex,
                 F.col("_row_address").alias("a"))
         .where(F.col("v").isNotNull())
     )
-    df = old_df.unionByName(delta_df).orderBy("v", "a")
+    df = old_df.unionByName(delta_df)
     uid = str(uuidlib.uuid4())
     d = os.path.join(root, "_indices", uid)
     shards = _btree_sink(df, d, column, kind, page_rows, shard_rows,
@@ -8282,9 +8290,8 @@ def extend_native_scalar_index(
     if idx.shard_names and len(runs) < MAX_INDEX_RUNS:
         # O(delta) path: append the sorted delta as a new run, in place
         d = os.path.dirname(idx.path)
-        if spark is not None and sum(
-                f.physical_rows for f in new_frags
-        ) >= BTREE_DISTRIBUTED_MIN_ROWS:
+        if route("btree", sum(f.physical_rows for f in new_frags),
+                 spark) is not None:
             new_shards = _distributed_btree_shards(
                 root, d, column, idx.kind, manifest, new_frags,
                 page_rows, spark, shard_rows)
@@ -8310,9 +8317,10 @@ def extend_native_scalar_index(
             d, column, idx.kind, shards + list(new_shards), old_fences,
             manifest.version, coverage, runs, replace=True)
         return os.path.basename(d)
-    if (spark is not None and idx.shard_names
-            and sum(f.physical_rows for f in manifest.fragments)
-            >= BTREE_DISTRIBUTED_MIN_ROWS):
+    # compactions route on the full-table sum
+    spark = route(
+        "btree", sum(f.physical_rows for f in manifest.fragments), spark)
+    if spark is not None and idx.shard_names:
         # 100-TB shape: existing shard files re-enter executor-side,
         # union the delta scan, range-sort, sink — the driver never
         # holds a (value, addr) pair (legacy single-file bases take the
@@ -8331,13 +8339,10 @@ def extend_native_scalar_index(
     # below-threshold full-table sum, so the serial sort stays in the
     # documented ~16-48 MB envelope). Legacy single-file BIG bases keep
     # the distributed delta sort.
-    delta_spark = spark if sum(
-        f.physical_rows for f in manifest.fragments
-    ) >= BTREE_DISTRIBUTED_MIN_ROWS else None
     merged = heapq.merge(
         _iter_scalar_index_rows(idx),
         _sorted_scalar_rows(root, manifest, nfield, idx.kind, new_frags,
-                            delta_spark),
+                            spark),
         key=lambda t: (t[0], t[1]),
     )
     return _write_btree_sharded(
@@ -9707,23 +9712,17 @@ def _fts_run_build(root: str, d: str, manifest: NativeManifest,
     doclen_files: list = []
     n_docs = 0
     sum_dl = 0
-    # Adaptive routing (FTS_DISTRIBUTED_MIN_ROWS): below the threshold
-    # the Spark fan-out's fixed cost dwarfs the work — run the serial
-    # twin (bit-identical output) instead. Keep the datasource
-    # registration side effect callers could observe from the
-    # distributed arm (idempotent, milliseconds).
-    if spark is not None and sum(
-            f.physical_rows for f in frags) < FTS_DISTRIBUTED_MIN_ROWS:
+    # Adaptive routing: small builds run the serial twin (bit-identical
+    # output). Both arms keep the datasource registration side effect
+    # callers could observe (idempotent, milliseconds).
+    if spark is not None:
         from ..sources.lance_datasource import register_lance_datasource
 
         register_lance_datasource(spark)
-        spark = None
+    spark = route("fts", sum(f.physical_rows for f in frags), spark)
     if spark is not None:
         from pyspark.sql import functions as F
 
-        from ..sources.lance_datasource import register_lance_datasource
-
-        register_lance_datasource(spark)
         _require_shared_store(root, "the distributed FTS build")
         binding = nio.binding_for(root)
         df = (

@@ -3597,7 +3597,8 @@ def lf47(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the delta encode: fragments-restricted, ADAPTIVE (r14) — a delta
     # this small routes to the serial twin even with spark= (the
     # distributed arm's bit-parity reference; the fan-out is for real
-    # ingest deltas past IVF_DISTRIBUTED_MIN_ROWS, pinned in pytest)
+    # ingest deltas past the "ivf_extend" threshold in format/routing.py,
+    # pinned in pytest)
     extend_native_vector_index(path, "embedding", spark=spark)
     new = latest_native_vector_index(path, "embedding")
 

@@ -50,3 +50,18 @@ def reference_fixtures_stay_pristine():
         f"added={added} removed={removed} — tests must copytree to tmp "
         f"before writing"
     )
+
+
+@pytest.fixture
+def routing_threshold(monkeypatch):
+    """Pin a serial/distributed routing threshold for one test:
+    ``routing_threshold("fts", 0)`` forces the distributed arm, a value
+    above the fixture's row count forces the serial arm. Patches the one
+    table in ``format.routing``; undone at teardown."""
+    from lance_trino_spark.format import routing
+
+    def pin(kind: str, rows: int) -> None:
+        routing.route(kind, 0, None)  # unknown kinds raise
+        monkeypatch.setitem(routing.DISTRIBUTED_MIN_ROWS, kind, rows)
+
+    return pin

@@ -43,6 +43,14 @@ ALLOWLIST: dict[tuple[str, str], str] = {
         "one (file_name, n_rows) report row per executor-staged data "
         "file — ceil(delta_rows / rows_per_fragment) rows, the commit "
         "coordinator's manifest entries (same shape as stage_via_tasks)",
+    ("format/lance_native.py", "_stage_ordered_fragments"):
+        "one (chunk, file_name, n_rows) report row per executor-staged "
+        "data file — ceil(rows / rows_per_fragment) rows, the "
+        "stage_native_fragments shape",
+    ("format/lance_native.py", "_ordinal_chunks"):
+        "one (partition id, row count) row per partition of the sorted "
+        "frame — O(sort partitions) rows; the rows themselves stay in "
+        "the executors' checkpoint",
     ("format/lance_native.py", "native_add_column_backfill"):
         "one (frag_id, file_name) report row per fragment — the commit "
         "coordinator's manifest entries (stage_native_fragments shape); "

@@ -83,7 +83,8 @@ def test_fts_build_probe_matches_bruteforce(tmp_path):
     assert st["terms_found"] == 1 and st["files_opened"] <= idx.n_runs
 
 
-def test_fts_distributed_build_parity(tmp_path, spark, monkeypatch):
+def test_fts_distributed_build_parity(tmp_path, spark, monkeypatch,
+                                      routing_threshold):
     """Executor-staged build: per-term postings identical to the serial
     build; driver never streams rows (toLocalIterator pinned absent)."""
     from pyspark.sql import DataFrame
@@ -93,7 +94,7 @@ def test_fts_distributed_build_parity(tmp_path, spark, monkeypatch):
     _mk(root, docs)
     # force the distributed arm (adaptive routing serial-routes small
     # builds) — this test pins distributed == serial parity
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("fts", 0)
     ln.write_native_fts_index(root, "text", n_buckets=4)
 
     def no_iter(self, *a, **k):
@@ -734,7 +735,8 @@ def test_fts_phrase_refuses_prepositional_postings(tmp_path):
         ln.native_fts_search_fresh(root, "text", '"merge stream"', k=5)
 
 
-def test_fts_distributed_compaction_parity(tmp_path, spark, monkeypatch):
+def test_fts_distributed_compaction_parity(tmp_path, spark, monkeypatch,
+                                           routing_threshold):
     """The distributed compaction (one bucket-merge task per bucket +
     one live-stats task per fragment, r13) produces the SAME index as
     the serial arm — same corpus stats, same per-token postings and
@@ -760,7 +762,7 @@ def test_fts_distributed_compaction_parity(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 2)
     # force the distributed arm (adaptive routing serial-routes small
     # extends) — this test pins distributed == serial compaction parity
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("fts", 0)
     ra = mk(str(tmp_path / "ser.lance"))
     ln.extend_native_fts_index(ra, "text")  # serial compaction
     rb = mk(str(tmp_path / "dist.lance"))
@@ -1169,7 +1171,7 @@ def test_bitmap_index_family(tmp_path, spark):
     assert len(r) == 25
 
 
-def test_label_list_index_family(tmp_path, spark, monkeypatch):
+def test_label_list_index_family(tmp_path, spark, routing_threshold):
     """LABEL_LIST index (r13 — the SDK's tag-column scalar family on
     the inverted-index machinery, label-v1): an array<string> column's
     tags become exact tokens, has-any/has-all lookups answer from
@@ -1217,7 +1219,7 @@ def test_label_list_index_family(tmp_path, spark, monkeypatch):
 
     # distributed build parity (forced: adaptive routing would
     # serial-route this fixture-sized build)
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("fts", 0)
     uid2 = ln.write_native_fts_index(
         root, "tags", n_buckets=4, spark=spark, analyzer="label-v1")
     idx2 = next(i for i in ln.list_native_fts_indices(root)
@@ -1531,7 +1533,7 @@ def test_fts_fuzzy_distance_two(tmp_path, spark, monkeypatch):
     assert (1 << 32) in {a for a, _d, _s in got_f}
 
 
-def test_ngram_index_family(tmp_path, spark, monkeypatch):
+def test_ngram_index_family(tmp_path, spark, monkeypatch, routing_threshold):
     """NGRAM index (r14 — the SDK's fifth scalar family, substring
     search): distinct lowercase trigrams per value, lookup = rarest-
     first postings intersection (a case-insensitive candidate SUPERSET
@@ -1588,7 +1590,7 @@ def test_ngram_index_family(tmp_path, spark, monkeypatch):
 
     # distributed build parity (forced: adaptive routing would
     # serial-route this fixture-sized build)
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("fts", 0)
     uid2 = ln.write_native_fts_index(
         root, "s", n_buckets=4, spark=spark, analyzer="ngram-v1")
     idx2 = next(i for i in ln.list_native_fts_indices(root)

@@ -959,11 +959,10 @@ def test_native_row_address_option(tmp_path, spark):
         spark.read.format("lance").load(root).columns)
 
 
-def test_scalar_index_spark_build_parity(tmp_path, spark, monkeypatch):
+def test_scalar_index_spark_build_parity(tmp_path, spark, routing_threshold):
     """The distributed build path (orderBy over the format('lance') scan,
     O(page) driver memory via toLocalIterator) produces an index whose
     every probe answers identically to the driver-side numpy build."""
-    import lance_trino_spark.format.lance_native as _ln
     from lance_trino_spark.format.lance_native import (
         list_native_scalar_indices,
         scalar_index_lookup,
@@ -971,7 +970,7 @@ def test_scalar_index_spark_build_parity(tmp_path, spark, monkeypatch):
     )
 
     # force the distributed arm on the fixture-sized build
-    monkeypatch.setattr(_ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("btree", 0)
     root, _ = _build_scalar_ds(tmp_path)
     write_native_scalar_index(root, "k", page_rows=512)
     write_native_scalar_index(root, "k", page_rows=512, spark=spark)
@@ -2987,6 +2986,26 @@ def test_native_timestamp_time_travel(spark, tmp_path):
          .option("version", "1").load(root).collect())
 
 
+def test_native_version_as_of(spark, tmp_path):
+    """``versionAsOf`` (the own-format option name) pins a native read
+    exactly like ``version``; giving both refuses."""
+    from lance_trino_spark.format import lance_native as ln
+    from lance_trino_spark.sources.lance_datasource import (
+        register_lance_datasource)
+
+    root = str(tmp_path / "vao.lance")
+    ln.write_native_dataset(root, {"k": [1, 2]})
+    ln.append_native_rows(root, {"k": [3]})
+    register_lance_datasource(spark)
+    v1 = spark.read.format("lance").option("versionAsOf", "1").load(root)
+    assert sorted(r.k for r in v1.collect()) == [1, 2]
+    latest = spark.read.format("lance").load(root)
+    assert sorted(r.k for r in latest.collect()) == [1, 2, 3]
+    with pytest.raises(Exception, match="at most one"):
+        (spark.read.format("lance").option("versionAsOf", "1")
+         .option("version", "2").load(root).collect())
+
+
 def test_native_version_tags(spark, tmp_path):
     """Native tags (`_refs/tags/<name>.json`, the SDK layout): create-once
     pins, tagAsOf reads, vacuum immortality for tag-pinned versions, and
@@ -4686,7 +4705,8 @@ def test_btree_sharded_layout_bounded_memory(tmp_path, monkeypatch):
 
 
 def test_btree_distributed_build_executor_staged(tmp_path, spark,
-                                                 monkeypatch):
+                                                 monkeypatch,
+                                                 routing_threshold):
     """The distributed btree build stages shard files from the orderBy
     tasks themselves — the driver sees only O(n_shards) metadata rows,
     and the r11 toLocalIterator row loop is GONE (monkeypatch-pinned:
@@ -4694,7 +4714,6 @@ def test_btree_distributed_build_executor_staged(tmp_path, spark,
     build."""
     from pyspark.sql import DataFrame
 
-    import lance_trino_spark.format.lance_native as _ln
     from lance_trino_spark.format.lance_native import (
         list_native_scalar_indices,
         scalar_index_lookup,
@@ -4702,7 +4721,7 @@ def test_btree_distributed_build_executor_staged(tmp_path, spark,
     )
 
     # force the distributed arm on the fixture-sized build
-    monkeypatch.setattr(_ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("btree", 0)
     root, total = _build_scalar_ds(tmp_path)
     write_native_scalar_index(root, "k", page_rows=256)  # serial twin
 
@@ -4911,9 +4930,8 @@ def test_prefilter_allowed_set_cap_refuses_loudly(tmp_path, spark,
     assert sum(len(v) for v in allowed.values()) == 2
 
 
-def test_distributed_index_builds_refuse_driver_local_store(tmp_path,
-                                                            spark,
-                                                            monkeypatch):
+def test_distributed_index_builds_refuse_driver_local_store(
+        tmp_path, spark, routing_threshold):
     """Executor-side shard writes on a copy-semantics store double would
     silently vanish (each worker writes its own snapshot) — all three
     distributed index builders refuse with the stage_native_fragments
@@ -4924,8 +4942,8 @@ def test_distributed_index_builds_refuse_driver_local_store(tmp_path,
     import lance_trino_spark.format.lance_native as ln
     # force the distributed arms: adaptive routing would serial-route
     # this tiny fixture and never hit the shared-store guard
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
-    monkeypatch.setattr(ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("fts", 0)
+    routing_threshold("btree", 0)
     from lance_trino_spark.format import native_io as nio
     from lance_trino_spark.format.backend import MemoryObjectStore
 
@@ -4959,7 +4977,7 @@ def test_distributed_index_builds_refuse_driver_local_store(tmp_path,
 
 
 def test_sharded_indexes_on_pyarrow_fs_object_store(tmp_path, spark,
-                                                    monkeypatch):
+                                                    routing_threshold):
     """Round-12 writers on a PROCESS-SHARED object-store root (the
     S3/GCS shape): executor-staged sharded btree build, distributed FTS
     build, O(delta) in-place extends (atomic replace_bytes on the
@@ -4980,8 +4998,8 @@ def test_sharded_indexes_on_pyarrow_fs_object_store(tmp_path, spark,
 
     # force the distributed arms on this small fixture (adaptive
     # routing would serial-route them and skip the remote staging path)
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
-    monkeypatch.setattr(ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("fts", 0)
+    routing_threshold("btree", 0)
     register_lance_datasource(spark)
     base = str(tmp_path / "bucket")
     with warnings.catch_warnings():
@@ -5208,7 +5226,8 @@ def test_sharded_meta_missing_runs_field_is_loud(tmp_path):
     assert sum(len(v) for v in rows.values()) == 1
 
 
-def test_ivf_skewed_cells_sub_sharded(tmp_path, spark, monkeypatch):
+def test_ivf_skewed_cells_sub_sharded(tmp_path, spark, monkeypatch,
+                                      routing_threshold):
     """VERDICT r12 #3: a degenerate centroid distribution (near-dup
     corpora) must not hand one task the whole corpus. The distributed
     build shuffles on (cell, address-BLOCK), so each task writes a
@@ -5225,7 +5244,7 @@ def test_ivf_skewed_cells_sub_sharded(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ln, "IVF_CELL_BLOCK_BITS", 6)
     # force the fan-out: the r14 adaptive gate routes fixture-sized
     # extends to the serial twin otherwise
-    monkeypatch.setattr(ln, "IVF_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("ivf_extend", 0)
     rng = np.random.default_rng(5)
     base = rng.normal(size=(1, 16)).astype(np.float32)
     # adversarial skew: every vector is a near-duplicate of one point
@@ -5295,7 +5314,8 @@ def test_ivf_skewed_cells_sub_sharded(tmp_path, spark, monkeypatch):
     assert ifull.part_lengths  # full rebuild still healthy
 
 
-def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch):
+def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch,
+                                           routing_threshold):
     """IVF compaction's distributed arm (r13): the delta encodes via the
     block-bounded distributed build and every OLD cell body ships
     through a per-file copy task — reassembled partitions are
@@ -5310,7 +5330,7 @@ def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 1)  # every extend compacts
     # force the fan-out: the r14 adaptive gate routes fixture-sized
     # jobs to the serial twin otherwise
-    monkeypatch.setattr(ln, "IVF_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("ivf_extend", 0)
     rng = np.random.default_rng(17)
     vecs = rng.normal(size=(700, 16)).astype(np.float32)
 
@@ -5375,7 +5395,8 @@ def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch):
         assert qi in got  # self-match survives the copied-range fold
 
 
-def test_btree_distributed_compaction_parity(tmp_path, spark, monkeypatch):
+def test_btree_distributed_compaction_parity(tmp_path, spark, monkeypatch,
+                                             routing_threshold):
     """Btree compaction's distributed arm (r13): existing shard files
     re-enter executor-side, union the delta scan, range-sort through
     the shared _btree_sink — probes over the compacted index answer
@@ -5388,7 +5409,7 @@ def test_btree_distributed_compaction_parity(tmp_path, spark, monkeypatch):
 
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 1)  # every extend compacts
     # force the distributed arms on the fixture-sized builds
-    monkeypatch.setattr(ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("btree", 0)
     rng = np.random.default_rng(29)
 
     def mk(root):
@@ -5457,8 +5478,9 @@ def test_btree_distributed_compaction_parity(tmp_path, spark, monkeypatch):
     assert sum(len(ps) for ps in hits.values()) == 1
 
 
-def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch):
-    """r14 (lf47 profile): a delta under IVF_DISTRIBUTED_MIN_ROWS
+def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch,
+                                     routing_threshold):
+    """r14 (lf47 profile): a delta under the "ivf_extend" threshold
     encodes through the serial twin even when spark is given — the
     fan-out pays a DataSource plan + two Python-UDF stages + a shuffle,
     seconds of fixed overhead a milliseconds-sized job must not spend.
@@ -5495,7 +5517,7 @@ def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch):
     idx = ln.latest_native_vector_index(root, "vector")
     assert sum(idx.part_lengths) == 300
     # over the threshold (forced): the distributed arm runs
-    monkeypatch.setattr(ln, "IVF_DISTRIBUTED_MIN_ROWS", 0)
+    routing_threshold("ivf_extend", 0)
     ln.append_native_rows(root, {
         "vec_id": [300], "vector": [vecs[0].tolist()]})
     uid2 = ln.extend_native_vector_index(root, "vector", spark=spark)
