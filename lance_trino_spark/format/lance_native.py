@@ -6487,14 +6487,15 @@ def native_vector_search_fresh(
 # LanceDB ships graph-based vector indexes on datasets (IVF_HNSW_SQ/PQ);
 # this is the repo's flat-HNSW family for real `.lance` datasets,
 # re-using format/vector_index.py's deterministic layered-graph BUILD and
-# beam-search kernels verbatim (`build_hnsw` / `_search_hnsw_graph`,
-# vector_index.py:466/:820 — the own-format plane's proven machinery).
+# beam-search kernels verbatim (`build_hnsw`, `hnsw_graph` and
+# `_search_hnsw_graph` — the own-format plane's proven machinery).
 # Layout is repo-defined (no public fixture carries an SDK HNSW index;
 # the reference delegates vector indexes wholesale to lance-core JNI,
 # plugin/trino-lance/pom.xml:117-119): each ~HNSW_SHARD_ROWS row range of
 # each fragment gets an independent graph serialized as one Arrow-IPC
-# stream file, so build AND search fan out one task per shard and a
-# search unions per-shard top-k (same contract as the own-format HNSW).
+# stream file, so build AND search can fan out one task per shard (the
+# search only past the "hnsw_search" routing threshold) and a search
+# unions per-shard top-k (same contract as the own-format HNSW).
 # Extend is per-FRAGMENT granular: new fragments get new shard files
 # appended into the SAME dir (meta atomically replaced) — old graphs are
 # never touched, the natural LSM of a per-fragment index family.
@@ -6520,7 +6521,7 @@ class NativeHnswIndex:
 
 def _hnsw_graph_to_bytes(row_idx, vecs, levels, neighbors, entry) -> bytes:
     """Serialize one shard's layered graph as an Arrow IPC stream with
-    the EXACT table shape vector_index._search_hnsw_graph consumes
+    the EXACT table shape vector_index._decode_hnsw_graph decodes
     (row_index/vec/level/adj/is_entry) — the search kernel is shared."""
     import io as _io
 
@@ -6797,6 +6798,25 @@ def ensure_native_hnsw_index(root: str, column: str, m: int = 8,
         root, column, m=m, ef_construction=ef_construction, spark=spark)
 
 
+def _hnsw_shard_hits(root: str, graph_path: str, frag, queries, k: int,
+                     ef_search: int, allowed):
+    """One flat-HNSW shard's local top-k per query, as (query, sim,
+    address) triples, and whether its graph was decoded cold. Deleted
+    rows are masked; ``allowed`` (the fragment's prefilter rows, or None)
+    masks the rest. The body of both search arms."""
+    from .vector_index import _search_hnsw_graph, hnsw_graph
+
+    dead = (_deleted_rows_np(root, frag.deletion)
+            if frag.deletion is not None else None)
+    g, cold = hnsw_graph(graph_path, _hnsw_read_graph)
+    per_q = _search_hnsw_graph(g, queries, k, ef_search,
+                               deleted_rows=dead, allowed_rows=allowed)
+    base = int(frag.id) << 32
+    hits = [(qi, float(sim), base | int(ri))
+            for qi, h in enumerate(per_q or ()) for sim, ri in h]
+    return hits, cold
+
+
 def native_hnsw_search(root: str, queries, k: int = 10,
                        ef_search: int = 64,
                        index: NativeHnswIndex | None = None,
@@ -6806,11 +6826,15 @@ def native_hnsw_search(root: str, queries, k: int = 10,
     """Shard-parallel beam search over the sidecar graphs: every shard
     contributes its local top-k (deletion-vector-masked, TRUE-prefilter
     allowed-set-masked — blocked nodes still ROUTE, the own-format
-    contract), the union re-ranks by (cosine desc, address asc). With
-    ``spark``, one task per shard ships only its local top-k — driver
-    traffic O(shards * k). Compacted-away fragments' shards are skipped
-    (stale hits cannot resurrect). Returns per-query
-    [{"neighbors": [addr], "sims": [f32 cosine], ...proof fields}]."""
+    contract), the union re-ranks by (cosine desc, address asc). Graphs
+    come decoded from the process-wide LRU (vector_index.hnsw_graph).
+    With ``spark`` and at least the ``hnsw_search`` routing threshold of
+    indexed rows, one task per shard ships only its local top-k — driver
+    traffic O(shards * k); smaller indexes search on the driver.
+    Compacted-away fragments' shards are skipped (stale hits cannot
+    resurrect). Returns per-query [{"neighbors": [addr], "sims": [f32
+    cosine], ...proof fields}]; ``graphs_decoded`` counts the graph
+    files this call decoded cold (the rest were cache hits)."""
     import numpy as np
 
     live = manifest if manifest is not None else read_native_manifest(root)
@@ -6828,22 +6852,12 @@ def native_hnsw_search(root: str, queries, k: int = 10,
     d = os.path.dirname(idx.path)
     shards = [s for s in idx.shards if s[0] in frag_by_id]
     skipped = len(idx.shards) - len(shards)
-
-    def shard_hits(fid, name):
-        """One shard's per-query local top-k (the task body)."""
-        from .vector_index import _search_hnsw_graph
-
-        frag = frag_by_id[fid]
-        dead = (set(_deleted_rows_np(root, frag.deletion).tolist())
-                if frag.deletion is not None else None)
-        allow = (set(allowed_by_frag.get(fid, []))
-                 if allowed_by_frag is not None else None)
-        t = _hnsw_read_graph(os.path.join(d, name))
-        return _search_hnsw_graph(
-            t, q, k, ef_search, deletion_set=dead, allowed_set=allow)
+    spark = route("hnsw_search", sum(int(s[4]) for s in shards), spark)
+    no_rows = np.empty(0, dtype=np.int64)
 
     cand: list[list] = [[] for _ in range(q.shape[0])]
-    if spark is not None and len(shards) > 1:
+    decoded = 0
+    if spark is not None:
         _require_shared_store(root, "the distributed HNSW search")
         binding = nio.binding_for(root)
         version = live.version
@@ -6852,7 +6866,7 @@ def native_hnsw_search(root: str, queries, k: int = 10,
         spec_df = spark.createDataFrame(
             [(i, int(s[0]), s[3]) for i, s in enumerate(shards)],
             "i int, fid int, name string",
-        ).repartition(min(len(shards), 256), "i")
+        ).repartition(max(1, min(len(shards), 256)), "i")
 
         def kernel(batches):
             import os as _os
@@ -6862,9 +6876,6 @@ def native_hnsw_search(root: str, queries, k: int = 10,
 
             from lance_trino_spark.format import native_io as _nio
             from lance_trino_spark.format import lance_native as _ln
-            from lance_trino_spark.format.vector_index import (
-                _search_hnsw_graph,
-            )
 
             _nio.restore_binding(binding)
             mf = _ln.read_native_manifest(root, version=version)
@@ -6873,47 +6884,35 @@ def native_hnsw_search(root: str, queries, k: int = 10,
                   if pf is not None else None)
             qv = _np.asarray(q_list, dtype=_np.float32)
             for pdf in batches:
-                for _, r in pdf.iterrows():
-                    fid = int(r["fid"])
-                    frag = fb[fid]
-                    dead = (set(_ln._deleted_rows_np(
-                        root, frag.deletion).tolist())
-                        if frag.deletion is not None else None)
-                    allow = (set(af.get(fid, []))
-                             if af is not None else None)
-                    t = _ln._hnsw_read_graph(
-                        _os.path.join(d, r["name"]))
-                    per_q = _search_hnsw_graph(
-                        t, qv, k, ef_search, deletion_set=dead,
-                        allowed_set=allow)
-                    if per_q is None:  # empty shard graph
-                        continue
-                    rows_qi, rows_sim, rows_addr = [], [], []
-                    for qi, hits in enumerate(per_q):
-                        for sim, ri in hits:
-                            rows_qi.append(qi)
-                            rows_sim.append(float(sim))
-                            rows_addr.append((fid << 32) | int(ri))
-                    if rows_qi:
-                        yield _pd.DataFrame({
-                            "qi": rows_qi, "sim": rows_sim,
-                            "addr": rows_addr})
+                for fid, name in zip(pdf["fid"], pdf["name"]):
+                    hits, cold = _ln._hnsw_shard_hits(
+                        root, _os.path.join(d, name), fb[int(fid)], qv, k,
+                        ef_search,
+                        af.get(int(fid), no_rows) if af is not None
+                        else None)
+                    # qi = -1 carries the shard's cold-decode flag
+                    hits.append((-1, 0.0, int(cold)))
+                    yield _pd.DataFrame(hits, columns=["qi", "sim", "addr"])
 
         # local top-k per (shard, query): O(shards * queries * k) rows
         for r in (spec_df.mapInPandas(
                 kernel, "qi int, sim double, addr long")
-                .limit(len(shards) * int(q.shape[0]) * k).collect()):
-            cand[int(r["qi"])].append((float(r["sim"]),
-                                       int(r["addr"])))
+                .limit(len(shards) * (int(q.shape[0]) * k + 1)).collect()):
+            if r["qi"] < 0:
+                decoded += int(r["addr"])
+            else:
+                cand[int(r["qi"])].append((float(r["sim"]),
+                                           int(r["addr"])))
     else:
         for fid, _s, _ns, name, _rows in shards:
-            per_q = shard_hits(fid, name)
-            if per_q is None:  # empty shard graph
-                continue
-            for qi, hits in enumerate(per_q):
-                for sim, ri in hits:
-                    cand[qi].append(
-                        (float(sim), (int(fid) << 32) | int(ri)))
+            hits, cold = _hnsw_shard_hits(
+                root, os.path.join(d, name), frag_by_id[fid], q, k,
+                ef_search,
+                allowed_by_frag.get(fid, no_rows)
+                if allowed_by_frag is not None else None)
+            decoded += cold
+            for qi, sim, addr in hits:
+                cand[qi].append((sim, addr))
     results = []
     for qi in range(q.shape[0]):
         best = sorted(cand[qi], key=lambda t: (-t[0], t[1]))[:k]
@@ -6922,6 +6921,7 @@ def native_hnsw_search(root: str, queries, k: int = 10,
             "sims": [s for s, _a in best],
             "shards_searched": len(shards),
             "shards_skipped_stale": skipped,
+            "graphs_decoded": decoded,
         })
     return results
 
@@ -7404,10 +7404,11 @@ def native_ivf_hnsw_search(root: str, queries, k: int = 10,
     live-fragment post-filter (``stale_dropped`` reported). At
     nprobe=n_cells and ef_search >= cell size results are EXACTLY the
     brute-force cosine top-k (pinned). Per-query proof fields:
-    cells_probed / graphs_searched / stale_dropped."""
+    cells_probed / graphs_searched / graphs_decoded (cold decodes; the
+    rest came from the graph LRU) / stale_dropped."""
     import numpy as np
 
-    from .vector_index import _search_hnsw_graph
+    from .vector_index import _search_hnsw_graph, hnsw_graph
 
     live = manifest if manifest is not None else read_native_manifest(root)
     idx = index if index is not None else latest_native_ivf_hnsw_index(
@@ -7424,39 +7425,35 @@ def native_ivf_hnsw_search(root: str, queries, k: int = 10,
     probe = np.argsort(-(qn @ cent.T), axis=1)[:, :nprobe]
 
     live_ids = {f.id for f in live.fragments}
-    dead: set = set()
-    for frag in live.fragments:
-        if frag.deletion is not None:
-            base = int(frag.id) << 32
-            dead.update(
-                base | int(p)
-                for p in _deleted_rows_np(root, frag.deletion))
+    dead = np.concatenate([np.empty(0, dtype=np.int64)] + [
+        (int(frag.id) << 32) | _deleted_rows_np(root, frag.deletion)
+        for frag in live.fragments if frag.deletion is not None])
     allowed_by_frag = (
         _native_prefilter_rows(root, live, prefilter)
         if prefilter is not None else None)
-    allow: set | None = None
+    allow = None
     if allowed_by_frag is not None:
-        allow = {
-            (int(fid) << 32) | int(p)
-            for fid, rows in allowed_by_frag.items() for p in rows}
+        allow = np.concatenate([np.empty(0, dtype=np.int64)] + [
+            (int(fid) << 32) | np.asarray(rows, dtype=np.int64)
+            for fid, rows in allowed_by_frag.items()])
 
     d = os.path.dirname(idx.path)
-    # group queries by probed cell so each graph loads & searches once
+    # group queries by probed cell so each graph is searched once
     by_cell: dict[int, list] = {}
     for qi in range(q.shape[0]):
         for c in probe[qi]:
             by_cell.setdefault(int(c), []).append(qi)
     cand: list[list] = [[] for _ in range(q.shape[0])]
     stale = [0] * q.shape[0]
-    graphs_searched = 0
+    graphs_searched = graphs_decoded = 0
     for c, qis in sorted(by_cell.items()):
         for name, _rows in idx.cells[c]:
-            t = _hnsw_read_graph(os.path.join(d, name))
+            g, cold = hnsw_graph(os.path.join(d, name), _hnsw_read_graph)
             graphs_searched += 1
+            graphs_decoded += cold
             per_q = _search_hnsw_graph(
-                t, q[qis], k, ef_search,
-                deletion_set=dead if dead else None,
-                allowed_set=allow)
+                g, q[qis], k, ef_search, deleted_rows=dead,
+                allowed_rows=allow)
             if per_q is None:
                 continue
             for j, hits in enumerate(per_q):
@@ -7475,6 +7472,7 @@ def native_ivf_hnsw_search(root: str, queries, k: int = 10,
             "sims": [s for s, _a in best],
             "cells_probed": int(nprobe),
             "graphs_searched": graphs_searched,
+            "graphs_decoded": graphs_decoded,
             "stale_dropped": stale[qi],
         })
     return results

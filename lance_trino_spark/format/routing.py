@@ -1,8 +1,10 @@
-"""Serial/distributed routing of index builds, extends and compactions.
+"""Serial/distributed routing of index builds, extends, compactions and
+the flat native HNSW search.
 
 Every index-maintenance job in this package has two arms that write the
-same files: a serial arm that runs on the driver and a distributed arm
-that fans out across Spark tasks. A fan-out pays a fixed cost (a
+same files (the HNSW search: return the same hits): a serial arm that
+runs on the driver and a distributed arm that fans out across Spark
+tasks. A fan-out pays a fixed cost (a
 DataFrame plan, a Python-UDF stage, often a shuffle: about a second or
 more on a local session) before any row is touched, so small jobs take
 the serial arm even when a ``spark`` session is given. That one policy
@@ -19,8 +21,11 @@ Fan-outs that are NOT routed by row count stay with their callers:
 - Z-order compaction (``native_compact`` with a list ``sort_by``): the
   Morton interleave is a Spark expression the serial arm does not
   reproduce;
-- the native HNSW and IVF_HNSW builds and searches: routed by shard
-  count (one shard runs on the driver);
+- the native HNSW and IVF_HNSW builds: routed by shard count (one
+  shard runs on the driver);
+- the native IVF_HNSW search: always on the driver; it searches only
+  the probed cells' small run graphs, decoded once per process
+  (``vector_index.hnsw_graph``). The flat HNSW search is in the table;
 - the prefilter and exact-scan fan-outs (``_native_prefilter_rows``,
   the fresh-search exact arms), FTS scoring and fuzzy expansion, and FTS
   compaction: gated on whether ``spark`` is given or on a size cap.
@@ -64,6 +69,14 @@ DISTRIBUTED_MIN_ROWS: dict[str, int] = {
     # Own-format scalar sidecars: one numpy sort per fragment, so the
     # crossover matches the btree family's.
     "sindex": 1_048_576,
+    # Flat native HNSW search, by indexed rows over the searched shards
+    # (10k rows of 64-dim vectors in two 5k-row shards, local[4]: the
+    # fan-out costs 1.1-1.6 s; the serial arm takes 22 ms with the
+    # graphs decoded cold, 2.2 us/row, and 1.6 ms warm from the graph
+    # LRU, so the cold crossover is ~600k rows). Capped below the
+    # ~450k 64-dim rows that fit vector_index.HNSW_CACHE_BYTES (~600 B
+    # per decoded node): past that, serial searches decode cold again.
+    "hnsw_search": 262_144,
 }
 
 

@@ -40,9 +40,13 @@ Scale shape:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import threading
 import uuid
+from collections import OrderedDict
+from dataclasses import dataclass
 
 from .index import INDICES_DIR
 
@@ -817,61 +821,207 @@ def _build_hnsw_shard(
     return rel
 
 
-def _search_hnsw_graph(
-    t, query_vecs, k: int, ef_search: int,
-    deletion_set=None, allowed_set=None,
-):
-    """Beam-search one shard graph table for every query; returns a list
-    (per query) of up to k (sim, fragment_row_index) hits.
+# Decoded shard graphs are served from one process-wide LRU (A18's index
+# cache, the graph half; the manifest half is
+# lance_native._parse_manifest_cached). Graph files are written once
+# under unique names (native) or replaced atomically (own-format), so the
+# stat identity (path, inode, mtime_ns, size) is sound: a DROP + re-CREATE
+# at the same path gets a new inode and misses. Remote paths skip the
+# cache (no cheap stat identity). The decoded form is numpy arrays only
+# (~0.6 KB per 64-dim node), so the budget bounds real memory; deletion
+# and prefilter masks are per call and never cached.
+HNSW_CACHE_BYTES = 256 << 20
 
-    Node ids are positions in the (non-null) indexed subset; the sidecar's
-    row_index column maps node id -> ORIGINAL fragment row index.
-    deletion_set / allowed_set speak in fragment row indices. The RESULT
-    beam counts only ALLOWED candidates (blocked nodes still route) —
-    standard filtered-HNSW — and when the allowed set is small an exact
-    scan over it replaces routing entirely (recall over the filtered
-    population then EQUALS unfiltered recall)."""
+
+@dataclass(frozen=True, eq=False)
+class HnswGraph:
+    """One decoded shard graph; every array is read-only. Node ids are
+    positions in the (non-null) indexed subset."""
+    row_index: "np.ndarray"  # int64 (n,): node -> fragment row (or address)
+    raw: "np.ndarray"        # float32 (n, d): stored vectors
+    xn: "np.ndarray"         # float32 (n, d): unit-normalized vectors
+    levels: "np.ndarray"     # int32 (n,): top level of each node
+    entry: int
+    indptr: tuple            # per level: int32 (n + 1,) CSR offsets
+    indices: tuple           # per level: int32 neighbor ids, in file order
+    dup_keys: "np.ndarray"   # uint64 (n,): sorted hashes of raw row bytes
+    dup_nodes: "np.ndarray"  # int64 (n,): node of each dup_keys entry
+
+    @property
+    def n(self) -> int:
+        return len(self.row_index)
+
+    @property
+    def nbytes(self) -> int:
+        return sum(a.nbytes for a in (
+            self.row_index, self.raw, self.xn, self.levels, self.dup_keys,
+            self.dup_nodes, *self.indptr, *self.indices))
+
+    def duplicates_of(self, v) -> list[int]:
+        """Nodes whose stored float32 bytes equal ``v``'s, ascending."""
+        import numpy as np
+
+        bits = np.ascontiguousarray(v, dtype=np.float32).view(np.uint32)
+        key = _row_keys(bits[None, :])[0]
+        lo, hi = (int(np.searchsorted(self.dup_keys, key, side="left")),
+                  int(np.searchsorted(self.dup_keys, key, side="right")))
+        if lo == hi:
+            return []
+        cand = self.dup_nodes[lo:hi]  # ascending: the sort was stable
+        same = (self.raw[cand].view(np.uint32) == bits).all(axis=1)
+        return cand[same].tolist()
+
+
+@functools.lru_cache(maxsize=None)
+def _key_mult(dim: int):
+    import numpy as np
+
+    mult = np.random.default_rng(0x45A3).integers(
+        1, 1 << 63, size=dim, dtype=np.uint64) | np.uint64(1)
+    mult.flags.writeable = False
+    return mult
+
+
+def _row_keys(bits):
+    """uint64 hash of each row of a (n, d) uint32 bit matrix (equal
+    bytes, equal key; a collision only costs a byte compare)."""
+    import numpy as np
+
+    return (bits.astype(np.uint64) * _key_mult(bits.shape[1])).sum(
+        axis=1, dtype=np.uint64)
+
+
+def _decode_hnsw_graph(t) -> HnswGraph:
+    """Vectorized decode of one graph table (row_index / vec / level /
+    adj "lvl:nb,..." / is_entry). Every array is copied out of the Arrow
+    buffers (a view would pin the whole file) and frozen."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = t.num_rows
+    flat = t.column("vec").combine_chunks().flatten()
+    dim = len(flat) // n if n else 0
+    raw = flat.to_numpy(zero_copy_only=False).astype(
+        np.float32).reshape(n, dim)
+    norms = np.linalg.norm(raw, axis=1)
+    norms[norms == 0] = 1.0
+    xn = raw / norms[:, None]
+    levels = np.array(t.column("level").to_numpy(), dtype=np.int32)
+    entry = (int(np.flatnonzero(t.column("is_entry").to_numpy())[0])
+             if n else -1)
+    parts = pc.split_pattern(t.column("adj").combine_chunks(), ",")
+    edges = pc.list_flatten(parts)
+    owner = pc.list_parent_indices(parts).to_numpy()
+    real = pc.not_equal(edges, "")  # an edgeless node splits to [""]
+    pair = pc.split_pattern(edges.filter(real), ":")
+    owner = owner[real.to_numpy(zero_copy_only=False)]
+    lvl = pc.list_element(pair, 0).cast(pa.int32()).to_numpy()
+    nbr = pc.list_element(pair, 1).cast(pa.int32()).to_numpy()
+    top = max(int(levels.max()) if n else 0,
+              int(lvl.max()) if len(lvl) else 0)
+    indptr, indices = [], []
+    for level in range(top + 1):
+        on = lvl == level
+        counts = np.bincount(owner[on], minlength=n)
+        indptr.append(np.concatenate([[0], np.cumsum(counts)]).astype(
+            np.int32))
+        indices.append(nbr[on].astype(np.int32))
+    keys = _row_keys(raw.view(np.uint32))
+    order = np.argsort(keys, kind="stable")
+    g = HnswGraph(
+        row_index=np.array(t.column("row_index").to_numpy(), np.int64),
+        raw=raw, xn=xn, levels=levels, entry=entry,
+        indptr=tuple(indptr), indices=tuple(indices),
+        dup_keys=keys[order], dup_nodes=order.astype(np.int64))
+    for a in (g.row_index, g.raw, g.xn, g.levels, g.dup_keys, g.dup_nodes,
+              *g.indptr, *g.indices):
+        a.flags.writeable = False
+    return g
+
+
+class _GraphLRU:
+    """Decoded graphs keyed by file stat identity, least recently used
+    evicted first; the summed ``nbytes`` never exceeds ``budget`` (a
+    graph larger than the whole budget is decoded but not kept)."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.nbytes = 0
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def load(self, path: str, read) -> tuple[HnswGraph, bool]:
+        """(decoded graph of the file at ``path``, whether it was decoded
+        cold); ``read(path)`` returns the graph's Arrow table."""
+        from .native_io import is_remote
+
+        try:
+            st = None if is_remote(path) else os.stat(path)
+        except OSError:
+            st = None
+        if st is None:
+            return _decode_hnsw_graph(read(path)), True
+        key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+        with self._lock:
+            g = self._entries.get(key)
+            if g is not None:
+                self._entries.move_to_end(key)
+                return g, False
+        g = _decode_hnsw_graph(read(path))
+        with self._lock:
+            if key not in self._entries and g.nbytes <= self.budget:
+                while self.nbytes + g.nbytes > self.budget:
+                    _, old = self._entries.popitem(last=False)
+                    self.nbytes -= old.nbytes
+                self._entries[key] = g
+                self.nbytes += g.nbytes
+        return g, True
+
+
+_HNSW_GRAPHS = _GraphLRU(HNSW_CACHE_BYTES)
+
+
+def hnsw_graph(path: str, read) -> tuple[HnswGraph, bool]:
+    """The decoded graph at ``path`` from the process-wide LRU, and
+    whether this call decoded it cold."""
+    return _HNSW_GRAPHS.load(path, read)
+
+
+def _search_hnsw_graph(
+    g: HnswGraph, query_vecs, k: int, ef_search: int,
+    deleted_rows=None, allowed_rows=None,
+):
+    """Beam-search one decoded shard graph for every query; returns a
+    list (per query) of up to k (sim, row_index) hits, or None for an
+    empty graph.
+
+    deleted_rows / allowed_rows (int64 arrays, or None for no mask) speak
+    in the graph's row_index values. The RESULT beam counts only ALLOWED
+    candidates (blocked nodes still route) — standard filtered-HNSW — and
+    when the allowed set is small an exact scan over it replaces routing
+    entirely (recall over the filtered population then EQUALS unfiltered
+    recall)."""
     import heapq
 
     import numpy as np
 
-    n = len(t)
+    n = g.n
     if n == 0:
         return None
-    xn = np.array([np.asarray(v, np.float32) for v in t.column("vec").to_pylist()])
-    # Exact-duplicate short-circuit (fingerprint join): graph ROUTING can
-    # strand a byte-identical twin on duplicate-dense corpora — an
-    # inherent HNSW failure mode (the sf1 value sweep measured 1-2/15
-    # self-match misses even at ef_search=256). Byte equality needs no
-    # routing: hash every node's raw float32 bytes once per shard load
-    # (O(n), amortized over the query batch) and probe per query; hits
-    # are force-merged into the beam result below.
-    dup_map: dict[bytes, list[int]] = {}
-    for i in range(n):
-        dup_map.setdefault(xn[i].tobytes(), []).append(i)
-    norms = np.linalg.norm(xn, axis=1)
-    norms[norms == 0] = 1.0
-    xn = xn / norms[:, None]
-    levels = t.column("level").to_numpy()
-    entry = int(np.flatnonzero(t.column("is_entry").to_numpy())[0])
-    neighbors: dict[tuple[int, int], list[int]] = {}
-    for i, s in enumerate(t.column("adj").to_pylist()):
-        if not s:
-            continue
-        for part in s.split(","):
-            lvl, nb = part.split(":")
-            neighbors.setdefault((int(lvl), i), []).append(int(nb))
-    ridx = t.column("row_index").to_numpy()
-    blocked = set()
-    if deletion_set:
-        blocked |= {i for i in range(n) if int(ridx[i]) in deletion_set}
-    if allowed_set is not None:
-        blocked |= {i for i in range(n) if int(ridx[i]) not in allowed_set}
-    allowed_nodes = (
-        np.array([i for i in range(n) if i not in blocked], dtype=np.int64)
-        if blocked
-        else np.arange(n, dtype=np.int64)
-    )
+    xn, ridx = g.xn, g.row_index
+    blocked = None
+    if deleted_rows is not None and len(deleted_rows):
+        blocked = np.isin(ridx, np.asarray(deleted_rows, dtype=np.int64))
+    if allowed_rows is not None:
+        outside = ~np.isin(ridx, np.asarray(allowed_rows, dtype=np.int64))
+        blocked = outside if blocked is None else blocked | outside
+    if blocked is not None and blocked.any():
+        allowed_nodes = np.flatnonzero(~blocked)
+        blk = blocked.tolist()
+    else:
+        allowed_nodes = np.arange(n, dtype=np.int64)
+        blk = None
     if len(allowed_nodes) == 0:
         return [[] for _ in range(len(query_vecs))]
     qm = np.asarray(query_vecs, dtype=np.float64)
@@ -881,6 +1031,8 @@ def _search_hnsw_graph(
     # Selective-filter fallback: when few nodes remain allowed, one
     # vectorized matmul over them beats graph routing AND is exact.
     exact_fallback = len(allowed_nodes) <= max(4 * ef_search, 4 * k)
+    top = int(g.levels.max())
+    ptr0, ind0 = g.indptr[0], g.indices[0]
     for qi in range(len(qm)):
         q = (qm[qi] / qnorm[qi]).astype(np.float32)
         if exact_fallback:
@@ -890,12 +1042,13 @@ def _search_hnsw_graph(
                 [(float(sims[j]), int(ridx[allowed_nodes[j]])) for j in order]
             )
             continue
-        ep = entry
-        for lvl in range(int(levels.max()), 0, -1):
+        ep = g.entry
+        for lvl in range(top, 0, -1):
+            ptr, ind = g.indptr[lvl], g.indices[lvl]
             improved = True
             while improved:
                 improved = False
-                for nb in neighbors.get((lvl, ep), ()):
+                for nb in ind[ptr[ep]:ptr[ep + 1]].tolist():
                     if float(xn[nb] @ q) > float(xn[ep] @ q):
                         ep, improved = nb, True
         # level-0 beam: `best` holds ALLOWED candidates only (the result
@@ -905,25 +1058,31 @@ def _search_hnsw_graph(
         visited = {ep}
         ep_sim = float(xn[ep] @ q)
         cand = [(-ep_sim, ep)]
-        best = [(ep_sim, ep)] if ep not in blocked else []
+        best = [(ep_sim, ep)] if blk is None or not blk[ep] else []
         while cand:
             negs, c = heapq.heappop(cand)
             if len(best) >= ef_search and -negs < best[-1][0]:
                 break
-            for nb in neighbors.get((0, c), ()):
+            for nb in ind0[ptr0[c]:ptr0[c + 1]].tolist():
                 if nb in visited:
                     continue
                 visited.add(nb)
                 sim = float(xn[nb] @ q)
                 if len(best) < ef_search or sim > best[-1][0]:
                     heapq.heappush(cand, (-sim, nb))
-                    if nb not in blocked:
+                    if blk is None or not blk[nb]:
                         best.append((sim, nb))
                         best.sort(key=lambda x: (-x[0], x[1]))
                         del best[ef_search:]
-        dups = [i for i in dup_map.get(
-            np.asarray(qm[qi], dtype=np.float32).tobytes(), ())
-            if i not in blocked]
+        # Exact-duplicate short-circuit: graph ROUTING can strand a
+        # byte-identical twin on duplicate-dense corpora — an inherent
+        # HNSW failure mode (the sf1 value sweep measured 1-2/15
+        # self-match misses even at ef_search=256). Byte equality needs
+        # no routing: every node's raw float32 bytes are hashed once per
+        # decoded file (HnswGraph.dup_keys, cached with the graph), each
+        # query probes it, and hits are force-merged into the beam result.
+        dups = [i for i in g.duplicates_of(qm[qi])
+                if blk is None or not blk[i]]
         if dups:
             seen = {i for _, i in best}
             best.extend(
@@ -963,21 +1122,13 @@ def search_fragment_hnsw(
         return [], 0
     import pyarrow.parquet as pq
 
-    deletion_set = (
-        {int(r) for r in deletion_indices}
-        if deletion_indices is not None else None
-    )
-    allowed_set = (
-        {int(r) for r in allowed_indices}
-        if allowed_indices is not None else None
-    )
     n_total = 0
     per_query = [[] for _ in range(len(query_ids))]
     for sp in shard_paths:
-        t = pq.read_table(sp)
-        n_total += len(t)
+        g, _cold = hnsw_graph(sp, pq.read_table)
+        n_total += g.n
         hits = _search_hnsw_graph(
-            t, query_vecs, k, ef_search, deletion_set, allowed_set
+            g, query_vecs, k, ef_search, deletion_indices, allowed_indices
         )
         if hits is None:
             continue

@@ -5530,7 +5530,7 @@ def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch,
     assert (5 in [a & 0xFFFFFFFF for a in r["neighbors"]])
 
 
-def test_native_hnsw_sidecar_lifecycle(tmp_path, spark):
+def test_native_hnsw_sidecar_lifecycle(tmp_path, spark, routing_threshold):
     """r14 (VERDICT r13 missing #3): flat-HNSW as a native-dataset
     sidecar family next to IVF — build (serial == distributed graphs,
     build_hnsw is deterministic), exact parity at ef=all vs brute-force
@@ -5579,12 +5579,6 @@ def test_native_hnsw_sidecar_lifecycle(tmp_path, spark):
         order = sorted(range(300), key=lambda i: (-sims[i], i))[:6]
         assert res[qi]["neighbors"] == order
 
-    # distributed search == serial search
-    res_d = ln.native_hnsw_search(root2, q, k=6, ef_search=300,
-                                  index=i2, spark=spark)
-    assert [r["neighbors"] for r in res_d] == [
-        r["neighbors"] for r in res]
-
     # fresh union before maintenance; per-fragment extend after
     ln.append_native_rows(root, {
         "vec_id": list(range(300, 400)),
@@ -5608,6 +5602,18 @@ def test_native_hnsw_sidecar_lifecycle(tmp_path, spark):
     r3 = ln.native_hnsw_search(root, vecs[[350]], k=3, ef_search=400,
                                column="vector")
     assert (1 << 32) | 50 not in r3[0]["neighbors"]
+    # distributed search == serial search, over two shards (one per
+    # fragment) with a deletion vector to mask
+    assert len(ln.latest_native_hnsw_index(root, "vector").shards) == 2
+    qs = np.concatenate([vecs[[350, 7]], rng.normal(size=(3, 12))])
+    serial = ln.native_hnsw_search(root, qs, k=6, ef_search=32,
+                                   column="vector", spark=spark)
+    routing_threshold("hnsw_search", 0)
+    res_d = ln.native_hnsw_search(root, qs, k=6, ef_search=32,
+                                  column="vector", spark=spark)
+    assert [(r["neighbors"], r["sims"]) for r in res_d] == [
+        (r["neighbors"], r["sims"]) for r in serial]
+    assert all(len(r["neighbors"]) == 6 for r in serial)
     r4 = ln.native_hnsw_search(root, vecs[[7]], k=5, ef_search=400,
                                column="vector",
                                prefilter=("vec_id", [7, 9]))
@@ -5639,7 +5645,8 @@ def test_native_hnsw_sidecar_lifecycle(tmp_path, spark):
     assert r5[0]["neighbors"][0] == 7
 
 
-def test_native_hnsw_on_pyarrow_fs_object_store(tmp_path, spark):
+def test_native_hnsw_on_pyarrow_fs_object_store(tmp_path, spark,
+                                                routing_threshold):
     """r14: the HNSW sidecar family on a PROCESS-SHARED object-store
     root (the S3/GCS shape) — distributed shard-graph build, Arrow-IPC
     graph reads via the store, per-fragment extend with the atomic
@@ -5670,6 +5677,7 @@ def test_native_hnsw_on_pyarrow_fs_object_store(tmp_path, spark):
         uid = ln.write_native_hnsw_index(root, "vector", spark=spark)
         idx = ln.latest_native_hnsw_index(root, "vector")
         q = vecs[[5, 99]]
+        routing_threshold("hnsw_search", 0)
         res = ln.native_hnsw_search(root, q, k=4, ef_search=300,
                                     index=idx, spark=spark)
         assert res[0]["neighbors"][0] == 5

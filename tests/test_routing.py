@@ -1,6 +1,7 @@
 """Serial/distributed routing (format/routing.py): every kind in the
-threshold table writes the same files on both arms, and the arm a test
-forces is the arm that actually ran (counted in Spark jobs)."""
+threshold table writes the same files (a search: returns the same hits)
+on both arms, and the arm a test forces is the arm that actually ran
+(counted in Spark jobs)."""
 
 from __future__ import annotations
 
@@ -80,8 +81,9 @@ def _vectors(n: int, dim: int = 8, seed: int = 7) -> list:
 
 
 # Each case: build(spark, root) -> row count routed, call(spark, root),
-# snapshot(root). The fixture is built once and copied per arm, so data
-# file names (which own-format sidecar names embed) match on both arms.
+# snapshot(root), or None to compare what the call returned. The fixture
+# is built once and copied per arm, so data file names (which own-format
+# sidecar names embed) match on both arms.
 
 def _native_ivf_build(spark, root):
     vecs = _vectors(400)
@@ -120,6 +122,24 @@ def _native_compact_build(spark, root):
     return 280
 
 
+def _native_hnsw_build(spark, root):
+    vecs = _vectors(400)
+    ln.write_native_dataset(root, {
+        "vec_id": list(range(200)), "vector": vecs[:200]})
+    ln.append_native_rows(root, {
+        "vec_id": list(range(200, 400)), "vector": vecs[200:]})
+    ln.write_native_hnsw_index(root, "vector", m=4, ef_construction=16)
+    ln.native_delete(root, {0: [3, 150], 1: [10]})
+    return 400
+
+
+def _native_hnsw_search(spark, root):
+    assert ln.latest_native_hnsw_index(root, "vector").n_shards == 2
+    res = ln.native_hnsw_search(root, _vectors(6, seed=9), k=5,
+                                ef_search=16, column="vector", spark=spark)
+    return {f"q{i}": (r["neighbors"], r["sims"]) for i, r in enumerate(res)}
+
+
 def _own_build(spark, root):
     from lance_trino_spark.format.dataset import LanceDataset
 
@@ -150,6 +170,7 @@ CASES = {
             root, "text", n_buckets=4, spark=spark),
         _sidecars,
     ),
+    "hnsw_search": (_native_hnsw_build, _native_hnsw_search, None),
     "btree": (
         _native_btree_build,
         lambda spark, root: ln.write_native_scalar_index(
@@ -184,17 +205,18 @@ CASES = {
 }
 
 
-def _jobs_run_by(spark, fn) -> list:
-    """Ids of the Spark jobs ``fn`` launched (its own job group)."""
+def _jobs_run_by(spark, fn) -> tuple[list, object]:
+    """Ids of the Spark jobs ``fn`` launched (its own job group), and
+    what it returned."""
     sc = spark.sparkContext
     group = f"routing-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        fn()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 @pytest.mark.parametrize("kind", sorted(routing.DISTRIBUTED_MIN_ROWS))
@@ -208,12 +230,12 @@ def test_both_arms_write_identical_sidecars(kind, tmp_path, spark,
         root = str(tmp_path / arm)
         shutil.copytree(src, root)
         routing_threshold(kind, threshold)
-        jobs = _jobs_run_by(spark, lambda: call(spark, root))
+        jobs, out = _jobs_run_by(spark, lambda: call(spark, root))
         if arm == "distributed":
             assert jobs, f"{kind}: forced distributed arm launched no job"
         else:
             assert not jobs, f"{kind}: forced serial arm launched {jobs}"
-        got[arm] = snapshot(root)
+        got[arm] = snapshot(root) if snapshot else out
     assert got["serial"], f"{kind}: nothing written"
     assert sorted(got["serial"]) == sorted(got["distributed"])
     for name in got["serial"]:
