@@ -56,6 +56,7 @@ from dataclasses import dataclass, field
 
 from . import native_io as nio
 from .routing import route
+from .statcache import StatLRU
 
 
 class LanceNativeError(RuntimeError):
@@ -291,30 +292,23 @@ def parse_manifest(raw: bytes) -> NativeManifest:
     return NativeManifest(fields, fragments, version, ts, txn, mfid)
 
 
-# Parsed-manifest LRU (A18 on the native plane): manifest files are
-# CREATE-ONCE (published via hard link / conditional PUT, never
-# rewritten), so (inode, mtime_ns, size) is a sound identity — a
-# DROP + re-CREATE at the same path gets a new inode and misses.
-# Remote (object-store) paths skip the cache: no cheap stat identity.
-_MANIFEST_LRU: dict = {}
-_MANIFEST_LRU_MAX = 512
+# Parsed manifests are served from a stat-keyed LRU (statcache.StatLRU,
+# A18 on the native plane): manifests are CREATE-ONCE (published via hard
+# link / conditional PUT, never rewritten). A parsed manifest retains
+# ~8.4x its file's bytes (measured with tracemalloc at 100-200
+# fragments, 14x for a one-fragment file); entries are sized
+# 2 KiB + 9x file bytes.
+MANIFEST_CACHE_BYTES = 16 << 20
+_MANIFESTS = StatLRU(MANIFEST_CACHE_BYTES)
+
+
+def _decode_manifest(p: str) -> tuple:
+    raw = bytes(nio.read_bytes(p))
+    return parse_manifest(raw), 2048 + 9 * len(raw)
 
 
 def _parse_manifest_cached(p: str) -> "NativeManifest":
-    if nio.is_remote(p):
-        return parse_manifest(bytes(nio.read_bytes(p)))
-    try:
-        st = os.stat(p)
-    except OSError:
-        return parse_manifest(bytes(nio.read_bytes(p)))
-    key = (p, st.st_ino, st.st_mtime_ns, st.st_size)
-    m = _MANIFEST_LRU.pop(key, None)  # pop+reinsert = LRU order
-    if m is None:
-        m = parse_manifest(bytes(nio.read_bytes(p)))
-        if len(_MANIFEST_LRU) >= _MANIFEST_LRU_MAX:
-            _MANIFEST_LRU.pop(next(iter(_MANIFEST_LRU)))
-    _MANIFEST_LRU[key] = m
-    return m
+    return _MANIFESTS.load(p, _decode_manifest)[0]
 
 
 def list_native_versions(root: str) -> dict[int, str]:
@@ -4958,11 +4952,11 @@ class NativeVectorIndex:
         return len(self.part_lengths)
 
 
-def read_native_vector_index(path: str) -> NativeVectorIndex:
-    """Parse one `_indices/<uuid>/index.idx` (metadata only: footer seek +
-    proto — partition bodies are read later, per probed cell)."""
-    import numpy as np
-
+def _index_meta(path: str) -> tuple[bytes, int]:
+    """(metadata proto, its offset = body length) of one index sidecar
+    written with the v1 footer (``[body][u32 len][meta][u64 meta_pos]
+    [u16 x2]LANC``) — a footer seek plus one read; bodies are range-read
+    later."""
     with nio.open_read(path) as fh:
         fh.seek(0, os.SEEK_END)
         fsize = fh.tell()
@@ -4974,7 +4968,15 @@ def read_native_vector_index(path: str) -> NativeVectorIndex:
         fh.seek(pos)
         metar = fh.read(fsize - pos)
     ln = struct.unpack_from("<I", metar, 0)[0]
-    meta = metar[4:4 + ln]
+    return metar[4:4 + ln], pos
+
+
+def read_native_vector_index(path: str) -> NativeVectorIndex:
+    """Parse one `_indices/<uuid>/index.idx` (metadata only: footer seek +
+    proto — partition bodies are read later, per probed cell)."""
+    import numpy as np
+
+    meta = _index_meta(path)[0]
     name = column = None
     dsver = 0
     impl = None
@@ -5216,40 +5218,34 @@ def native_index_search(
         srids = rids[order]
         fids = (srids >> np.uint64(32)).astype(np.int64)
         rows = (srids & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        pos = 0
-        while pos < len(srids):
-            end = pos
-            fid = fids[pos]
-            while end < len(srids) and fids[end] == fid:
-                end += 1
-            frag = frag_by_id.get(int(fid))
+        for pos, end in _fragment_runs(fids):
+            fid = int(fids[pos])
+            frag = frag_by_id.get(fid)
             if frag is None:
                 if skip_missing_fragments:
                     exact[order[pos:end]] = np.inf
                     stale_dropped += end - pos
-                    pos = end
                     continue
                 raise LanceNativeError(f"index references unknown fragment {fid}")
             grp_rows = rows[pos:end]
             live_m = None
             if mask_deletions and frag.deletion is not None:
-                if int(fid) not in dead_cache:
-                    dead_cache[int(fid)] = _deleted_rows_np(
+                if fid not in dead_cache:
+                    dead_cache[fid] = _deleted_rows_np(
                         root, frag.deletion)
-                live_m = ~np.isin(grp_rows, dead_cache[int(fid)])
+                live_m = ~np.isin(grp_rows, dead_cache[fid])
                 if not live_m.all():
                     exact[order[pos:end][~live_m]] = np.inf
                     stale_dropped += int((~live_m).sum())
             if allowed_by_fragment is not None:
                 # prefilter mask: candidates outside the allowed set are
                 # EXCLUDED (not stale — they exist, they just don't match)
-                al = allowed_by_fragment.get(int(fid))
+                al = allowed_by_fragment.get(fid)
                 al_m = (np.isin(grp_rows, al) if al is not None
                         else np.zeros(len(grp_rows), dtype=bool))
                 exact[order[pos:end][~al_m]] = np.inf
                 live_m = al_m if live_m is None else (live_m & al_m)
             if live_m is not None and not live_m.any():
-                pos = end
                 continue
             nfield = next(
                 f for f in manifest.top_level_fields()
@@ -5264,7 +5260,6 @@ def native_index_search(
             dst = (order[pos:end] if live_m is None
                    else order[pos:end][live_m])
             exact[dst] = ((vec - qv) ** 2).sum(axis=1)
-            pos = end
         top = np.argsort(exact, kind="stable")[:k]
         top = top[np.isfinite(exact[top])]
         results.append({
@@ -5277,6 +5272,17 @@ def native_index_search(
             "index_bytes_read": int(bytes_read),
         })
     return results
+
+
+def _fragment_runs(fids) -> list[tuple[int, int]]:
+    """The [pos, end) spans of equal values in the sorted int array
+    ``fids``, in order (none for an empty array)."""
+    import numpy as np
+
+    if not len(fids):
+        return []
+    bounds = (np.flatnonzero(np.diff(fids)) + 1).tolist()
+    return list(zip([0] + bounds, bounds + [len(fids)]))
 
 
 def _kmeans(data, k: int, iters: int, seed: int):
@@ -8381,18 +8387,7 @@ def ensure_native_scalar_index(
 def read_native_scalar_index(path: str) -> NativeScalarIndex:
     """Parse one scalar index sidecar — METADATA ONLY (footer seek + proto;
     page bodies are range-read later, per probe)."""
-    with nio.open_read(path) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        fh.seek(fsize - 16)
-        tail = fh.read(16)
-        if tail[-4:] != b"LANC":
-            raise LanceNativeError(f"{path}: missing LANC footer magic")
-        pos = struct.unpack_from("<Q", tail, 0)[0]
-        fh.seek(pos)
-        metar = fh.read(fsize - pos)
-    ln = struct.unpack_from("<I", metar, 0)[0]
-    meta = metar[4:4 + ln]
+    meta, pos = _index_meta(path)
     name = column = None
     dsver = 0
     bt = None
@@ -8824,7 +8819,7 @@ def _fts_bucket_of(token: str, n_buckets: int) -> int:
         hashlib.md5(token.encode()).digest()[:4], "little") % n_buckets
 
 
-@dataclass
+@dataclass(frozen=True)
 class NativeFtsIndex:
     path: str                 # index.idx
     name: str
@@ -8915,29 +8910,108 @@ def _fts_postings_blob(tokens: list, addr_arrays: list,
 
 
 
-def _fts_postings_locate(path: str) -> tuple:
-    """Meta-only read of one postings file: ({token -> (body_offset,
-    count)}, has_positions, skipmeta | None). The access decision (how
+# Decoded postings-file term dictionaries are served from a stat-keyed
+# LRU (statcache.StatLRU, A18's index cache, the inverted-index part):
+# postings files are written once under uuid-suffixed names. Entries are
+# sized by measured bytes (FtsTermDict.nbytes).
+FTS_DICT_CACHE_BYTES = 128 << 20
+
+
+@dataclass(frozen=True, eq=False)
+class FtsTermDict:
+    """One postings file's decoded token dictionary; every array is
+    read-only. ``index`` maps token -> position in file order and
+    serves both the location lookup and the skip samples."""
+    index: "types.MappingProxyType"
+    offsets: "np.ndarray"          # int64 body offset per token
+    counts: "np.ndarray"           # int64 postings per token
+    has_pos: bool
+    # skip samples (r13 positional files, else None): token i's samples
+    # are sample_addrs/sample_cumtf[skip_prefix[i]:skip_prefix[i + 1]]
+    skip_prefix: "np.ndarray | None"
+    sample_addrs: "np.ndarray | None"
+    sample_cumtf: "np.ndarray | None"
+    nbytes: int
+
+    def loc(self, token: str) -> tuple[int, int] | None:
+        """(body_offset, count) of ``token``'s postings, or None."""
+        i = self.index.get(token)
+        if i is None:
+            return None
+        return int(self.offsets[i]), int(self.counts[i])
+
+    def skips(self, token: str):
+        """``token``'s (sample_addrs, sample_cumtf); None when the file
+        predates skip samples or lacks the token."""
+        if self.skip_prefix is None:
+            return None
+        i = self.index.get(token)
+        if i is None:
+            return None
+        lo, hi = self.skip_prefix[i], self.skip_prefix[i + 1]
+        return self.sample_addrs[lo:hi], self.sample_cumtf[lo:hi]
+
+
+_FTS_DICTS = StatLRU(FTS_DICT_CACHE_BYTES)
+
+
+def _fts_postings_locate(path: str) -> tuple[FtsTermDict, bool]:
+    """Meta-only view of one postings file from the process-wide LRU,
+    and whether this call decoded it cold. The access decision (how
     many postings a query touches) happens here, BEFORE any posting
     byte is read — the cap/routing gate, the distributed arm's chunk
-    planner, and the phrase window locator all consume this. skipmeta
-    is (token_index_by_token, skip_prefix, sample_addrs, sample_cumtf)
-    when the file carries skip samples (r13 positional files), else
-    None."""
+    planner, and the phrase window locator all consume this."""
+    return _FTS_DICTS.load(path, _decode_fts_dict)
+
+
+def _varints_np(buf: bytes) -> "np.ndarray":
+    """Vectorized _packed_varints for the dictionary's packed arrays
+    (int64); a truncated, overlong or out-of-range varint raises."""
     import numpy as np
 
-    with nio.open_read(path) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        fh.seek(fsize - 16)
-        tail = fh.read(16)
-        if tail[-4:] != b"LANC":
-            raise LanceNativeError(f"{path}: missing LANC footer magic")
-        pos = struct.unpack_from("<Q", tail, 0)[0]
-        fh.seek(pos)
-        metar = fh.read(fsize - pos)
-    ln = struct.unpack_from("<I", metar, 0)[0]
-    meta = metar[4:4 + ln]
+    b = np.frombuffer(buf, dtype=np.uint8)
+    ends = np.flatnonzero(b < 0x80)
+    if len(b) and (not len(ends) or ends[-1] != len(b) - 1):
+        raise LanceNativeError("truncated varint in postings metadata")
+    starts = np.concatenate(([0], ends[:-1] + 1))[:len(ends)]
+    lens = ends - starts + 1
+    shift = np.arange(len(b)) - np.repeat(starts, lens)
+    if len(b) and (lens.max() > 10 or (b[shift == 9] > 1).any()):
+        raise LanceNativeError("overlong varint in postings metadata")
+    vals = ((b & 0x7F).astype(np.uint64)
+            << (7 * shift).astype(np.uint64))
+    out = np.bitwise_or.reduceat(vals, starts) if len(b) else vals
+    if (out >= np.uint64(1 << 63)).any():
+        raise LanceNativeError("varint out of range in postings metadata")
+    return out.astype(np.int64)
+
+
+def _decode_fts_tokens(raw: bytes, n: int) -> list:
+    """The postings meta's string values block (_enc_values_block
+    layout: n+1 u4 offsets, then UTF-8 bytes) -> n str, through one
+    validated Arrow StringArray."""
+    import pyarrow as pa
+
+    buf = pa.py_buffer(raw)
+    base = 4 * (n + 1)
+    if len(raw) < base:
+        raise LanceNativeError("truncated token block in postings metadata")
+    try:
+        arr = pa.StringArray.from_buffers(
+            n, buf.slice(0, base), buf.slice(base))
+        arr.validate(full=True)
+    except pa.ArrowInvalid as e:
+        raise LanceNativeError(f"corrupt token block: {e}") from None
+    return arr.to_numpy(zero_copy_only=False).tolist() if n else []
+
+
+def _decode_fts_dict(path: str) -> tuple[FtsTermDict, int]:
+    import sys
+    import types
+
+    import numpy as np
+
+    meta = _index_meta(path)[0]
     toks_raw = counts = offsets = None
     has_pos = False
     skip_counts = skip_addrs = skip_cumtf = None
@@ -8945,43 +9019,40 @@ def _fts_postings_locate(path: str) -> tuple:
         if f == 1:
             toks_raw = v
         elif f == 2:
-            counts = _packed_varints(v)
+            counts = _varints_np(v)
         elif f == 3:
-            offsets = _packed_varints(v)
+            offsets = _varints_np(v)
         elif f == 4:
             has_pos = bool(v)
         elif f == 5:
-            skip_counts = _packed_varints(v)
+            skip_counts = _varints_np(v)
         elif f == 6:
             skip_addrs = np.frombuffer(v, dtype="<u8")
         elif f == 7:
             skip_cumtf = np.frombuffer(v, dtype="<u8")
-    if toks_raw is None or counts is None or offsets is None:
+    if toks_raw is None or counts is None or offsets is None \
+            or len(offsets) != len(counts):
         raise LanceNativeError(f"{path}: incomplete postings metadata")
-    tokens = _dec_values_block("string", toks_raw, len(counts))
-    skipmeta = None
+    tokens = _decode_fts_tokens(toks_raw, len(counts))
+    prefix = None
     if skip_counts is not None and skip_addrs is not None \
             and skip_cumtf is not None:
-        prefix = [0]
-        for c in skip_counts:
-            prefix.append(prefix[-1] + c)
-        skipmeta = ({t: i for i, t in enumerate(tokens)}, prefix,
-                    skip_addrs, skip_cumtf)
-    return ({t: (offsets[i], counts[i]) for i, t in enumerate(tokens)},
-            has_pos, skipmeta)
-
-
-def _fts_term_skips(skipmeta, term: str):
-    """One term's (sample_addrs, sample_cumtf) from a locate()
-    skipmeta; None when the file predates skip samples or lacks the
-    term."""
-    if skipmeta is None:
-        return None
-    by_tok, prefix, addrs, cumtf = skipmeta
-    i = by_tok.get(term)
-    if i is None:
-        return None
-    return addrs[prefix[i]:prefix[i + 1]], cumtf[prefix[i]:prefix[i + 1]]
+        prefix = np.concatenate(([0], np.cumsum(skip_counts)))
+    else:
+        skip_addrs = skip_cumtf = None
+    index = dict(zip(tokens, range(len(tokens))))
+    arrays = [a for a in (offsets, counts, prefix, skip_addrs, skip_cumtf)
+              if a is not None]
+    for a in arrays:
+        a.flags.writeable = False
+    # measured bytes: the arrays, the dict, its keys and its int values
+    # (CPython caches ints up to 256)
+    nbytes = (sum(a.nbytes for a in arrays) + sys.getsizeof(index)
+              + sum(map(sys.getsizeof, tokens))
+              + 28 * max(0, len(tokens) - 257))
+    td = FtsTermDict(types.MappingProxyType(index), offsets, counts,
+                     has_pos, prefix, skip_addrs, skip_cumtf, nbytes)
+    return td, nbytes
 
 
 def _fts_read_postings_window(path: str, offset: int, count: int,
@@ -9347,18 +9418,7 @@ def _fts_fuzzy_scan_file(path: str, specs: list) -> tuple:
     Otherwise decodes the token block once (transient: nothing is
     cached) and runs the distance-k filter per word. Returns
     ({spec_index -> [matched token, ...]}, n_tokens_decoded)."""
-    with nio.open_read(path) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        fh.seek(fsize - 16)
-        tail = fh.read(16)
-        if tail[-4:] != b"LANC":
-            raise LanceNativeError(f"{path}: missing LANC footer magic")
-        pos = struct.unpack_from("<Q", tail, 0)[0]
-        fh.seek(pos)
-        metar = fh.read(fsize - pos)
-    ln = struct.unpack_from("<I", metar, 0)[0]
-    meta = metar[4:4 + ln]
+    meta = _index_meta(path)[0]
     toks_raw = counts_raw = None
     mn = mx = None
     for f, wt, v in pb_items(meta):
@@ -9377,8 +9437,7 @@ def _fts_fuzzy_scan_file(path: str, specs: list) -> tuple:
             else mn - d <= len(w) <= mx + d    # fuzzy length band
             for w, d in specs):
         return {}, 0
-    tokens = _dec_values_block(
-        "string", toks_raw, len(_packed_varints(counts_raw)))
+    tokens = _decode_fts_tokens(toks_raw, len(_varints_np(counts_raw)))
     matches = {}
     for wi, (w, d) in enumerate(specs):
         got = _fts_editk_filter(w, tokens, d)
@@ -9932,19 +9991,33 @@ def _write_fts_meta(d: str, column: str, dataset_version: int,
     }).encode())
 
 
+# Parsed FTS index metadata (index.idx, replaced atomically by extends
+# and compactions) is served from a stat-keyed LRU like the manifests;
+# a foreign (vector/btree) index.idx caches its refusal message, so the
+# per-query listing of _indices/ re-parses nothing. Entries are sized
+# 2 KiB + 9x metadata bytes, the manifests' measured bound.
+FTS_INDEX_CACHE_BYTES = 4 << 20
+_FTS_INDEXES = StatLRU(FTS_INDEX_CACHE_BYTES)
+
+
 def read_native_fts_index(path: str) -> NativeFtsIndex:
-    with nio.open_read(path) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        fh.seek(fsize - 16)
-        tail = fh.read(16)
-        if tail[-4:] != b"LANC":
-            raise LanceNativeError(f"{path}: missing LANC footer magic")
-        pos = struct.unpack_from("<Q", tail, 0)[0]
-        fh.seek(pos)
-        metar = fh.read(fsize - pos)
-    ln = struct.unpack_from("<I", metar, 0)[0]
-    meta = metar[4:4 + ln]
+    idx = _FTS_INDEXES.load(path, _decode_native_fts_index)[0]
+    if isinstance(idx, str):
+        raise LanceNativeError(idx)
+    return idx
+
+
+def _decode_native_fts_index(path: str) -> tuple:
+    """(NativeFtsIndex, or the LanceNativeError message refusing the
+    file, nbytes)."""
+    try:
+        return _parse_native_fts_index(path)
+    except LanceNativeError as e:
+        return str(e), 2048
+
+
+def _parse_native_fts_index(path: str) -> tuple:
+    meta = _index_meta(path)[0]
     name = column = None
     dsver = 0
     inv = None
@@ -9997,7 +10070,7 @@ def read_native_fts_index(path: str) -> NativeFtsIndex:
         path=path, name=name, column=column, dataset_version=dsver,
         analyzer=analyzer, n_buckets=int(n_buckets), n_docs=int(n_docs),
         sum_dl=int(sum_dl), covered_fragments=frozenset(covered),
-        run_files=runs, doclen_files=doclen)
+        run_files=runs, doclen_files=doclen), 2048 + 9 * len(meta)
 
 
 def list_native_fts_indices(root: str) -> list[NativeFtsIndex]:
@@ -10351,46 +10424,28 @@ def extend_native_fts_index(root: str, column: str, spark=None,
 def _fts_read_all_postings(path: str):
     """Every (token -> (addrs, tfs, positions|None)) of one postings
     file — the compaction read (O(bucket), the merge unit). positions
-    is None on pre-positional (pre-r13) files."""
+    is None on pre-positional (pre-r13) files. The dictionary decode is
+    transient: superseded runs never enter the cache."""
     import numpy as np
 
+    td = _decode_fts_dict(path)[0]
+    out = {}
     with nio.open_read(path) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        fh.seek(fsize - 16)
-        pos = struct.unpack_from("<Q", fh.read(16), 0)[0]
-        fh.seek(pos)
-        metar = fh.read(fsize - pos)
-        ln = struct.unpack_from("<I", metar, 0)[0]
-        meta = metar[4:4 + ln]
-        toks_raw = counts = offsets = None
-        has_pos = False
-        for f, wt, v in pb_items(meta):
-            if f == 1:
-                toks_raw = v
-            elif f == 2:
-                counts = _packed_varints(v)
-            elif f == 3:
-                offsets = _packed_varints(v)
-            elif f == 4:
-                has_pos = bool(v)
-        tokens = _dec_values_block("string", toks_raw, len(counts))
-        out = {}
-        for i, t in enumerate(tokens):
-            n = counts[i]
-            fh.seek(offsets[i])
+        for t, i in td.index.items():
+            n, off = int(td.counts[i]), int(td.offsets[i])
+            fh.seek(off)
             raw = fh.read(n * 12)
             addrs = np.frombuffer(raw, dtype="<u8", count=n).copy()
             tfs = np.frombuffer(
                 raw, dtype="<u4", count=n, offset=n * 8).copy()
             pos_arr = None
-            if has_pos:
+            if td.has_pos:
                 n_pos = int(tfs.sum())
-                fh.seek(offsets[i] + n * 12)
+                fh.seek(off + n * 12)
                 pos_arr = np.frombuffer(
                     fh.read(n_pos * 4), dtype="<u4").copy()
             out[t] = (addrs, tfs, pos_arr)
-        return out
+    return out
 
 
 def native_fts_search(root: str, column: str, query: str, k: int = 10,
@@ -10464,19 +10519,20 @@ def native_fts_search(root: str, column: str, query: str, k: int = 10,
                 terms.append(t)
     phrased = any(_fts_is_phrase(op) for op in all_ops)
     stats = {"terms": len(terms), "terms_found": 0, "postings_read": 0,
-             "files_opened": 0, "mode": "driver",
+             "files_opened": 0, "dicts_decoded": 0, "mode": "driver",
              "operands": len(ops), "require_all": require_all,
              "excludes": len(excludes)}
     if not ops or idx.n_docs == 0:
         return [], stats
     d = os.path.dirname(idx.path)
-    meta_cache: dict[str, tuple] = {}
+    touched: dict[str, FtsTermDict] = {}
 
     def _locate(path):
-        if path not in meta_cache:
+        if path not in touched:
+            touched[path], cold = _fts_postings_locate(path)
             stats["files_opened"] += 1
-            meta_cache[path] = _fts_postings_locate(path)
-        return meta_cache[path]
+            stats["dicts_decoded"] += cold
+        return touched[path]
 
     # fuzzy expansion over the indexed VOCABULARY — streamed per
     # bucket file with length fences + a vectorized filter, handed to
@@ -10513,16 +10569,16 @@ def native_fts_search(root: str, column: str, query: str, k: int = 10,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            locs, has_pos, skipmeta = _locate(path)
-            loc = locs.get(t)
+            td = _locate(path)
+            loc = td.loc(t)
             if loc is None:
                 continue
             found = True
-            pos_ok = pos_ok and has_pos
+            pos_ok = pos_ok and td.has_pos
             slices[ti].append((path, loc[0], loc[1]))
             total += loc[1]
             if t in phrase_members:
-                sk = _fts_term_skips(skipmeta, t)
+                sk = td.skips(t)
                 if sk is None:
                     skip_ok = False
                 else:
@@ -11093,7 +11149,6 @@ def native_bitmap_lookup(root: str, column: str, values,
             f"no bitmap (keyword-v1) index on {column!r} — build one "
             "with write_native_bitmap_index")
     d = os.path.dirname(idx.path)
-    meta_cache: dict[str, tuple] = {}
     parts: list = []
     for v in values:
         if v is None:
@@ -11104,9 +11159,7 @@ def native_bitmap_lookup(root: str, column: str, values,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            if path not in meta_cache:
-                meta_cache[path] = _fts_postings_locate(path)
-            loc = meta_cache[path][0].get(t)
+            loc = _fts_postings_locate(path)[0].loc(t)
             if loc is None:
                 continue
             addrs, _tfs = _fts_read_postings_range(
@@ -11164,7 +11217,6 @@ def native_label_lookup(root: str, column: str, values,
             f"no label (label-v1) index on {column!r} — build one "
             "with write_native_label_index")
     d = os.path.dirname(idx.path)
-    meta_cache: dict[str, tuple] = {}
     per_value: list = []
     for v in values:
         t = str(v)
@@ -11174,9 +11226,7 @@ def native_label_lookup(root: str, column: str, values,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            if path not in meta_cache:
-                meta_cache[path] = _fts_postings_locate(path)
-            loc = meta_cache[path][0].get(t)
+            loc = _fts_postings_locate(path)[0].loc(t)
             if loc is None:
                 continue
             addrs, _tfs = _fts_read_postings_range(
@@ -11261,8 +11311,7 @@ def native_ngram_lookup(root: str, column: str, needle: str,
         return None, idx.covered_fragments
     grams = _fts_tokenize(needle, "ngram-v1")
     d = os.path.dirname(idx.path)
-    meta_cache: dict[str, tuple] = {}
-    # Meta pass: per-gram (path, loc, skipmeta) slices + total counts —
+    # Meta pass: per-gram (path, loc, skips) slices + total counts —
     # the access decision happens before any posting byte is read.
     per_gram: list[tuple[int, list]] = []
     for g in grams:
@@ -11273,13 +11322,11 @@ def native_ngram_lookup(root: str, column: str, needle: str,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            if path not in meta_cache:
-                meta_cache[path] = _fts_postings_locate(path)
-            loc_map, _hp, skipmeta = meta_cache[path]
-            loc = loc_map.get(g)
+            td = _fts_postings_locate(path)[0]
+            loc = td.loc(g)
             if loc is None:
                 continue
-            slices.append((path, loc, _fts_term_skips(skipmeta, g)))
+            slices.append((path, loc, td.skips(g)))
             total += loc[1]
         per_gram.append((total, slices))
     per_gram.sort(key=lambda x: x[0])
@@ -11481,7 +11528,7 @@ def native_fts_search_fresh(root: str, column: str, query: str,
     stats = {"terms": len(terms), "covered": len(covered),
              "uncovered": len(uncovered), "delta_matches": len(delta_rows),
              "operands": len(ops), "require_all": require_all,
-             "excludes": len(excludes)}
+             "excludes": len(excludes), "dicts_decoded": 0}
     if n_docs == 0:
         return [], stats
     n = float(n_docs)
@@ -11515,12 +11562,13 @@ def native_fts_search_fresh(root: str, column: str, query: str,
         for t in terms}
     if idx is not None:
         d = os.path.dirname(idx.path)
-        meta_cache: dict[str, tuple] = {}
+        touched: dict[str, FtsTermDict] = {}
 
         def _locate(path):
-            if path not in meta_cache:
-                meta_cache[path] = _fts_postings_locate(path)
-            return meta_cache[path]
+            if path not in touched:
+                touched[path], cold = _fts_postings_locate(path)
+                stats["dicts_decoded"] += cold
+            return touched[path]
 
         if fuzzy_ops:  # expansion over the covered arm's vocabulary —
             # streamed + fenced + vectorized, distributed past the
@@ -11550,10 +11598,10 @@ def native_fts_search_fresh(root: str, column: str, query: str,
                 if not run[b]:
                     continue
                 path = os.path.join(d, run[b])
-                locs, has_pos, _skips = _locate(path)
-                loc = locs.get(t)
+                td = _locate(path)
+                loc = td.loc(t)
                 if loc is not None:
-                    pos_ok = pos_ok and has_pos
+                    pos_ok = pos_ok and td.has_pos
                     slices[ti].append((path, loc[0], loc[1]))
                     total += loc[1]
         if phrased and not pos_ok:

@@ -1,0 +1,62 @@
+"""Process-wide decode caches keyed by file stat identity — A18, the
+reference's per-session index and metadata cache (`LanceRuntime.java:
+96-183`, `docs/src/performance.md` "Caching").
+
+One class serves every user: parsed native manifests and FTS index
+metadata (``lance_native``), decoded HNSW shard graphs
+(``vector_index``) and decoded postings-file term dictionaries
+(``lance_native``). Every cached file is written once under a unique
+name (manifests, postings files, native graphs) or replaced atomically
+(index metadata, own-format graphs), so the stat identity
+``(path, st_ino, st_mtime_ns, st_size)`` is sound: a DROP + re-CREATE
+at the same path gets a new inode and misses. Remote (object-store)
+paths skip the cache — they have no cheap stat identity. Each user
+bounds its cache by a byte budget of measured decoded bytes, a module
+constant next to the cache; per-call state (deletion and prefilter
+masks) is never cached.
+"""
+
+from __future__ import annotations
+
+import os
+import threading
+from collections import OrderedDict
+
+from .native_io import is_remote
+
+
+class StatLRU:
+    """Decoded files keyed by stat identity, least recently used evicted
+    first; the summed entry bytes never exceed ``budget`` (an entry
+    larger than the whole budget is decoded but not kept)."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.nbytes = 0
+        self._entries: OrderedDict = OrderedDict()  # key -> (value, nbytes)
+        self._lock = threading.Lock()
+
+    def load(self, path: str, decode) -> tuple:
+        """(decoded value of the file at ``path``, whether this call
+        decoded it cold); ``decode(path)`` returns ``(value, nbytes)``."""
+        try:
+            st = None if is_remote(path) else os.stat(path)
+        except OSError:
+            st = None
+        if st is None:
+            return decode(path)[0], True
+        key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None:
+                self._entries.move_to_end(key)
+                return hit[0], False
+        value, nbytes = decode(path)
+        with self._lock:
+            if key not in self._entries and nbytes <= self.budget:
+                while self.nbytes + nbytes > self.budget:
+                    _, (_old, old_bytes) = self._entries.popitem(last=False)
+                    self.nbytes -= old_bytes
+                self._entries[key] = (value, nbytes)
+                self.nbytes += nbytes
+        return value, True

@@ -43,12 +43,11 @@ from __future__ import annotations
 import functools
 import json
 import os
-import threading
 import uuid
-from collections import OrderedDict
 from dataclasses import dataclass
 
 from .index import INDICES_DIR
+from .statcache import StatLRU
 
 VINDEX_PROP = "vector_indexes"  # manifest.properties: {column: meta dict}
 VINDEX_ROW_GROUP = 1024
@@ -821,15 +820,9 @@ def _build_hnsw_shard(
     return rel
 
 
-# Decoded shard graphs are served from one process-wide LRU (A18's index
-# cache, the graph half; the manifest half is
-# lance_native._parse_manifest_cached). Graph files are written once
-# under unique names (native) or replaced atomically (own-format), so the
-# stat identity (path, inode, mtime_ns, size) is sound: a DROP + re-CREATE
-# at the same path gets a new inode and misses. Remote paths skip the
-# cache (no cheap stat identity). The decoded form is numpy arrays only
-# (~0.6 KB per 64-dim node), so the budget bounds real memory; deletion
-# and prefilter masks are per call and never cached.
+# Decoded shard graphs are served from one process-wide stat-keyed LRU
+# (statcache.StatLRU, A18's index cache). The decoded form is numpy
+# arrays only (~0.6 KB per 64-dim node), so the budget bounds real memory.
 HNSW_CACHE_BYTES = 256 << 20
 
 
@@ -940,52 +933,17 @@ def _decode_hnsw_graph(t) -> HnswGraph:
     return g
 
 
-class _GraphLRU:
-    """Decoded graphs keyed by file stat identity, least recently used
-    evicted first; the summed ``nbytes`` never exceeds ``budget`` (a
-    graph larger than the whole budget is decoded but not kept)."""
-
-    def __init__(self, budget: int):
-        self.budget = budget
-        self.nbytes = 0
-        self._entries: OrderedDict = OrderedDict()
-        self._lock = threading.Lock()
-
-    def load(self, path: str, read) -> tuple[HnswGraph, bool]:
-        """(decoded graph of the file at ``path``, whether it was decoded
-        cold); ``read(path)`` returns the graph's Arrow table."""
-        from .native_io import is_remote
-
-        try:
-            st = None if is_remote(path) else os.stat(path)
-        except OSError:
-            st = None
-        if st is None:
-            return _decode_hnsw_graph(read(path)), True
-        key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
-        with self._lock:
-            g = self._entries.get(key)
-            if g is not None:
-                self._entries.move_to_end(key)
-                return g, False
-        g = _decode_hnsw_graph(read(path))
-        with self._lock:
-            if key not in self._entries and g.nbytes <= self.budget:
-                while self.nbytes + g.nbytes > self.budget:
-                    _, old = self._entries.popitem(last=False)
-                    self.nbytes -= old.nbytes
-                self._entries[key] = g
-                self.nbytes += g.nbytes
-        return g, True
-
-
-_HNSW_GRAPHS = _GraphLRU(HNSW_CACHE_BYTES)
+_HNSW_GRAPHS = StatLRU(HNSW_CACHE_BYTES)
 
 
 def hnsw_graph(path: str, read) -> tuple[HnswGraph, bool]:
     """The decoded graph at ``path`` from the process-wide LRU, and
-    whether this call decoded it cold."""
-    return _HNSW_GRAPHS.load(path, read)
+    whether this call decoded it cold; ``read(path)`` returns the
+    graph's Arrow table."""
+    def decode(p):
+        g = _decode_hnsw_graph(read(p))
+        return g, g.nbytes
+    return _HNSW_GRAPHS.load(path, decode)
 
 
 def _search_hnsw_graph(

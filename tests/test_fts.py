@@ -896,10 +896,11 @@ def test_fts_window_reader_randomized(tmp_path, monkeypatch):
         path = str(tmp_path / f"win{trial}.idx")
         with open(path, "wb") as fh:
             fh.write(blob)
-        locs, has_pos, skipmeta = ln._fts_postings_locate(path)
+        td, _cold = ln._fts_postings_locate(path)
+        has_pos, skipmeta = td.has_pos, td.skip_prefix
         assert has_pos and skipmeta is not None
-        off, cnt = locs["tok"]
-        skips = ln._fts_term_skips(skipmeta, "tok")
+        off, cnt = td.loc("tok")
+        skips = td.skips("tok")
         assert skips is not None
         sample_addrs = list(skips[0])
         probes = [
@@ -1315,7 +1316,7 @@ def test_fts_fuzzy_expansion_never_materializes_vocab(tmp_path, spark,
         for b in run:
             if b:
                 toks = set(
-                    ln._fts_postings_locate(os.path.join(d, b))[0])
+                    ln._fts_postings_locate(os.path.join(d, b))[0].index)
                 all_tokens |= toks
                 file_token_sum += len(toks)
     for w in ["merge", "marge", "ab", "abcdef", "zzzzzz"]:

@@ -15,6 +15,7 @@ import pytest
 
 import lance_trino_spark.format.lance_native as ln
 from lance_trino_spark.format import vector_index as vi
+from lance_trino_spark.format.statcache import StatLRU
 
 
 def _reference_search(
@@ -149,6 +150,11 @@ def _read(path: str) -> pa.Table:
         return pa.ipc.open_stream(pa.BufferReader(fh.read())).read_all()
 
 
+def _decode(path: str) -> tuple:
+    g = vi._decode_hnsw_graph(_read(path))
+    return g, g.nbytes
+
+
 def _corpus(rng, n: int, dim: int) -> np.ndarray:
     """Random vectors with exact duplicates, a zero vector and -0.0
     components (byte-distinct from +0.0, so not duplicates)."""
@@ -209,7 +215,7 @@ def test_cached_arrays_are_read_only(tmp_path):
     path = str(tmp_path / "g.idx")
     _write_graph(path, _graph_table(np.random.default_rng(1).normal(
         size=(50, 4))))
-    g, _cold = vi._GraphLRU(1 << 30).load(path, _read)
+    g, _cold = StatLRU(1 << 30).load(path, _decode)
     arrays = [g.row_index, g.raw, g.xn, g.levels, g.dup_keys, g.dup_nodes,
               *g.indptr, *g.indices]
     assert all(isinstance(a, np.ndarray) for a in arrays)
@@ -226,21 +232,21 @@ def test_lru_evicts_least_recently_used_within_budget(tmp_path):
         _write_graph(p, _graph_table(rng.normal(size=(200, 8))))
         paths.append(p)
     size = vi._decode_hnsw_graph(_read(paths[0])).nbytes
-    lru = vi._GraphLRU(int(2.5 * size))
+    lru = StatLRU(int(2.5 * size))
     a, b, c, d = paths
-    assert lru.load(a, _read)[1] and lru.load(b, _read)[1]
-    assert not lru.load(a, _read)[1]   # hit: a is now most recent
-    assert lru.load(c, _read)[1]       # evicts b, the least recent
+    assert lru.load(a, _decode)[1] and lru.load(b, _decode)[1]
+    assert not lru.load(a, _decode)[1]   # hit: a is now most recent
+    assert lru.load(c, _decode)[1]       # evicts b, the least recent
     assert lru.nbytes <= lru.budget
-    assert not lru.load(a, _read)[1]
-    assert not lru.load(c, _read)[1]
-    assert lru.load(b, _read)[1]       # was evicted: decoded cold again
+    assert not lru.load(a, _decode)[1]
+    assert not lru.load(c, _decode)[1]
+    assert lru.load(b, _decode)[1]       # was evicted: decoded cold again
     assert lru.nbytes <= lru.budget
     # a graph bigger than the whole budget is served, never kept
-    tiny = vi._GraphLRU(size // 2)
-    g, cold = tiny.load(d, _read)
+    tiny = StatLRU(size // 2)
+    g, cold = tiny.load(d, _decode)
     assert cold and g.n == 200 and tiny.nbytes == 0
-    assert tiny.load(d, _read)[1]
+    assert tiny.load(d, _decode)[1]
 
 
 def test_lru_keys_on_file_identity(tmp_path):
@@ -248,12 +254,12 @@ def test_lru_keys_on_file_identity(tmp_path):
     rng = np.random.default_rng(3)
     path = str(tmp_path / "g.idx")
     x1, x2 = rng.normal(size=(2, 40, 4)).astype(np.float32)
-    lru = vi._GraphLRU(1 << 30)
+    lru = StatLRU(1 << 30)
     _write_graph(path, _graph_table(x1))
-    g1, _ = lru.load(path, _read)
-    assert not lru.load(path, _read)[1]
+    g1, _ = lru.load(path, _decode)
+    assert not lru.load(path, _decode)[1]
     _write_graph(path, _graph_table(x2))
-    g2, cold = lru.load(path, _read)
+    g2, cold = lru.load(path, _decode)
     assert cold and np.array_equal(g2.raw, x2)
     assert np.array_equal(g1.raw, x1)  # the old graph was never mutated
 

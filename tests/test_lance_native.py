@@ -5830,3 +5830,90 @@ def test_native_ivf_hnsw_composite_lifecycle(tmp_path, spark):
     assert r[0]["vec_id"] == 9 and r[0]["cosine"] >= 0.999
     st2 = cat.sql("DROP VECTOR INDEX ON s.t (embedding)").collect()
     assert "dropped 1" in st2[0]["status"]
+
+
+def _grouping_loop_runs(fids):
+    """The per-candidate grouping loop the IVF_PQ refine step used
+    before _fragment_runs: the reference its spans must equal."""
+    out, pos = [], 0
+    while pos < len(fids):
+        end = pos
+        fid = fids[pos]
+        while end < len(fids) and fids[end] == fid:
+            end += 1
+        out.append((pos, end))
+        pos = end
+    return out
+
+
+def test_ivf_pq_refine_grouping_matches_the_loop(tmp_path, monkeypatch):
+    """The vectorized fragment grouping of native_index_search's exact
+    refine returns what the per-candidate loop returned on a
+    multi-fragment index: refine_factor None and int, deletion masks,
+    allowed_by_fragment, skip_missing_fragments after compaction, and
+    probes whose cells hold no candidates."""
+    import numpy as np
+
+    from lance_trino_spark.format import lance_native as ln
+
+    for fids in ([], [3], [0, 0, 0], [0, 1, 1, 2, 2, 2, 7],
+                 np.random.default_rng(0).integers(0, 5, 300).tolist()):
+        a = np.sort(np.asarray(fids, dtype=np.int64))
+        assert ln._fragment_runs(a) == _grouping_loop_runs(a)
+
+    rng = np.random.default_rng(12)
+    root = str(tmp_path / "ivf_refine.lance")
+    dim = 16
+    centers = rng.normal(size=(6, dim)).astype(np.float32) * 4
+    for f in range(3):
+        v = (centers[rng.integers(0, 6, 400)]
+             + rng.normal(size=(400, dim))).astype(np.float32)
+        cols = {"id": list(range(f * 400, (f + 1) * 400)),
+                "vec": v.tolist()}
+        (ln.write_native_dataset if f == 0 else ln.append_native_rows)(
+            root, cols)
+    ln.write_native_vector_index(root, "vec", n_cells=24, nsub=4,
+                                 sample=1200, iters=3)
+    idx = ln.list_native_vector_indices(root)[-1]
+    q = rng.normal(size=(6, dim)).astype(np.float32) * 4
+
+    def both(**kw):
+        got = ln.native_index_search(root, idx, q, k=7, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(ln, "_fragment_runs", _grouping_loop_runs)
+            want = ln.native_index_search(root, idx, q, k=7, **kw)
+        assert got == want, kw
+        return got
+
+    allowed = {0: np.arange(0, 400, 3), 2: np.arange(1, 400, 2)}
+    for nprobe in (1, 3):
+        for rf in (None, 2):
+            res = both(nprobe=nprobe, refine_factor=rf)
+            assert all(len(r["neighbors"]) == 7 for r in res)
+            both(nprobe=nprobe, refine_factor=rf,
+                 allowed_by_fragment=allowed)
+    ln.native_delete(root, {1: np.arange(0, 400, 2)})
+    cur = ln.read_native_manifest(root)
+    res = both(nprobe=3, manifest=cur, mask_deletions=True)
+    assert sum(r["stale_dropped"] for r in res) > 0
+    both(nprobe=3, refine_factor=2, manifest=cur, mask_deletions=True,
+         allowed_by_fragment=allowed)
+    ln.native_compact(root, small_fragment_rows=500)
+    cur = ln.read_native_manifest(root)
+    res = both(nprobe=3, manifest=cur, skip_missing_fragments=True,
+               mask_deletions=True)
+    assert sum(r["stale_dropped"] for r in res) > 0
+    # a probe whose cells hold zero candidates refines nothing
+    nearest = int(np.argsort(((idx.centroids - q[0]) ** 2).sum(axis=1))[0])
+    real_read = ln._read_index_partition
+
+    def read_partition(index, cell):
+        if cell == nearest:
+            return (np.empty((0, index.pq_nsub), dtype="u1"),
+                    np.empty(0, dtype="<u8"))
+        return real_read(index, cell)
+
+    monkeypatch.setattr(ln, "_read_index_partition", read_partition)
+    for rf in (None, 2):
+        res = both(nprobe=1, refine_factor=rf)
+        assert res[0]["n_candidates"] == 0 and res[0]["neighbors"] == []
