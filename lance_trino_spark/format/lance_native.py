@@ -8964,45 +8964,25 @@ def _fts_postings_locate(path: str) -> tuple[FtsTermDict, bool]:
     return _FTS_DICTS.load(path, _decode_fts_dict)
 
 
-def _varints_np(buf: bytes) -> "np.ndarray":
-    """Vectorized _packed_varints for the dictionary's packed arrays
-    (int64); a truncated, overlong or out-of-range varint raises."""
-    import numpy as np
+def _postings_locator(stats: dict | None = None):
+    """Per-call memo over _fts_postings_locate: each postings file's
+    dictionary is fetched at most once per call, also on remote paths,
+    which bypass the process-wide cache. ``stats``, when given, counts
+    ``files_opened`` (distinct files touched) and ``dicts_decoded``
+    (those decoded cold)."""
+    touched: dict[str, FtsTermDict] = {}
 
-    b = np.frombuffer(buf, dtype=np.uint8)
-    ends = np.flatnonzero(b < 0x80)
-    if len(b) and (not len(ends) or ends[-1] != len(b) - 1):
-        raise LanceNativeError("truncated varint in postings metadata")
-    starts = np.concatenate(([0], ends[:-1] + 1))[:len(ends)]
-    lens = ends - starts + 1
-    shift = np.arange(len(b)) - np.repeat(starts, lens)
-    if len(b) and (lens.max() > 10 or (b[shift == 9] > 1).any()):
-        raise LanceNativeError("overlong varint in postings metadata")
-    vals = ((b & 0x7F).astype(np.uint64)
-            << (7 * shift).astype(np.uint64))
-    out = np.bitwise_or.reduceat(vals, starts) if len(b) else vals
-    if (out >= np.uint64(1 << 63)).any():
-        raise LanceNativeError("varint out of range in postings metadata")
-    return out.astype(np.int64)
+    def locate(path: str) -> FtsTermDict:
+        td = touched.get(path)
+        if td is None:
+            td, cold = _fts_postings_locate(path)
+            touched[path] = td
+            if stats is not None:
+                stats["files_opened"] += 1
+                stats["dicts_decoded"] += cold
+        return td
 
-
-def _decode_fts_tokens(raw: bytes, n: int) -> list:
-    """The postings meta's string values block (_enc_values_block
-    layout: n+1 u4 offsets, then UTF-8 bytes) -> n str, through one
-    validated Arrow StringArray."""
-    import pyarrow as pa
-
-    buf = pa.py_buffer(raw)
-    base = 4 * (n + 1)
-    if len(raw) < base:
-        raise LanceNativeError("truncated token block in postings metadata")
-    try:
-        arr = pa.StringArray.from_buffers(
-            n, buf.slice(0, base), buf.slice(base))
-        arr.validate(full=True)
-    except pa.ArrowInvalid as e:
-        raise LanceNativeError(f"corrupt token block: {e}") from None
-    return arr.to_numpy(zero_copy_only=False).tolist() if n else []
+    return locate
 
 
 def _decode_fts_dict(path: str) -> tuple[FtsTermDict, int]:
@@ -9019,13 +8999,13 @@ def _decode_fts_dict(path: str) -> tuple[FtsTermDict, int]:
         if f == 1:
             toks_raw = v
         elif f == 2:
-            counts = _varints_np(v)
+            counts = np.array(_packed_varints(v), dtype=np.int64)
         elif f == 3:
-            offsets = _varints_np(v)
+            offsets = np.array(_packed_varints(v), dtype=np.int64)
         elif f == 4:
             has_pos = bool(v)
         elif f == 5:
-            skip_counts = _varints_np(v)
+            skip_counts = np.array(_packed_varints(v), dtype=np.int64)
         elif f == 6:
             skip_addrs = np.frombuffer(v, dtype="<u8")
         elif f == 7:
@@ -9033,7 +9013,7 @@ def _decode_fts_dict(path: str) -> tuple[FtsTermDict, int]:
     if toks_raw is None or counts is None or offsets is None \
             or len(offsets) != len(counts):
         raise LanceNativeError(f"{path}: incomplete postings metadata")
-    tokens = _decode_fts_tokens(toks_raw, len(counts))
+    tokens = _dec_values_block("string", toks_raw, len(counts))
     prefix = None
     if skip_counts is not None and skip_addrs is not None \
             and skip_cumtf is not None:
@@ -9437,7 +9417,8 @@ def _fts_fuzzy_scan_file(path: str, specs: list) -> tuple:
             else mn - d <= len(w) <= mx + d    # fuzzy length band
             for w, d in specs):
         return {}, 0
-    tokens = _decode_fts_tokens(toks_raw, len(_varints_np(counts_raw)))
+    tokens = _dec_values_block(
+        "string", toks_raw, len(_packed_varints(counts_raw)))
     matches = {}
     for wi, (w, d) in enumerate(specs):
         got = _fts_editk_filter(w, tokens, d)
@@ -10525,14 +10506,7 @@ def native_fts_search(root: str, column: str, query: str, k: int = 10,
     if not ops or idx.n_docs == 0:
         return [], stats
     d = os.path.dirname(idx.path)
-    touched: dict[str, FtsTermDict] = {}
-
-    def _locate(path):
-        if path not in touched:
-            touched[path], cold = _fts_postings_locate(path)
-            stats["files_opened"] += 1
-            stats["dicts_decoded"] += cold
-        return touched[path]
+    _locate = _postings_locator(stats)
 
     # fuzzy expansion over the indexed VOCABULARY — streamed per
     # bucket file with length fences + a vectorized filter, handed to
@@ -11149,6 +11123,7 @@ def native_bitmap_lookup(root: str, column: str, values,
             f"no bitmap (keyword-v1) index on {column!r} — build one "
             "with write_native_bitmap_index")
     d = os.path.dirname(idx.path)
+    locate = _postings_locator()
     parts: list = []
     for v in values:
         if v is None:
@@ -11159,7 +11134,7 @@ def native_bitmap_lookup(root: str, column: str, values,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            loc = _fts_postings_locate(path)[0].loc(t)
+            loc = locate(path).loc(t)
             if loc is None:
                 continue
             addrs, _tfs = _fts_read_postings_range(
@@ -11217,6 +11192,7 @@ def native_label_lookup(root: str, column: str, values,
             f"no label (label-v1) index on {column!r} — build one "
             "with write_native_label_index")
     d = os.path.dirname(idx.path)
+    locate = _postings_locator()
     per_value: list = []
     for v in values:
         t = str(v)
@@ -11226,7 +11202,7 @@ def native_label_lookup(root: str, column: str, values,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            loc = _fts_postings_locate(path)[0].loc(t)
+            loc = locate(path).loc(t)
             if loc is None:
                 continue
             addrs, _tfs = _fts_read_postings_range(
@@ -11311,6 +11287,7 @@ def native_ngram_lookup(root: str, column: str, needle: str,
         return None, idx.covered_fragments
     grams = _fts_tokenize(needle, "ngram-v1")
     d = os.path.dirname(idx.path)
+    locate = _postings_locator()
     # Meta pass: per-gram (path, loc, skips) slices + total counts —
     # the access decision happens before any posting byte is read.
     per_gram: list[tuple[int, list]] = []
@@ -11322,7 +11299,7 @@ def native_ngram_lookup(root: str, column: str, needle: str,
             if not run[b]:
                 continue
             path = os.path.join(d, run[b])
-            td = _fts_postings_locate(path)[0]
+            td = locate(path)
             loc = td.loc(g)
             if loc is None:
                 continue
@@ -11528,7 +11505,8 @@ def native_fts_search_fresh(root: str, column: str, query: str,
     stats = {"terms": len(terms), "covered": len(covered),
              "uncovered": len(uncovered), "delta_matches": len(delta_rows),
              "operands": len(ops), "require_all": require_all,
-             "excludes": len(excludes), "dicts_decoded": 0}
+             "excludes": len(excludes), "files_opened": 0,
+             "dicts_decoded": 0}
     if n_docs == 0:
         return [], stats
     n = float(n_docs)
@@ -11562,13 +11540,7 @@ def native_fts_search_fresh(root: str, column: str, query: str,
         for t in terms}
     if idx is not None:
         d = os.path.dirname(idx.path)
-        touched: dict[str, FtsTermDict] = {}
-
-        def _locate(path):
-            if path not in touched:
-                touched[path], cold = _fts_postings_locate(path)
-                stats["dicts_decoded"] += cold
-            return touched[path]
+        _locate = _postings_locator(stats)
 
         if fuzzy_ops:  # expansion over the covered arm's vocabulary —
             # streamed + fenced + vectorized, distributed past the

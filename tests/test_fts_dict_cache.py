@@ -1,8 +1,9 @@
 """The decoded postings-dictionary LRU (format/lance_native.py
-``_fts_postings_locate``): the cached, vectorized decode locates exactly
-like the per-call string-parse decode it replaced, cached arrays are
-read-only and bounded by a byte budget, and a cache hit never serves a
-stale dictionary or skips a deletion mask."""
+``_fts_postings_locate``): the cached decode locates exactly like the
+per-call string-parse decode it replaced, cached arrays are read-only
+and bounded by a byte budget, a cache hit never serves a stale
+dictionary or skips a deletion mask, and a lookup reads each
+dictionary once per call on remote paths, which bypass the cache."""
 
 from __future__ import annotations
 
@@ -130,37 +131,6 @@ def test_cached_locate_equals_string_parse_reference(tmp_path):
         assert td.skips("absent-token") is None
         n_tokens += len(want)
     assert n_tokens > 400
-
-
-def test_varint_decode_matches_scalar_and_refuses_bad_input():
-    rng = np.random.default_rng(2)
-    vals = [0, 1, 127, 128, 300, 16383, 16384, (1 << 63) - 1] + [
-        int(v) for v in rng.integers(0, 1 << 40, 200)]
-    buf = b"".join(ln._enc_varint(v) for v in vals)
-    assert ln._varints_np(buf).tolist() == ln._packed_varints(buf) == vals
-    assert ln._varints_np(b"").tolist() == []
-    with pytest.raises(ln.LanceNativeError, match="truncated"):
-        ln._varints_np(buf + b"\x80")
-    with pytest.raises(ln.LanceNativeError, match="overlong"):
-        ln._varints_np(b"\xff" * 10 + b"\x01")
-    with pytest.raises(ln.LanceNativeError, match="overlong"):
-        ln._varints_np(b"\xff" * 9 + b"\x02")
-    with pytest.raises(ln.LanceNativeError, match="out of range"):
-        ln._varints_np(b"\xff" * 9 + b"\x01")
-
-
-def test_token_decode_refuses_corrupt_block():
-    block = ln._enc_values_block("string", ["a", "bc", "naïve"])
-    assert ln._decode_fts_tokens(block, 3) == ["a", "bc", "naïve"]
-    assert ln._decode_fts_tokens(
-        ln._enc_values_block("string", []), 0) == []
-    bad_utf8 = block[:-1] + b"\xff"
-    with pytest.raises(ln.LanceNativeError, match="corrupt"):
-        ln._decode_fts_tokens(bad_utf8, 3)
-    with pytest.raises(ln.LanceNativeError, match="corrupt"):
-        ln._decode_fts_tokens(block[:-2], 3)  # offsets past the data
-    with pytest.raises(ln.LanceNativeError, match="truncated"):
-        ln._decode_fts_tokens(block[:6], 3)
 
 
 def test_cached_arrays_are_read_only(tmp_path):
@@ -333,3 +303,48 @@ def test_fts_index_metadata_is_cached_and_new_indexes_are_seen(tmp_path):
         with pytest.raises(ln.LanceNativeError, match="LANC footer"):
             ln.read_native_fts_index(p)
     assert ln.latest_native_fts_index(root, "text") is idx
+
+
+def test_remote_lookups_decode_each_dictionary_once_per_call(monkeypatch):
+    """Remote paths bypass the process-wide cache; the per-call memo
+    still reads each touched postings dictionary once per call, however
+    many values or grams land in it."""
+    from lance_trino_spark.format import native_io as nio
+    from lance_trino_spark.format.backend import MemoryObjectStore
+
+    store = MemoryObjectStore()
+    root = "memory://dictbucket/t.lance"
+    nio.register_object_store_root("memory://dictbucket", store)
+    try:
+        ln.write_native_dataset(root, {
+            "k": list(range(60)),
+            "lab": [f"g{i % 6}" for i in range(60)],
+            "s": [f"the quick brown fox {i}" for i in range(60)]})
+        ln.write_native_bitmap_index(root, "lab", n_buckets=1)
+        ln.write_native_ngram_index(root, "s", n_buckets=1)
+        ln.append_native_rows(root, {
+            "k": [60], "lab": ["g1"], "s": ["quick brownie"]})
+        ln.extend_native_fts_index(root, "lab", analyzer="keyword-v1")
+        ln.extend_native_fts_index(root, "s", analyzer="ngram-v1")
+        reads: list[str] = []
+        decode = ln._decode_fts_dict
+
+        def counting(path):
+            reads.append(path)
+            return decode(path)
+
+        monkeypatch.setattr(ln, "_decode_fts_dict", counting)
+        for _ in range(2):  # remote: no hit across calls either
+            rows, _cov = ln.native_bitmap_lookup(
+                root, "lab", ["g0", "g1", "g2", "g3", "absent"])
+            assert sum(len(r) for r in rows.values()) == 41
+            assert len(reads) == len(set(reads)) == 2  # one per run
+            reads.clear()
+        idx = ln.latest_native_ngram_index(root, "s")
+        assert idx.n_runs == 2
+        cands, _cov = ln.native_ngram_lookup(root, "s", "quick brown")
+        assert len(ln._fts_tokenize("quick brown", "ngram-v1")) > 5
+        assert len(cands) == 61
+        assert len(reads) == len(set(reads)) == 2
+    finally:
+        nio.unregister_object_store_root("memory://dictbucket")
