@@ -795,34 +795,23 @@ class LanceCatalog:
             import shutil as _sh
 
             from .format.lance_native import (
-                list_native_fts_indices,
-                list_native_hnsw_indices,
-                list_native_scalar_indices,
-                list_native_vector_indices,
+                INVERTED_FAMILIES,
+                VECTOR_FAMILIES,
+                list_native_indices,
             )
 
             # DROP VECTOR/FTS INDEX must target THAT kind's sidecars —
             # when several index kinds exist on one column, reaping the
             # scalar set for a vector drop is a destructive wrong-target
-            # delete.
+            # delete. VECTOR reaches every vector family (IVF_PQ, HNSW,
+            # IVF_HNSW); FTS every inverted one (FTS, BITMAP,
+            # LABEL_LIST, NGRAM).
             kind = ("vector" if m.group("vec")
                     else "fts" if m.group("fts") else "scalar")
-            lister = (list_native_vector_indices if m.group("vec")
-                      else list_native_fts_indices if m.group("fts")
-                      else list_native_scalar_indices)
-            victims = [i for i in lister(np_) if i.column == col]
-            if m.group("vec"):
-                # every vector family: IVF sidecars, flat HNSW, and
-                # the IVF_HNSW composite (r14)
-                from .format.lance_native import (
-                    list_native_ivf_hnsw_indices,
-                )
-
-                victims += [i for i in list_native_hnsw_indices(np_)
-                            if i.column == col]
-                victims += [
-                    i for i in list_native_ivf_hnsw_indices(np_)
-                    if i.column == col]
+            fams = {"vector": VECTOR_FAMILIES, "scalar": "btree",
+                    "fts": INVERTED_FAMILIES}[kind]
+            victims = [i for i in list_native_indices(np_, fams)
+                       if i.column == col]
             if not victims:
                 raise CatalogError(
                     f"no native {kind} index on {ns}.{tbl}({col})")
@@ -975,47 +964,27 @@ class LanceCatalog:
         NGRAM / FTS / IVF_PQ / HNSW / IVF_HNSW), column, a family-specific
         detail string, covered-fragment count, and the dataset version
         the index was built at. The Lance SDK's `list_indices()`
-        surface as SQL; own-format tables list their manifest-property
+        surface as SQL: native tables read the one index registry
+        (`lance_native.list_native_indices`, one record per `_indices/`
+        directory); own-format tables list their manifest-property
         index registrations instead."""
         ns, tbl = m.group("ns"), m.group("tbl")
         np_ = self._native(ns, tbl)
         rows: list[tuple] = []
         if np_ is not None:
             from .format.lance_native import (
-                list_native_fts_indices,
-                list_native_hnsw_indices,
-                list_native_ivf_hnsw_indices,
-                list_native_scalar_indices,
-                list_native_vector_indices,
+                list_native_indices,
                 native_index_coverage,
             )
 
-            for i in list_native_scalar_indices(np_):
+            # rows grouped BTREE, the inverted families (by version
+            # among themselves), IVF_PQ, HNSW, IVF_HNSW
+            group = {"btree": 0, "ivf_pq": 2, "hnsw": 3, "ivf_hnsw": 4}
+            for i in sorted(list_native_indices(np_),
+                            key=lambda i: group.get(i.family, 1)):
                 rows.append((
-                    "BTREE", i.column, f"kind={i.kind}",
-                    len(i.covered_fragments), i.dataset_version))
-            for i in list_native_fts_indices(np_):
-                fam = {"keyword-v1": "BITMAP",
-                       "label-v1": "LABEL_LIST",
-                       "ngram-v1": "NGRAM"}.get(i.analyzer, "FTS")
-                rows.append((
-                    fam, i.column, f"analyzer={i.analyzer}",
-                    len(i.covered_fragments), i.dataset_version))
-            for i in list_native_vector_indices(np_):
-                rows.append((
-                    "IVF_PQ", i.column,
-                    f"n_cells={i.n_cells},nsub={i.pq_nsub}",
-                    len(native_index_coverage(np_, i)),
-                    i.dataset_version))
-            for i in list_native_hnsw_indices(np_):
-                rows.append((
-                    "HNSW", i.column, f"m={i.m}",
-                    len(i.covered_fragments), i.dataset_version))
-            for i in list_native_ivf_hnsw_indices(np_):
-                rows.append((
-                    "IVF_HNSW", i.column,
-                    f"n_cells={i.n_cells},m={i.m}",
-                    len(i.covered_fragments), i.dataset_version))
+                    i.family.upper(), i.column, i.detail,
+                    len(native_index_coverage(np_, i)), i.dataset_version))
         else:
             ds = self.load(ns, tbl)
             p = ds.manifest.properties
@@ -1254,8 +1223,8 @@ class LanceCatalog:
             # stale ANN. WHERE prefilter is TRUE-prefilter (allowed sets
             # computed before any top-k; scalar indexes compose).
             from .format.lance_native import (
-                latest_native_hnsw_index, latest_native_ivf_hnsw_index,
-                latest_native_vector_index, native_hnsw_search_fresh,
+                VECTOR_FAMILIES, latest_native_index,
+                native_hnsw_search_fresh,
                 native_ivf_hnsw_search_fresh, native_spark_schema,
                 native_vector_search_fresh, read_native_fragment,
                 read_native_manifest)
@@ -1273,14 +1242,8 @@ class LanceCatalog:
             # wins — a later HNSW/IVF_HNSW build supersedes an earlier
             # IVF for SQL search routing (and vice versa); the graph
             # families emit cosine, IVF_PQ emits l2_distance
-            fams = [
-                ("ivf", latest_native_vector_index(np_, col)),
-                ("hnsw", latest_native_hnsw_index(np_, col)),
-                ("ivf_hnsw", latest_native_ivf_hnsw_index(np_, col)),
-            ]
-            live_fams = [(f, i) for f, i in fams if i is not None]
-            fam = (max(live_fams, key=lambda t: t[1].dataset_version)[0]
-                   if live_fams else "ivf")
+            newest = latest_native_index(np_, col, VECTOR_FAMILIES)
+            fam = newest.family if newest is not None else "ivf_pq"
             if fam == "hnsw":
                 res = native_hnsw_search_fresh(
                     np_, col, qvecs, k=k, spark=self.spark,

@@ -99,16 +99,6 @@ class DirectoryBackend:
         with open(p) as f:
             return json.load(f)
 
-    def manifest_fingerprint(self, root: str, version: int):
-        """Cheap identity for the manifest-handle cache (A18): one stat
-        instead of a full JSON read+parse. Changes iff the file is replaced
-        (DROP + re-CREATE at the same path reusing version numbers)."""
-        try:
-            st = os.stat(self._mpath(root, version))
-        except OSError:
-            return None
-        return (st.st_ino, st.st_mtime_ns, st.st_size)
-
     def commit_manifest_json(self, root: str, version: int, payload: dict) -> None:
         vdir = self._vdir(root)
         os.makedirs(vdir, exist_ok=True)
@@ -474,11 +464,6 @@ class ObjectStoreBackend:
                 f"no version {version} at {root}"
             )
         return json.loads(data)
-
-    def manifest_fingerprint(self, root: str, version: int):
-        # content-addressed: object stores have no inode/mtime identity
-        data = self.store.get(self._key(root, version))
-        return None if data is None else hash(data)
 
     def commit_manifest_json(self, root: str, version: int, payload: dict) -> None:
         blob = json.dumps(payload).encode()

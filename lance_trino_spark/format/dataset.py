@@ -757,23 +757,9 @@ class LanceDataset:
             sum(f.physical_rows for f in self.manifest.fragments),
             [(f.path,) for f in self.manifest.fragments], "path string",
             lambda p: build_fragment_index(root, p, column))
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        indexed = sorted(set(base.properties.get(INDEX_PROP, [])) | {column})
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=base.schema_json,
-            fragments=base.fragments,
-            operation="create_index",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id,
-            properties={**base.properties, INDEX_PROP: indexed},
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+        return self._commit_next("create_index", lambda base: {
+            "properties": {**base.properties, INDEX_PROP: sorted(
+                set(base.properties.get(INDEX_PROP, [])) | {column})}})
 
     # -------------------------------------------------------------- tags
     def create_tag(self, name: str, version: int | None = None) -> None:
@@ -802,22 +788,10 @@ class LanceDataset:
         everything) and the restore itself is just one manifest write —
         no data movement at any scale. Conflict-checked like every commit."""
         target = read_manifest(self.path, version)  # raises if unknown
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=target.schema_json,
-            fragments=target.fragments,
-            operation="restore",
-            read_version=version,
-            max_fragment_id=base.max_fragment_id,
-            properties=target.properties,
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+        return self._commit_next("restore", lambda base: {
+            "schema_json": target.schema_json,
+            "fragments": target.fragments, "read_version": version,
+            "properties": target.properties})
 
     # ----------------------------------------------------- schema evolution
     def add_column(self, name: str, dtype) -> "LanceDataset":
@@ -843,35 +817,24 @@ class LanceDataset:
             parsed = StructType.fromDDL(f"`{name}` {dtype}")
             field_json = parsed.fields[0].jsonValue()
             field_json["nullable"] = True
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        existing = {f["name"] for f in base.schema_json["fields"]}
-        if name in existing:
-            raise ValueError(f"column {name!r} already exists")
-        retired = base.properties.get(RETIRED_PROP, [])
-        if name in retired:
-            raise ValueError(
-                f"column name {name!r} was previously dropped; re-adding it "
-                "would resurrect the old column's values from pre-drop "
-                "fragment files (parquet resolves columns by name) — pick a "
-                "fresh name"
-            )
-        new_schema = {**base.schema_json,
-                      "fields": base.schema_json["fields"] + [field_json]}
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=new_schema,
-            fragments=base.fragments,
-            operation="alter",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id,
-            properties=base.properties,
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+
+        def change(base):
+            existing = {f["name"] for f in base.schema_json["fields"]}
+            if name in existing:
+                raise ValueError(f"column {name!r} already exists")
+            retired = base.properties.get(RETIRED_PROP, [])
+            if name in retired:
+                raise ValueError(
+                    f"column name {name!r} was previously dropped; re-adding "
+                    "it would resurrect the old column's values from "
+                    "pre-drop fragment files (parquet resolves columns by "
+                    "name) — pick a fresh name"
+                )
+            return {"schema_json": {
+                **base.schema_json,
+                "fields": base.schema_json["fields"] + [field_json]}}
+
+        return self._commit_next("alter", change)
 
     def drop_column(self, name: str) -> "LanceDataset":
         """ALTER TABLE DROP COLUMN — metadata-only: the column leaves the
@@ -884,40 +847,29 @@ class LanceDataset:
         from .index import INDEX_PROP
         from .vector_index import VINDEX_PROP
 
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
+        def change(base):
+            fields = base.schema_json["fields"]
+            if name not in {f["name"] for f in fields}:
+                raise ValueError(f"no such column: {name!r}")
+            if len(fields) == 1:
+                raise ValueError("cannot drop the only column")
+            if name in (base.properties.get(BLOB_PROP) or []):
+                raise ValueError(f"cannot drop blob column {name!r}")
+            props = dict(base.properties)
+            props[RETIRED_PROP] = sorted(
+                set(props.get(RETIRED_PROP, [])) | {name}
             )
-        fields = base.schema_json["fields"]
-        if name not in {f["name"] for f in fields}:
-            raise ValueError(f"no such column: {name!r}")
-        if len(fields) == 1:
-            raise ValueError("cannot drop the only column")
-        if name in (base.properties.get(BLOB_PROP) or []):
-            raise ValueError(f"cannot drop blob column {name!r}")
-        props = dict(base.properties)
-        props[RETIRED_PROP] = sorted(
-            set(props.get(RETIRED_PROP, [])) | {name}
-        )
-        if name in (props.get(INDEX_PROP) or []):
-            props[INDEX_PROP] = [c for c in props[INDEX_PROP] if c != name]
-        if name in (props.get(VINDEX_PROP) or {}):
-            props[VINDEX_PROP] = {
-                k: v for k, v in props[VINDEX_PROP].items() if k != name
-            }
-        m = Manifest(
-            version=base.version + 1,
-            schema_json={**base.schema_json,
-                         "fields": [f for f in fields if f["name"] != name]},
-            fragments=base.fragments,
-            operation="alter",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id,
-            properties=props,
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+            if name in (props.get(INDEX_PROP) or []):
+                props[INDEX_PROP] = [c for c in props[INDEX_PROP] if c != name]
+            if name in (props.get(VINDEX_PROP) or {}):
+                props[VINDEX_PROP] = {
+                    k: v for k, v in props[VINDEX_PROP].items() if k != name
+                }
+            return {"properties": props, "schema_json": {
+                **base.schema_json,
+                "fields": [f for f in fields if f["name"] != name]}}
+
+        return self._commit_next("alter", change)
 
     def drop_scalar_index(self, spark: SparkSession, column: str) -> "LanceDataset":
         """Unregister `column`'s scalar index and delete its sidecars (the
@@ -927,28 +879,18 @@ class LanceDataset:
 
         from .index import INDEX_PROP, INDICES_DIR
 
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        cols = base.properties.get(INDEX_PROP, [])
-        if column not in cols:
-            raise ValueError(f"no scalar index on column {column!r}")
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=base.schema_json,
-            fragments=base.fragments,
-            operation="drop_index",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id,
-            properties={**base.properties,
-                        INDEX_PROP: [c for c in cols if c != column]},
-        )
-        commit_manifest(self.path, m)
+        def change(base):
+            cols = base.properties.get(INDEX_PROP, [])
+            if column not in cols:
+                raise ValueError(f"no scalar index on column {column!r}")
+            return {"properties": {
+                **base.properties,
+                INDEX_PROP: [c for c in cols if c != column]}}
+
+        ds = self._commit_next("drop_index", change)
         _sh.rmtree(os.path.join(self.path, INDICES_DIR, column),
                    ignore_errors=True)
-        return LanceDataset(self.path, m)
+        return ds
 
     def drop_vector_index(self, spark: SparkSession, column: str) -> "LanceDataset":
         """Unregister `column`'s vector index and delete codebooks +
@@ -957,32 +899,22 @@ class LanceDataset:
 
         from .vector_index import VINDEX_PROP, vindex_dir
 
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        registered = dict(base.properties.get(VINDEX_PROP, {}))
-        if column not in registered:
-            raise ValueError(f"no vector index on column {column!r}")
-        registered.pop(column)
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=base.schema_json,
-            fragments=base.fragments,
-            operation="drop_index",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id,
-            properties={**base.properties, VINDEX_PROP: registered},
-        )
-        commit_manifest(self.path, m)
+        def change(base):
+            registered = dict(base.properties.get(VINDEX_PROP, {}))
+            if column not in registered:
+                raise ValueError(f"no vector index on column {column!r}")
+            registered.pop(column)
+            return {"properties": {**base.properties,
+                                   VINDEX_PROP: registered}}
+
+        ds = self._commit_next("drop_index", change)
         _sh.rmtree(os.path.join(self.path, vindex_dir(column)),
                    ignore_errors=True)
         from .index import INDICES_DIR as _IDX
 
         _sh.rmtree(os.path.join(self.path, _IDX, f"{column}.hnsw"),
                    ignore_errors=True)
-        return LanceDataset(self.path, m)
+        return ds
 
     # -------------------------------------------------------- vector index
     def create_vector_index(
@@ -1045,29 +977,11 @@ class LanceDataset:
                 lambda p, s, ns: build_fragment_hnsw(
                     root, p, column, hnsw_m, hnsw_ef_construction,
                     shard=int(s), n_shards=int(ns)))
-            base = read_manifest(self.path, latest_version(self.path))
-            if base.version != self.version:
-                raise CommitConflictError(
-                    f"dataset advanced to v{base.version} since "
-                    f"v{self.version} was read"
-                )
-            registered = dict(base.properties.get(VINDEX_PROP, {}))
-            registered[column] = {
+            return self._register_vector_index(column, {
                 "index_type": "HNSW", "m": int(hnsw_m),
                 "ef_construction": int(hnsw_ef_construction),
                 "metric": "cosine",
-            }
-            m = Manifest(
-                version=base.version + 1,
-                schema_json=base.schema_json,
-                fragments=base.fragments,
-                operation="create_index",
-                read_version=self.version,
-                max_fragment_id=base.max_fragment_id,
-                properties={**base.properties, VINDEX_PROP: registered},
-            )
-            commit_manifest(self.path, m)
-            return LanceDataset(self.path, m)
+            })
         # bounded, deterministic, deletion-aware training sample: fragments
         # in manifest order, first `sample` live rows — cost independent of
         # dataset size (the standard IVF recipe: FAISS/Lance sample too)
@@ -1101,24 +1015,14 @@ class LanceDataset:
             [(f.path,) for f in self.manifest.fragments], "path string",
             lambda p: build_fragment_postings(
                 root, p, column, centroids, pq_books))
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        registered = dict(base.properties.get(VINDEX_PROP, {}))
-        registered[column] = meta
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=base.schema_json,
-            fragments=base.fragments,
-            operation="create_index",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id,
-            properties={**base.properties, VINDEX_PROP: registered},
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+        return self._register_vector_index(column, meta)
+
+    def _register_vector_index(self, column: str, meta) -> "LanceDataset":
+        from .vector_index import VINDEX_PROP
+
+        return self._commit_next("create_index", lambda base: {
+            "properties": {**base.properties, VINDEX_PROP: {
+                **base.properties.get(VINDEX_PROP, {}), column: meta}}})
 
     def ensure_vector_index_files(self, spark: SparkSession) -> int:
         """Rebuild missing postings sidecars for every registered vector
@@ -1421,6 +1325,28 @@ class LanceDataset:
             out = out.drop("postings_read")
         return out.drop("row_index") if not with_io_stats else out
 
+    def _commit_next(self, operation: str, change) -> "LanceDataset":
+        """Conflict-checked commit of the version after this snapshot:
+        raise CommitConflictError when the dataset advanced since it was
+        read, else publish ``operation`` as version latest+1 with the
+        fields ``change(base)`` returns over the latest manifest's
+        schema, fragments, max_fragment_id and properties (read_version
+        = this snapshot). The retrying create/append paths commit on
+        their own."""
+        base = read_manifest(self.path, latest_version(self.path))
+        if base.version != self.version:
+            raise CommitConflictError(
+                f"dataset advanced to v{base.version} since v{self.version} was read"
+            )
+        m = Manifest(**{
+            "version": base.version + 1, "operation": operation,
+            "schema_json": base.schema_json, "fragments": base.fragments,
+            "read_version": self.version,
+            "max_fragment_id": base.max_fragment_id,
+            "properties": base.properties, **change(base)})
+        commit_manifest(self.path, m)
+        return LanceDataset(self.path, m)
+
     def commit_overwrite(
         self, fragment_files: list[tuple[str, int]]
     ) -> "LanceDataset":
@@ -1428,23 +1354,9 @@ class LanceDataset:
         version references only `fragment_files`; schema and properties
         carry over. Same conflict semantics as commit_update — any
         concurrent write invalidates the rewrite (A17)."""
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
         fragments = as_fragments(fragment_files)
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=base.schema_json,
-            fragments=fragments,
-            operation="overwrite",
-            read_version=self.version,
-            max_fragment_id=len(fragments) - 1,
-            properties=base.properties,
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+        return self._commit_next("overwrite", lambda base: {
+            "fragments": fragments, "max_fragment_id": len(fragments) - 1})
 
     # ------------------------------------------------------- row-level (MoR)
     def commit_update(
@@ -1462,57 +1374,44 @@ class LanceDataset:
         """
         import pyarrow as pa
 
-        base = read_manifest(self.path, latest_version(self.path))
-        if base.version != self.version:
-            raise CommitConflictError(
-                f"dataset advanced to v{base.version} since v{self.version} was read"
-            )
-        frag_by_id = {f.id: f for f in base.fragments}
-        del_dir = os.path.join(self.path, DELETIONS_DIR)
-        os.makedirs(del_dir, exist_ok=True)
+        def change(base):
+            frag_by_id = {f.id: f for f in base.fragments}
+            del_dir = os.path.join(self.path, DELETIONS_DIR)
+            os.makedirs(del_dir, exist_ok=True)
+            removed: set[int] = set()
+            for fid, rows in deletions.items():
+                if fid not in frag_by_id:
+                    raise ValueError(f"unknown fragment id {fid}")
+                f = frag_by_id[fid]
+                existing: set[int] = set()
+                if f.deletion:
+                    t = pq.read_table(os.path.join(self.path, f.deletion.path))
+                    existing = set(t.column("row_index").to_pylist())
+                merged = existing | set(rows)
+                if len(merged) >= f.physical_rows:
+                    removed.add(fid)  # fully deleted fragment drops out
+                    continue
+                rel = os.path.join(DELETIONS_DIR, f"{uuid.uuid4().hex}.parquet")
+                pq.write_table(
+                    pa.table(
+                        {
+                            "fragment_id": pa.array([fid] * len(merged), pa.int64()),
+                            "row_index": pa.array(sorted(merged), pa.int64()),
+                        }
+                    ),
+                    os.path.join(self.path, rel),
+                )
+                frag_by_id[fid] = Fragment(
+                    f.id, f.path, f.physical_rows, DeletionFile(rel, len(merged))
+                )
 
-        new_fragments: list[Fragment] = []
-        removed: set[int] = set()
-        for fid, rows in deletions.items():
-            if fid not in frag_by_id:
-                raise ValueError(f"unknown fragment id {fid}")
-            f = frag_by_id[fid]
-            existing: set[int] = set()
-            if f.deletion:
-                t = pq.read_table(os.path.join(self.path, f.deletion.path))
-                existing = set(t.column("row_index").to_pylist())
-            merged = existing | set(rows)
-            if len(merged) >= f.physical_rows:
-                removed.add(fid)  # fully deleted fragment drops out
-                continue
-            rel = os.path.join(DELETIONS_DIR, f"{uuid.uuid4().hex}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "fragment_id": pa.array([fid] * len(merged), pa.int64()),
-                        "row_index": pa.array(sorted(merged), pa.int64()),
-                    }
-                ),
-                os.path.join(self.path, rel),
-            )
-            frag_by_id[fid] = Fragment(
-                f.id, f.path, f.physical_rows, DeletionFile(rel, len(merged))
-            )
+            kept = [frag_by_id[f.id] for f in base.fragments if f.id not in removed]
+            next_id = base.max_fragment_id + 1
+            appended = as_fragments(new_fragment_files or [], next_id)
+            return {"fragments": kept + appended,
+                    "max_fragment_id": base.max_fragment_id + len(appended)}
 
-        kept = [frag_by_id[f.id] for f in base.fragments if f.id not in removed]
-        next_id = base.max_fragment_id + 1
-        appended = as_fragments(new_fragment_files or [], next_id)
-        m = Manifest(
-            version=base.version + 1,
-            schema_json=base.schema_json,
-            fragments=kept + appended,
-            operation="update",
-            read_version=self.version,
-            max_fragment_id=base.max_fragment_id + len(appended),
-            properties=base.properties,
-        )
-        commit_manifest(self.path, m)
-        return LanceDataset(self.path, m)
+        return self._commit_next("update", change)
 
 
 def table_changes(

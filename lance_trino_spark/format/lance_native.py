@@ -4655,53 +4655,27 @@ def native_cleanup_old_versions(
         if not n.startswith(".") and n not in live_dv:
             nio.delete(os.path.join(deldir, n))
             out["removed_deletion_files"] += 1
-    # scalar sidecars: reap DEAD-coverage ones and SUPERSEDED ones (an
-    # extend chain leaves a trail of older runs — a newer same-column
-    # index whose live coverage is a superset makes the older
-    # unreachable: probes consult the newest covering index, and
-    # exactness never rests on a sidecar). Ties (extend + rebuild at one
-    # version) break on directory name, so exactly one twin survives.
-    scalars = list(list_native_scalar_indices(root))
-
-    def _skey(i):
-        return (i.dataset_version, os.path.dirname(i.path))
-
-    for i in scalars:
+    # index sidecars: reap DEAD-coverage ones and SUPERSEDED ones — a
+    # newer index of the same family on the same column whose live
+    # coverage is a superset (an extend chain leaves a trail of older
+    # runs; probes consult the newest covering index, and exactness
+    # never rests on a sidecar). Ties (extend + rebuild at one version)
+    # break on directory name, so exactly one twin survives. Families
+    # never supersede each other: an NGRAM or BITMAP index on a column
+    # does not make its FTS index unreachable. Unknown coverage (an
+    # SDK-written IVF index) is conservatively kept.
+    indexes = list_native_indices(root)
+    known = [i for i in indexes if i.covered_fragments is not None]
+    for i in known:
         mine = i.covered_fragments & live_frags
         superseded = mine and any(
-            j.column == i.column and _skey(j) > _skey(i)
+            j.family == i.family and j.column == i.column
+            and _index_order(j) > _index_order(i)
             and mine <= (j.covered_fragments & live_frags)
-            for j in scalars
+            for j in known
         )
         if not mine or superseded:
             nio.rmtree(os.path.dirname(i.path))
-            out["removed_index_dirs"] += 1
-    # vector sidecars: index.idx carries no fragment coverage (it is the
-    # SDK's byte layout), but indexes built HERE drop a coverage.json
-    # next to it — reap those once none of their covered fragments
-    # survive, plus the superseded rule above; sidecar-less
-    # (SDK-written) indexes stay conservatively kept, as before.
-    import json as _json
-    idx_root = os.path.join(root, "_indices")
-    vecs = []  # (dname, kind, column, dataset_version, covered)
-    for dname in nio.listdir(idx_root):
-        cov_path = os.path.join(idx_root, dname, "coverage.json")
-        try:
-            cov = _json.loads(nio.read_text(cov_path))
-        except (ValueError, OSError):
-            continue  # no/unreadable sidecar: keep conservatively
-        vecs.append((dname, cov.get("kind", "vector"), cov.get("column"),
-                     int(cov.get("dataset_version", 0)),
-                     set(cov.get("fragments", []))))
-    for dname, kind, col, dv, covered in vecs:
-        mine = covered & live_frags
-        superseded = mine and any(
-            c2 == col and k2 == kind and (dv2, dn2) > (dv, dname)
-            and mine <= (cov2 & live_frags)
-            for dn2, k2, c2, dv2, cov2 in vecs
-        )
-        if not mine or superseded:
-            nio.rmtree(os.path.join(idx_root, dname))
             out["removed_index_dirs"] += 1
     # sharded-sidecar debris: shard files are staged executor-side BEFORE
     # the meta commit (the meta file IS the commit point, same stance as
@@ -4726,6 +4700,8 @@ def native_cleanup_old_versions(
         mt = nio.mtime(p)
         return mt is not None and (_now - mt) >= debris_grace_seconds
 
+    idx_root = os.path.join(root, "_indices")
+    files_of = {os.path.dirname(i.path): set(i.files) for i in indexes}
     for dname in nio.listdir(idx_root):
         ddir = os.path.join(idx_root, dname)
         names = set(nio.listdir(ddir))
@@ -4737,52 +4713,13 @@ def native_cleanup_old_versions(
         }
         if not shard_files:
             continue
-        if ("index.idx" not in names and "hnsw.json" not in names
-                and "ivf_hnsw.json" not in names):
+        if not names & {"index.idx", "hnsw.json", "ivf_hnsw.json"}:
             if all(_past_grace(os.path.join(ddir, nm)) for nm in names):
                 nio.rmtree(ddir)
                 out["removed_index_dirs"] += 1
             continue
-        referenced: set[str] = set()
-        if "hnsw.json" in names:
-            try:
-                referenced |= {
-                    s[3] for s in _json.loads(nio.read_text(
-                        os.path.join(ddir, "hnsw.json")))["shards"]}
-            except (ValueError, OSError, KeyError, IndexError):
-                referenced |= shard_files  # unreadable: keep all
-        if "ivf_hnsw.json" in names:
-            try:
-                referenced |= {
-                    run[0] for c in _json.loads(nio.read_text(
-                        os.path.join(ddir, "ivf_hnsw.json")))["cells"]
-                    for run in c}
-            except (ValueError, OSError, KeyError, IndexError):
-                referenced |= shard_files  # unreadable: keep all
-        if "index.idx" in names:
-            try:
-                referenced |= set(read_native_scalar_index(
-                    os.path.join(ddir, "index.idx")).shard_names)
-            except LanceNativeError:
-                pass
-            try:
-                fts = read_native_fts_index(
-                    os.path.join(ddir, "index.idx"))
-                referenced |= {nm for run in fts.run_files for nm in run
-                               if nm}
-                referenced |= {nm for _fid, nm in fts.doclen_files}
-            except LanceNativeError:
-                pass
-        if "shards.json" in names:
-            try:
-                for c in _json.loads(nio.read_text(
-                        os.path.join(ddir, "shards.json")))["cells"]:
-                    fs = c.get("files")
-                    if fs is None:
-                        fs = [c["file"]] if c.get("file") else []
-                    referenced.update(fs)
-            except (ValueError, OSError, KeyError):
-                referenced |= shard_files  # unreadable: keep conservatively
+        # a meta no parser accepts keeps every file it might name
+        referenced = files_of.get(ddir, shard_files)
         for nm in shard_files - referenced:
             p = os.path.join(ddir, nm)
             if _past_grace(p):
@@ -4919,7 +4856,7 @@ def conform_native_table(table, spark_schema):
 # ---------------------------------------------------------------------------
 
 
-@dataclass
+@dataclass(frozen=True)
 class NativeVectorIndex:
     path: str               # absolute path of index.idx
     name: str
@@ -4946,10 +4883,23 @@ class NativeVectorIndex:
     # compaction trigger; NOT the per-cell file count, which the
     # block sub-sharding inflates on skewed corpora.
     ivf_runs: int = 1
+    # fragment ids of the coverage.json sidecar; None for an SDK-written
+    # index, which has none (native_index_coverage falls back to the
+    # manifest at dataset_version)
+    covered_fragments: frozenset | None = None
+    family = "ivf_pq"
 
     @property
     def n_cells(self) -> int:
         return len(self.part_lengths)
+
+    @property
+    def files(self) -> tuple:
+        return tuple(nm for names in self.cell_shards for nm in names)
+
+    @property
+    def detail(self) -> str:
+        return f"n_cells={self.n_cells},nsub={self.pq_nsub}"
 
 
 def _index_meta(path: str) -> tuple[bytes, int]:
@@ -4971,26 +4921,16 @@ def _index_meta(path: str) -> tuple[bytes, int]:
     return metar[4:4 + ln], pos
 
 
-def read_native_vector_index(path: str) -> NativeVectorIndex:
-    """Parse one `_indices/<uuid>/index.idx` (metadata only: footer seek +
-    proto — partition bodies are read later, per probed cell)."""
+def _vector_index_from_proto(path: str, name: str, column: str,
+                             dsver: int, impl: bytes, _pos: int) -> tuple:
+    """(NativeVectorIndex, nbytes) from the Index proto's VectorIndex
+    details plus the repo's shards.json / coverage.json sidecars, both
+    written BEFORE index.idx (the commit point), so a record cached on
+    index.idx's stat never pairs it with older sidecars."""
+    import json as _json
+
     import numpy as np
 
-    meta = _index_meta(path)[0]
-    name = column = None
-    dsver = 0
-    impl = None
-    for f, _wt, v in pb_items(meta):
-        if f == 1:
-            name = v.decode()
-        elif f == 2:
-            column = v.decode()
-        elif f == 3:
-            dsver = v
-        elif f == 5:
-            impl = v
-    if impl is None:
-        raise LanceNativeError(f"{path}: no VectorIndex implementation")
     dim = None
     ivf = pq = None
     for f, _wt, v in pb_items(impl):
@@ -5037,12 +4977,15 @@ def read_native_vector_index(path: str) -> NativeVectorIndex:
     if len(offs) != len(lens) or cent.shape[0] != len(lens):
         raise LanceNativeError(f"{path}: IVF partition metadata mismatch")
     subdim = dim // nsub
+    d = os.path.dirname(path)
     cell_shards: tuple = ()
+    ivf_runs = 1  # single-file layout (SDK or pre-sharding build)
+    covered = None
+    side = 0
     try:
-        import json as _json
-
-        sj = _json.loads(nio.read_text(
-            os.path.join(os.path.dirname(path), "shards.json")))
+        raw = nio.read_text(os.path.join(d, "shards.json"))
+        side += len(raw)
+        sj = _json.loads(raw)
         by_cell = {}
         for c in sj["cells"]:
             files = c.get("files")
@@ -5054,32 +4997,33 @@ def read_native_vector_index(path: str) -> NativeVectorIndex:
         # pre-r13 metas lack "runs": files-per-cell was 1:1 with runs
         ivf_runs = int(sj.get("runs") or max(
             (len(fs) for fs in cell_shards), default=1) or 1)
-    except (FileNotFoundError, ValueError, KeyError):
-        ivf_runs = 1  # single-file layout (SDK or pre-sharding build)
-    return NativeVectorIndex(
+    except FileNotFoundError:
+        pass
+    except (ValueError, KeyError, TypeError) as e:
+        raise LanceNativeError(f"{path}: unreadable shards.json ({e})")
+    try:
+        raw = nio.read_text(os.path.join(d, "coverage.json"))
+        side += len(raw)
+        covered = frozenset(int(x) for x in _json.loads(raw)["fragments"])
+    except FileNotFoundError:
+        pass
+    except (ValueError, KeyError, TypeError) as e:
+        raise LanceNativeError(f"{path}: unreadable coverage.json ({e})")
+    idx = NativeVectorIndex(
         path=path, name=name, column=column, dataset_version=dsver, dim=dim,
         centroids=cent, part_offsets=list(offs), part_lengths=list(lens),
         pq_nbits=nbits, pq_nsub=nsub,
         pq_codebook=codebook.reshape(nsub, 256, subdim),
         cell_shards=cell_shards, ivf_runs=ivf_runs,
+        covered_fragments=covered,
     )
+    # centroids and codebook are views of the proto bytes
+    return idx, 2048 + 2 * len(impl) + 9 * side
 
 
 def list_native_vector_indices(root: str) -> list[NativeVectorIndex]:
-    """Every parseable `_indices/<uuid>/index.idx` under the dataset,
-    sorted by dataset_version ascending (the latest covering index for a
-    column is the last match)."""
-    idx_dir = os.path.join(root, "_indices")
-    out = []
-    for d in nio.listdir(idx_dir):
-        p = os.path.join(idx_dir, d, "index.idx")
-        if nio.exists(p):
-            try:
-                out.append(read_native_vector_index(p))
-            except LanceNativeError:
-                continue  # scalar (btree) sidecar — listed separately
-    out.sort(key=lambda i: i.dataset_version)
-    return out
+    """Every IVF_PQ index (`list_native_indices` order)."""
+    return list_native_indices(root, "ivf_pq")
 
 
 def _read_index_partition(index: NativeVectorIndex, cell: int):
@@ -5323,7 +5267,7 @@ def write_native_vector_index(
     spark=None,
 ) -> str:
     """Build and persist an IVF_PQ vector index in the REAL old-Lance
-    binary layout (the exact format read_native_vector_index parses off
+    binary layout (the exact format _vector_index_from_proto parses off
     test_table4's fixtures): train IVF centroids + residual-PQ codebooks
     on a bounded driver sample, encode every row, and write
     `_indices/<uuid>/index.idx`. Returns the index uuid.
@@ -5637,9 +5581,10 @@ def _write_ivf_sidecar(
     buckets, dataset_version: int, coverage_fragments,
 ) -> str:
     """Serialize per-cell (codes, addrs) buckets + trained tensors into a
-    new `_indices/<uuid>/index.idx` in the SDK binary layout, plus the
-    repo coverage sidecar. Serial fixture-scale path (the distributed
-    build and the extend write the SHARDED layout instead)."""
+    new `_indices/<uuid>/index.idx` in the SDK binary layout, after the
+    repo coverage sidecar (index.idx is the commit point). Serial
+    fixture-scale path (the distributed build and the extend write the
+    SHARDED layout instead)."""
     import uuid as uuidlib
 
     import numpy as np
@@ -5661,13 +5606,13 @@ def _write_ivf_sidecar(
 
     uid = str(uuidlib.uuid4())
     d = os.path.join(root, "_indices", uid)
+    _write_ivf_coverage(d, column, dataset_version, coverage_fragments)
     meta = _ivf_index_proto(
         column, cent, codebook, offsets, lengths, dataset_version)
     meta_pos = len(body)
     blob = bytes(body) + struct.pack("<I", len(meta)) + meta
     blob += struct.pack("<QHH", meta_pos, 0, 1) + b"LANC"
     nio.write_bytes(os.path.join(d, "index.idx"), blob)
-    _write_ivf_coverage(d, column, dataset_version, coverage_fragments)
     return uid
 
 
@@ -5737,7 +5682,8 @@ def _write_ivf_meta_sharded(
     _read_index_partition serves either layout with the same bound.
     ``cell_files`` entries may be a single name, a list of names, or
     empty. Atomic-replace semantics throughout: the in-place extend
-    rewrites these same three files."""
+    rewrites these same three files, index.idx LAST — it is the commit
+    point the index registry caches on."""
     import json as _json
 
     d = os.path.join(root, "_indices", uid)
@@ -5752,13 +5698,13 @@ def _write_ivf_meta_sharded(
             for c in range(len(lengths))
         ],
     }).encode())
+    _write_ivf_coverage(d, column, dataset_version, coverage_fragments)
     meta = _ivf_index_proto(
         column, cent, codebook, [0] * len(lengths), lengths,
         dataset_version)
     blob = struct.pack("<I", len(meta)) + meta
     blob += struct.pack("<QHH", 0, 0, 1) + b"LANC"
     nio.replace_bytes(os.path.join(d, "index.idx"), blob)
-    _write_ivf_coverage(d, column, dataset_version, coverage_fragments)
     return uid
 
 
@@ -5834,7 +5780,7 @@ def extend_native_vector_index(root: str, column: str, spark=None
     fragments all died."""
     import numpy as np
 
-    idx = latest_native_vector_index(root, column)
+    idx = latest_native_index(root, column, "ivf_pq")
     if idx is None:
         raise LanceNativeError(
             f"no vector index on {column!r} to extend — build one with "
@@ -6013,32 +5959,15 @@ def extend_native_vector_index(root: str, column: str, spark=None
         manifest.version, coverage)
 
 
-def native_index_coverage(root: str, index: NativeVectorIndex
-                          ) -> frozenset[int]:
-    """Fragment ids ``index`` was built over: the coverage.json sidecar
-    when present (repo-built indexes), else the fragment set of the
-    manifest at ``index.dataset_version`` — an SDK-built index has no
-    sidecar, but its build scanned exactly the fragments live at that
-    version, so the pinned manifest IS its coverage."""
-    import json as _json
-
-    cov_path = os.path.join(os.path.dirname(index.path), "coverage.json")
-    try:
-        return frozenset(
-            int(x) for x in _json.loads(nio.read_text(cov_path))["fragments"])
-    except FileNotFoundError:
-        pass
+def native_index_coverage(root: str, index) -> frozenset[int]:
+    """Fragment ids ``index`` was built over: its recorded coverage, or
+    for an SDK-built vector index (no coverage sidecar) the fragment set
+    of the manifest at ``index.dataset_version`` — its build scanned
+    exactly the fragments live at that version."""
+    if index.covered_fragments is not None:
+        return index.covered_fragments
     m = read_native_manifest(root, index.dataset_version)
     return frozenset(f.id for f in m.fragments)
-
-
-def latest_native_vector_index(root: str, column: str
-                               ) -> NativeVectorIndex | None:
-    """Newest (highest dataset_version) vector index on ``column``."""
-    for idx in reversed(list_native_vector_indices(root)):
-        if idx.column == column:
-            return idx
-    return None
 
 
 def ensure_native_vector_index(
@@ -6059,7 +5988,7 @@ def ensure_native_vector_index(
     shape); with no index yet it still builds from scratch."""
     manifest = read_native_manifest(root)
     frag_ids = {f.id for f in manifest.fragments}
-    idx = latest_native_vector_index(root, column)
+    idx = latest_native_index(root, column, "ivf_pq")
     if idx is not None and frag_ids <= native_index_coverage(root, idx):
         return None
     if incremental and idx is not None:
@@ -6150,7 +6079,7 @@ def _native_prefilter_rows(root: str, live: NativeManifest,
     covered: frozenset = frozenset()
     n_allowed = 0
     if has_any:
-        lidx = latest_native_label_index(root, pcol)
+        lidx = latest_native_index(root, pcol, "label_list")
         if lidx is not None:
             rows_by_frag, covered = native_label_lookup(
                 root, pcol, list(pvals), mode="any", index=lidx)
@@ -6162,7 +6091,7 @@ def _native_prefilter_rows(root: str, live: NativeManifest,
                 raise _prefilter_cap_error(n_allowed)
     # a BITMAP (keyword-v1) index on the filter column is the pure
     # point-lookup shape — preferred over the btree when present
-    kidx = None if has_any else latest_native_bitmap_index(root, pcol)
+    kidx = None if has_any else latest_native_index(root, pcol, "bitmap")
     if kidx is not None:
         rows_by_frag, kcov = native_bitmap_lookup(
             root, pcol, list(pvals), index=kidx)
@@ -6173,12 +6102,8 @@ def _native_prefilter_rows(root: str, live: NativeManifest,
                 n_allowed += len(rows)
         if n_allowed > MAX_PREFILTER_ROWS:
             raise _prefilter_cap_error(n_allowed)
-    sidx = None
-    if kidx is None and not has_any:
-        for i in reversed(list_native_scalar_indices(root)):
-            if i.column == pcol:
-                sidx = i
-                break
+    sidx = (latest_native_index(root, pcol, "btree")
+            if kidx is None and not has_any else None)
     if sidx is not None:
         rows_by_frag, _stats = scalar_index_lookup(
             sidx, eq_values=list(pvals))
@@ -6329,7 +6254,7 @@ def native_vector_search_fresh(
     q = np.asarray(queries, dtype=np.float32)
     if q.ndim == 1:
         q = q.reshape(1, -1)
-    idx = latest_native_vector_index(root, column)
+    idx = latest_native_index(root, column, "ivf_pq")
     covered = (native_index_coverage(root, idx)
                if idx is not None else frozenset())
     live_ids = {f.id for f in live.fragments}
@@ -6505,8 +6430,8 @@ def native_vector_search_fresh(
 # Extend is per-FRAGMENT granular: new fragments get new shard files
 # appended into the SAME dir (meta atomically replaced) — old graphs are
 # never touched, the natural LSM of a per-fragment index family.
-# Vacuum: coverage.json kind="hnsw" joins the generic superseded loop;
-# staged `shard-hnsw-*.idx` debris rides the shard-debris reaper.
+# Vacuum: the shards' fragment ids are the coverage its supersede rule
+# reads; staged `shard-hnsw-*.idx` debris rides the shard-debris reaper.
 # ---------------------------------------------------------------------------
 
 @dataclass(frozen=True)
@@ -6519,10 +6444,19 @@ class NativeHnswIndex:
     covered_fragments: frozenset
     # ((frag_id, shard_no, n_shards, file_name, rows), ...)
     shards: tuple
+    family = "hnsw"
 
     @property
     def n_shards(self) -> int:
         return len(self.shards)
+
+    @property
+    def files(self) -> tuple:
+        return tuple(s[3] for s in self.shards)
+
+    @property
+    def detail(self) -> str:
+        return f"m={self.m}"
 
 
 def _hnsw_graph_to_bytes(row_idx, vecs, levels, neighbors, entry) -> bytes:
@@ -6600,7 +6534,9 @@ def _native_hnsw_build_shard(root: str, manifest: NativeManifest,
 
 
 def _hnsw_write_meta(root: str, uid: str, column: str, m: int, ef: int,
-                     dataset_version: int, coverage, shards) -> str:
+                     dataset_version: int, shards) -> str:
+    """Commit point of an HNSW build or extend; the shards' fragment
+    ids are the index's coverage."""
     import json as _json
 
     d = os.path.join(root, "_indices", uid)
@@ -6608,11 +6544,6 @@ def _hnsw_write_meta(root: str, uid: str, column: str, m: int, ef: int,
         "name": "hnsw", "column": column, "m": m,
         "ef_construction": ef, "dataset_version": dataset_version,
         "shards": [list(s) for s in shards],
-    }).encode())
-    nio.replace_bytes(os.path.join(d, "coverage.json"), _json.dumps({
-        "kind": "hnsw", "column": column,
-        "dataset_version": dataset_version,
-        "fragments": sorted(coverage),
     }).encode())
     return uid
 
@@ -6646,8 +6577,7 @@ def write_native_hnsw_index(root: str, column: str, m: int = 8,
     shards = _hnsw_build_shards(root, manifest, nfield, d, specs, m,
                                 ef_construction, spark)
     return _hnsw_write_meta(
-        root, uid, column, m, ef_construction, manifest.version,
-        {f.id for f in manifest.fragments}, shards)
+        root, uid, column, m, ef_construction, manifest.version, shards)
 
 
 def _hnsw_build_shards(root: str, manifest: NativeManifest, nfield,
@@ -6708,51 +6638,32 @@ def _hnsw_build_shards(root: str, manifest: NativeManifest, nfield,
          int(r["rows"])) for r in got)
 
 
-def list_native_hnsw_indices(root: str) -> list[NativeHnswIndex]:
+def _read_hnsw_meta(p: str) -> tuple:
+    """(NativeHnswIndex, nbytes) of one hnsw.json."""
     import json as _json
 
-    idx_dir = os.path.join(root, "_indices")
-    out = []
-    for dname in nio.listdir(idx_dir):
-        p = os.path.join(idx_dir, dname, "hnsw.json")
-        if not nio.exists(p):
-            continue
-        try:
-            meta = _json.loads(nio.read_text(p))
-        except (ValueError, OSError):
-            continue
-        out.append(NativeHnswIndex(
-            path=p, column=meta["column"],
-            dataset_version=int(meta["dataset_version"]),
-            m=int(meta["m"]),
-            ef_construction=int(meta["ef_construction"]),
-            covered_fragments=frozenset(
-                int(s[0]) for s in meta["shards"]),
-            shards=tuple(
-                (int(s[0]), int(s[1]), int(s[2]), s[3], int(s[4]))
-                for s in meta["shards"]),
-        ))
-    out.sort(key=lambda i: (i.dataset_version,
-                            os.path.basename(os.path.dirname(i.path))))
-    return out
-
-
-def latest_native_hnsw_index(root: str, column: str
-                             ) -> NativeHnswIndex | None:
-    for idx in reversed(list_native_hnsw_indices(root)):
-        if idx.column == column:
-            return idx
-    return None
+    raw = nio.read_text(p)
+    meta = _json.loads(raw)
+    return NativeHnswIndex(
+        path=p, column=meta["column"],
+        dataset_version=int(meta["dataset_version"]),
+        m=int(meta["m"]),
+        ef_construction=int(meta["ef_construction"]),
+        covered_fragments=frozenset(int(s[0]) for s in meta["shards"]),
+        shards=tuple(
+            (int(s[0]), int(s[1]), int(s[2]), s[3], int(s[4]))
+            for s in meta["shards"]),
+    ), 2048 + 9 * len(raw)
 
 
 def extend_native_hnsw_index(root: str, column: str, spark=None
                              ) -> str | None:
     """O(delta) per-fragment extend: fragments appended since the build
     get their own NEW shard graphs appended into the SAME sidecar dir
-    (old graphs untouched; hnsw.json + coverage.json atomically
-    replaced). Returns the index uuid, or None when already covering;
-    raises with no index to extend."""
-    idx = latest_native_hnsw_index(root, column)
+    (old graphs untouched; hnsw.json atomically replaced). Returns the
+    index uuid, or None when already covering; raises with no index to
+    extend."""
+    idx = latest_native_index(root, column, "hnsw")
     if idx is None:
         raise LanceNativeError(
             f"no hnsw index on {column!r} to extend — build one with "
@@ -6780,10 +6691,9 @@ def extend_native_hnsw_index(root: str, column: str, spark=None
         root, manifest, nfield, d, specs, idx.m, idx.ef_construction,
         spark)
     keep = [s for s in idx.shards if s[0] in live_ids]
-    coverage = ({s[0] for s in keep} | {f.id for f in new_frags})
     return _hnsw_write_meta(
         root, os.path.basename(d), column, idx.m, idx.ef_construction,
-        manifest.version, coverage, keep + list(new_shards))
+        manifest.version, keep + list(new_shards))
 
 
 def ensure_native_hnsw_index(root: str, column: str, m: int = 8,
@@ -6795,7 +6705,7 @@ def ensure_native_hnsw_index(root: str, column: str, m: int = 8,
     rebuild otherwise or with no index yet."""
     manifest = read_native_manifest(root)
     frag_ids = {f.id for f in manifest.fragments}
-    idx = latest_native_hnsw_index(root, column)
+    idx = latest_native_index(root, column, "hnsw")
     if idx is not None and frag_ids <= idx.covered_fragments:
         return None
     if incremental and idx is not None:
@@ -6844,8 +6754,8 @@ def native_hnsw_search(root: str, queries, k: int = 10,
     import numpy as np
 
     live = manifest if manifest is not None else read_native_manifest(root)
-    idx = index if index is not None else latest_native_hnsw_index(
-        root, column)
+    idx = index if index is not None else latest_native_index(
+        root, column, "hnsw")
     if idx is None:
         raise LanceNativeError(f"no hnsw index on {column!r}")
     q = np.asarray(queries, dtype=np.float32)
@@ -6932,35 +6842,16 @@ def native_hnsw_search(root: str, queries, k: int = 10,
     return results
 
 
-def native_hnsw_search_fresh(root: str, column: str, queries,
-                             k: int = 10, ef_search: int = 64,
-                             spark=None,
-                             prefilter: tuple | None = None):
-    """LIVE-snapshot HNSW search (the lf43 freshness contract): graphs
-    accelerate their covered fragments, an EXACT cosine arm scans the
-    uncovered ones (deletion-aware), and the union re-ranks by (cosine
-    desc, address asc). Between ingest and ensure_native_hnsw_index,
-    results never go stale."""
+def _exact_cosine_merge(root: str, live: NativeManifest, column: str,
+                        q, k: int, uncovered: list, allowed_by_frag,
+                        cand: list, dedup: bool = False) -> list:
+    """The graph families' fresh-search tail: an EXACT cosine arm over
+    the ``uncovered`` fragments (deletion- and prefilter-aware) adds
+    each fragment's top-k to the index arm's per-query ``cand`` lists
+    of (sim, addr), then the union re-ranks by (cosine desc, address
+    asc). ``dedup`` drops repeated candidates first (IVF_HNSW)."""
     import numpy as np
 
-    live = read_native_manifest(root)
-    q = np.asarray(queries, dtype=np.float32)
-    if q.ndim == 1:
-        q = q.reshape(1, -1)
-    idx = latest_native_hnsw_index(root, column)
-    covered = idx.covered_fragments if idx is not None else frozenset()
-    live_ids = {f.id for f in live.fragments}
-    uncovered = sorted(live_ids - covered)
-    allowed_by_frag = (
-        _native_prefilter_rows(root, live, prefilter, spark=spark)
-        if prefilter is not None else None)
-    cand: list[list] = [[] for _ in range(q.shape[0])]
-    if idx is not None:
-        for qi, r in enumerate(native_hnsw_search(
-                root, q, k=k, ef_search=ef_search, index=idx,
-                manifest=live, prefilter=prefilter, spark=spark)):
-            cand[qi].extend(zip(r["sims"], r["neighbors"]))
-    # exact cosine arm over uncovered fragments (deletion-aware)
     nfield = next(
         (f for f in live.top_level_fields() if f.name == column), None)
     if nfield is None:
@@ -6975,8 +6866,7 @@ def native_hnsw_search_fresh(root: str, column: str, queries,
         arr = read_file_column(root, dfile, col_idx, nfield, live)
         vmask = np.asarray(arr.is_valid())
         if frag.deletion is not None:
-            dead = _deleted_rows_np(root, frag.deletion)
-            vmask[dead] = False
+            vmask[_deleted_rows_np(root, frag.deletion)] = False
         if allowed_by_frag is not None:
             am = np.zeros(len(vmask), dtype=bool)
             rows = allowed_by_frag.get(fid, [])
@@ -7002,7 +6892,8 @@ def native_hnsw_search_fresh(root: str, column: str, queries,
                     (float(s[i]), int(addr_base | np.uint64(rows_sel[i]))))
     results = []
     for qi in range(q.shape[0]):
-        best = sorted(cand[qi], key=lambda t: (-t[0], t[1]))[:k]
+        pool = set(cand[qi]) if dedup else cand[qi]
+        best = sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
         results.append({
             "neighbors": [a for _s, a in best],
             "sims": [s for s, _a in best],
@@ -7010,6 +6901,38 @@ def native_hnsw_search_fresh(root: str, column: str, queries,
             "exact_rows": int(exact_rows),
         })
     return results
+
+
+def native_hnsw_search_fresh(root: str, column: str, queries,
+                             k: int = 10, ef_search: int = 64,
+                             spark=None,
+                             prefilter: tuple | None = None):
+    """LIVE-snapshot HNSW search (the lf43 freshness contract): graphs
+    accelerate their covered fragments, an EXACT cosine arm scans the
+    uncovered ones (deletion-aware), and the union re-ranks by (cosine
+    desc, address asc). Between ingest and ensure_native_hnsw_index,
+    results never go stale."""
+    import numpy as np
+
+    live = read_native_manifest(root)
+    q = np.asarray(queries, dtype=np.float32)
+    if q.ndim == 1:
+        q = q.reshape(1, -1)
+    idx = latest_native_index(root, column, "hnsw")
+    covered = idx.covered_fragments if idx is not None else frozenset()
+    live_ids = {f.id for f in live.fragments}
+    uncovered = sorted(live_ids - covered)
+    allowed_by_frag = (
+        _native_prefilter_rows(root, live, prefilter, spark=spark)
+        if prefilter is not None else None)
+    cand: list[list] = [[] for _ in range(q.shape[0])]
+    if idx is not None:
+        for qi, r in enumerate(native_hnsw_search(
+                root, q, k=k, ef_search=ef_search, index=idx,
+                manifest=live, prefilter=prefilter, spark=spark)):
+            cand[qi].extend(zip(r["sims"], r["neighbors"]))
+    return _exact_cosine_merge(root, live, column, q, k, uncovered,
+                               allowed_by_frag, cand)
 
 # ---------------------------------------------------------------------------
 # IVF_HNSW composite family (round 14): LanceDB's shipped graph family
@@ -7041,10 +6964,19 @@ class NativeIvfHnswIndex:
     covered_fragments: frozenset
     # per cell: tuple of (file_name, rows) RUN graphs, build order
     cells: tuple
+    family = "ivf_hnsw"
 
     @property
     def n_cells(self) -> int:
         return len(self.cells)
+
+    @property
+    def files(self) -> tuple:
+        return tuple(run[0] for c in self.cells for run in c)
+
+    @property
+    def detail(self) -> str:
+        return f"n_cells={self.n_cells},m={self.m}"
 
 
 def _ivf_hnsw_cell_rows(root: str, manifest: NativeManifest, nfield,
@@ -7107,24 +7039,27 @@ def _ivf_hnsw_write_meta(root: str, uid: str, column: str, m: int,
                          ef: int, cent: "np.ndarray",
                          dataset_version: int, coverage,
                          cells: list) -> str:
+    """Commit point of an IVF_HNSW build or extend: centroids.bin and
+    coverage.json first, ivf_hnsw.json (the file the registry caches
+    on) last."""
     import json as _json
 
-    d = os.path.join(root, "_indices", uid)
     import numpy as np
 
+    d = os.path.join(root, "_indices", uid)
     nio.replace_bytes(
         os.path.join(d, "centroids.bin"),
         np.asarray(cent, dtype="<f4").tobytes())
+    nio.replace_bytes(os.path.join(d, "coverage.json"), _json.dumps({
+        "kind": "ivf_hnsw", "column": column,
+        "dataset_version": dataset_version,
+        "fragments": sorted(coverage),
+    }).encode())
     nio.replace_bytes(os.path.join(d, "ivf_hnsw.json"), _json.dumps({
         "name": "ivf_hnsw", "column": column, "m": m,
         "ef_construction": ef, "dataset_version": dataset_version,
         "dim": int(len(cent[0])), "n_cells": int(len(cent)),
         "cells": [[list(run) for run in c] for c in cells],
-    }).encode())
-    nio.replace_bytes(os.path.join(d, "coverage.json"), _json.dumps({
-        "kind": "ivf_hnsw", "column": column,
-        "dataset_version": dataset_version,
-        "fragments": sorted(coverage),
     }).encode())
     return uid
 
@@ -7299,48 +7234,32 @@ def _ivf_hnsw_stage_cells(root: str, d: str, manifest: NativeManifest,
     return cells
 
 
-def list_native_ivf_hnsw_indices(root: str) -> list:
+def _read_ivf_hnsw_meta(p: str) -> tuple:
+    """(NativeIvfHnswIndex, nbytes) of one ivf_hnsw.json and the
+    coverage.json and centroids.bin written before it."""
     import json as _json
 
     import numpy as np
 
-    idx_dir = os.path.join(root, "_indices")
-    out = []
-    for dname in nio.listdir(idx_dir):
-        p = os.path.join(idx_dir, dname, "ivf_hnsw.json")
-        if not nio.exists(p):
-            continue
-        try:
-            meta = _json.loads(nio.read_text(p))
-            cov = _json.loads(nio.read_text(
-                os.path.join(idx_dir, dname, "coverage.json")))
-            cent = np.frombuffer(
-                nio.read_bytes(os.path.join(idx_dir, dname,
-                                            "centroids.bin")),
-                dtype="<f4").reshape(meta["n_cells"], meta["dim"])
-        except (ValueError, OSError, KeyError):
-            continue
-        out.append(NativeIvfHnswIndex(
-            path=p, column=meta["column"],
-            dataset_version=int(meta["dataset_version"]),
-            m=int(meta["m"]),
-            ef_construction=int(meta["ef_construction"]),
-            centroids=cent,
-            covered_fragments=frozenset(cov.get("fragments", [])),
-            cells=tuple(
-                tuple((run[0], int(run[1])) for run in c)
-                for c in meta["cells"]),
-        ))
-    out.sort(key=lambda i: (i.dataset_version,
-                            os.path.basename(os.path.dirname(i.path))))
-    return out
-
-
-def latest_native_ivf_hnsw_index(root: str, column: str):
-    for idx in reversed(list_native_ivf_hnsw_indices(root)):
-        if idx.column == column:
-            return idx
-    return None
+    d = os.path.dirname(p)
+    raw = nio.read_text(p)
+    meta = _json.loads(raw)
+    raw_cov = nio.read_text(os.path.join(d, "coverage.json"))
+    cov = _json.loads(raw_cov)
+    cent = np.frombuffer(
+        bytes(nio.read_bytes(os.path.join(d, "centroids.bin"))),
+        dtype="<f4").reshape(meta["n_cells"], meta["dim"])
+    return NativeIvfHnswIndex(
+        path=p, column=meta["column"],
+        dataset_version=int(meta["dataset_version"]),
+        m=int(meta["m"]),
+        ef_construction=int(meta["ef_construction"]),
+        centroids=cent,
+        covered_fragments=frozenset(cov.get("fragments", [])),
+        cells=tuple(
+            tuple((run[0], int(run[1])) for run in c)
+            for c in meta["cells"]),
+    ), 2048 + 9 * (len(raw) + len(raw_cov)) + 2 * cent.nbytes
 
 
 def extend_native_ivf_hnsw_index(root: str, column: str, spark=None
@@ -7349,7 +7268,7 @@ def extend_native_ivf_hnsw_index(root: str, column: str, spark=None
     assign to cells with the TRAINED centroids (verbatim reuse — no
     retrain, the IVF_PQ extend's trade) and each touched cell gains one
     NEW run graph; old graphs untouched, meta atomically replaced."""
-    idx = latest_native_ivf_hnsw_index(root, column)
+    idx = latest_native_index(root, column, "ivf_hnsw")
     if idx is None:
         raise LanceNativeError(
             f"no ivf_hnsw index on {column!r} to extend — build one "
@@ -7389,7 +7308,7 @@ def ensure_native_ivf_hnsw_index(root: str, column: str,
                                  ) -> str | None:
     manifest = read_native_manifest(root)
     frag_ids = {f.id for f in manifest.fragments}
-    idx = latest_native_ivf_hnsw_index(root, column)
+    idx = latest_native_index(root, column, "ivf_hnsw")
     if idx is not None and frag_ids <= idx.covered_fragments:
         return None
     if incremental and idx is not None:
@@ -7417,8 +7336,8 @@ def native_ivf_hnsw_search(root: str, queries, k: int = 10,
     from .vector_index import _search_hnsw_graph, hnsw_graph
 
     live = manifest if manifest is not None else read_native_manifest(root)
-    idx = index if index is not None else latest_native_ivf_hnsw_index(
-        root, column)
+    idx = index if index is not None else latest_native_index(
+        root, column, "ivf_hnsw")
     if idx is None:
         raise LanceNativeError(f"no ivf_hnsw index on {column!r}")
     q = np.asarray(queries, dtype=np.float32)
@@ -7497,7 +7416,7 @@ def native_ivf_hnsw_search_fresh(root: str, column: str, queries,
     q = np.asarray(queries, dtype=np.float32)
     if q.ndim == 1:
         q = q.reshape(1, -1)
-    idx = latest_native_ivf_hnsw_index(root, column)
+    idx = latest_native_index(root, column, "ivf_hnsw")
     covered = idx.covered_fragments if idx is not None else frozenset()
     live_ids = {f.id for f in live.fragments}
     uncovered = sorted(live_ids - covered)
@@ -7510,55 +7429,8 @@ def native_ivf_hnsw_search_fresh(root: str, column: str, queries,
     allowed_by_frag = (
         _native_prefilter_rows(root, live, prefilter, spark=spark)
         if prefilter is not None else None)
-    nfield = next(
-        (f for f in live.top_level_fields() if f.name == column), None)
-    if nfield is None:
-        raise LanceNativeError(f"no such column: {column!r}")
-    qn = q / np.maximum(
-        np.linalg.norm(q, axis=1, keepdims=True), 1e-30)
-    frag_by_id = {f.id: f for f in live.fragments}
-    exact_rows = 0
-    for fid in uncovered:
-        frag = frag_by_id[fid]
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, live)
-        vmask = np.asarray(arr.is_valid())
-        if frag.deletion is not None:
-            vmask[_deleted_rows_np(root, frag.deletion)] = False
-        if allowed_by_frag is not None:
-            am = np.zeros(len(vmask), dtype=bool)
-            rows = allowed_by_frag.get(fid, [])
-            if len(rows):
-                am[np.asarray(rows, dtype=np.int64)] = True
-            vmask &= am
-        if not vmask.any():
-            continue
-        dim = q.shape[1]
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        rows_sel = np.nonzero(vmask)[0]
-        v = v[vmask]
-        exact_rows += len(v)
-        vn = v / np.maximum(
-            np.linalg.norm(v, axis=1, keepdims=True), 1e-30)
-        sims = vn @ qn.T
-        addr_base = np.uint64(fid) << np.uint64(32)
-        for qi in range(q.shape[0]):
-            s = sims[:, qi]
-            top = np.argsort(-s, kind="stable")[:k]
-            for i in top:
-                cand[qi].append((
-                    float(s[i]),
-                    int(addr_base | np.uint64(rows_sel[i]))))
-    results = []
-    for qi in range(q.shape[0]):
-        best = sorted(set(cand[qi]), key=lambda t: (-t[0], t[1]))[:k]
-        results.append({
-            "neighbors": [a for _s, a in best],
-            "sims": [s for s, _a in best],
-            "uncovered_fragments": len(uncovered),
-            "exact_rows": int(exact_rows),
-        })
-    return results
+    return _exact_cosine_merge(root, live, column, q, k, uncovered,
+                               allowed_by_frag, cand, dedup=True)
 
 # ---------------------------------------------------------------------------
 # Scalar (btree) index: `_indices/<uuid>/index.idx`
@@ -7658,7 +7530,7 @@ def _dec_values_block(kind: str, raw: bytes, n: int):
     ]
 
 
-@dataclass
+@dataclass(frozen=True)
 class NativeScalarIndex:
     path: str
     name: str
@@ -7683,6 +7555,15 @@ class NativeScalarIndex:
     # appends the delta as another run. fences then hold, run after run,
     # that run's shard mins + its max (len = n_shards + n_runs).
     shard_runs: tuple = ()
+    family = "btree"
+
+    @property
+    def files(self) -> tuple:
+        return self.shard_names
+
+    @property
+    def detail(self) -> str:
+        return f"kind={self.kind}"
 
     def run_spans(self):
         """Yield (shard_lo, shard_hi_excl, fence_lo) per sorted run."""
@@ -8268,11 +8149,7 @@ def extend_native_scalar_index(
     dead-coverage indexes."""
     import heapq
 
-    idx = None
-    for cand in reversed(list_native_scalar_indices(root)):
-        if cand.column == column:
-            idx = cand
-            break
+    idx = latest_native_index(root, column, "btree")
     if idx is None:
         raise LanceNativeError(
             f"no scalar index on {column!r} to extend — build one with "
@@ -8370,14 +8247,10 @@ def ensure_native_scalar_index(
     probe-identical to a rebuild); with no index yet it still builds."""
     manifest = read_native_manifest(root)
     frag_ids = {f.id for f in manifest.fragments}
-    have = False
-    for idx in reversed(list_native_scalar_indices(root)):
-        if idx.column == column:
-            have = True
-            if frag_ids <= idx.covered_fragments:
-                return None
-            break
-    if incremental and have:
+    idx = latest_native_index(root, column, "btree")
+    if idx is not None and frag_ids <= idx.covered_fragments:
+        return None
+    if incremental and idx is not None:
         return extend_native_scalar_index(
             root, column, page_rows=page_rows, spark=spark)
     return write_native_scalar_index(
@@ -8385,23 +8258,19 @@ def ensure_native_scalar_index(
 
 
 def read_native_scalar_index(path: str) -> NativeScalarIndex:
-    """Parse one scalar index sidecar — METADATA ONLY (footer seek + proto;
-    page bodies are range-read later, per probe)."""
-    meta, pos = _index_meta(path)
-    name = column = None
-    dsver = 0
-    bt = None
-    for f, _wt, v in pb_items(meta):
-        if f == 1:
-            name = v.decode()
-        elif f == 2:
-            column = v.decode()
-        elif f == 3:
-            dsver = v
-        elif f == 6:
-            bt = v
-    if bt is None:
+    """Parse one scalar index sidecar or shard file, uncached — METADATA
+    ONLY (footer seek + proto; page bodies are range-read later, per
+    probe). Index dirs are read through `list_native_indices`."""
+    idx = _parse_index_file(path)[0]
+    if not isinstance(idx, NativeScalarIndex):
         raise LanceNativeError(f"{path}: not a scalar (btree) index")
+    return idx
+
+
+def _scalar_index_from_proto(path: str, name: str, column: str,
+                             dsver: int, bt: bytes, pos: int) -> tuple:
+    """(NativeScalarIndex, nbytes) from the Index proto's BTree details;
+    ``pos`` is the metadata offset (= page-body bytes)."""
     kind = None
     offs = counts = covered = None
     shard_counts = shard_names = shard_pages = shard_runs = None
@@ -8450,7 +8319,7 @@ def read_native_scalar_index(path: str) -> NativeScalarIndex:
             shard_counts=tuple(shard_counts),
             shard_pages=tuple(shard_pages),
             shard_runs=runs,
-        )
+        ), 2048 + 9 * len(bt)
     if offs is None or counts is None:
         raise LanceNativeError(f"{path}: incomplete btree metadata")
     n_pages = len(counts)
@@ -8462,23 +8331,12 @@ def read_native_scalar_index(path: str) -> NativeScalarIndex:
         path=path, name=name, column=column, dataset_version=dsver,
         kind=kind, page_offsets=list(offs), page_rows=list(counts),
         body_len=pos, fences=fences, covered_fragments=frozenset(covered),
-    )
+    ), 2048 + 9 * len(bt)
 
 
 def list_native_scalar_indices(root: str) -> list[NativeScalarIndex]:
-    """Every parseable scalar-index sidecar under `_indices/`, sorted by
-    dataset_version ascending (latest covering index wins)."""
-    idx_dir = os.path.join(root, "_indices")
-    out = []
-    for d in nio.listdir(idx_dir):
-        p = os.path.join(idx_dir, d, "index.idx")
-        if nio.exists(p):
-            try:
-                out.append(read_native_scalar_index(p))
-            except LanceNativeError:
-                continue  # vector sidecar (or foreign) — not ours to read
-    out.sort(key=lambda i: i.dataset_version)
-    return out
+    """Every btree index (`list_native_indices` order)."""
+    return list_native_indices(root, "btree")
 
 
 def scalar_index_lookup(
@@ -8836,6 +8694,19 @@ class NativeFtsIndex:
     @property
     def n_runs(self) -> int:
         return len(self.run_files)
+
+    @property
+    def family(self) -> str:
+        return _ANALYZER_FAMILY.get(self.analyzer, "fts")
+
+    @property
+    def files(self) -> tuple:
+        return tuple(nm for run in self.run_files for nm in run if nm) \
+            + tuple(nm for _fid, nm in self.doclen_files)
+
+    @property
+    def detail(self) -> str:
+        return f"analyzer={self.analyzer}"
 
 
 def _fts_postings_blob(tokens: list, addr_arrays: list,
@@ -9960,59 +9831,11 @@ def _write_fts_meta(d: str, column: str, dataset_version: int,
     blob = struct.pack("<I", len(meta)) + meta
     blob += struct.pack("<QHH", 0, 0, 1) + b"LANC"
     nio.replace_bytes(os.path.join(d, "index.idx"), blob)
-    # kind-tagged coverage sidecar: vacuum's coverage loop reaps dead /
-    # superseded fts dirs exactly like vector ones (kind keeps a vector
-    # and an fts index on one column from superseding each other)
-    import json as _json
-
-    nio.replace_bytes(os.path.join(d, "coverage.json"), _json.dumps({
-        "column": column, "kind": "fts",
-        "dataset_version": dataset_version,
-        "fragments": sorted(int(x) for x in covered),
-    }).encode())
 
 
-# Parsed FTS index metadata (index.idx, replaced atomically by extends
-# and compactions) is served from a stat-keyed LRU like the manifests;
-# a foreign (vector/btree) index.idx caches its refusal message, so the
-# per-query listing of _indices/ re-parses nothing. Entries are sized
-# 2 KiB + 9x metadata bytes, the manifests' measured bound.
-FTS_INDEX_CACHE_BYTES = 4 << 20
-_FTS_INDEXES = StatLRU(FTS_INDEX_CACHE_BYTES)
-
-
-def read_native_fts_index(path: str) -> NativeFtsIndex:
-    idx = _FTS_INDEXES.load(path, _decode_native_fts_index)[0]
-    if isinstance(idx, str):
-        raise LanceNativeError(idx)
-    return idx
-
-
-def _decode_native_fts_index(path: str) -> tuple:
-    """(NativeFtsIndex, or the LanceNativeError message refusing the
-    file, nbytes)."""
-    try:
-        return _parse_native_fts_index(path)
-    except LanceNativeError as e:
-        return str(e), 2048
-
-
-def _parse_native_fts_index(path: str) -> tuple:
-    meta = _index_meta(path)[0]
-    name = column = None
-    dsver = 0
-    inv = None
-    for f, _wt, v in pb_items(meta):
-        if f == 1:
-            name = v.decode()
-        elif f == 2:
-            column = v.decode()
-        elif f == 3:
-            dsver = v
-        elif f == 7:
-            inv = v
-    if inv is None:
-        raise LanceNativeError(f"{path}: not an fts (inverted) index")
+def _fts_index_from_proto(path: str, name: str, column: str, dsver: int,
+                          inv: bytes, _pos: int) -> tuple:
+    """(NativeFtsIndex, nbytes) from the Index proto's Inverted details."""
     analyzer = None
     n_buckets = n_docs = sum_dl = n_runs = None
     covered = files_raw = doclen_raw = None
@@ -10051,34 +9874,160 @@ def _parse_native_fts_index(path: str) -> tuple:
         path=path, name=name, column=column, dataset_version=dsver,
         analyzer=analyzer, n_buckets=int(n_buckets), n_docs=int(n_docs),
         sum_dl=int(sum_dl), covered_fragments=frozenset(covered),
-        run_files=runs, doclen_files=doclen), 2048 + 9 * len(meta)
+        run_files=runs, doclen_files=doclen), 2048 + 9 * len(inv)
 
 
-def list_native_fts_indices(root: str) -> list[NativeFtsIndex]:
+# ---------------------------------------------------------------------------
+# Index registry — the lance SDK's `list_indices()` surface: one walk of
+# `_indices/`, one record per directory, one newest-index rule. The meta
+# file that commits a directory fixes its family: hnsw.json (HNSW),
+# ivf_hnsw.json (IVF_HNSW), or index.idx, whose Index proto details
+# field names it (5 = IVF_PQ, 6 = btree, 7 = inverted; the analyzer then
+# picks fts / bitmap / label_list / ngram). Every record carries
+# .family, .column, .dataset_version, .path, .covered_fragments (None
+# when unknown: an SDK-written IVF index) and .files (the shard, run,
+# doclen and cell files its meta names), plus the SHOW INDEXES .detail.
+# ---------------------------------------------------------------------------
+
+# VECTOR_FAMILIES' order is VECTOR SEARCH's tie-break at equal versions
+VECTOR_FAMILIES = ("ivf_pq", "hnsw", "ivf_hnsw")
+INVERTED_FAMILIES = ("fts", "bitmap", "label_list", "ngram")
+INDEX_FAMILIES = ("btree",) + VECTOR_FAMILIES + INVERTED_FAMILIES
+# BM25-searchable families. ngram is left out: trigram postings are
+# substring candidates, not term postings — a trigram index built later
+# on the column must never hijack text search (r14 guard). keyword-v1 /
+# label-v1 stay searchable (exact whole-value / whole-tag matching, s22).
+TEXT_FAMILIES = ("fts", "bitmap", "label_list")
+_ANALYZER_FAMILY = {"keyword-v1": "bitmap", "label-v1": "label_list",
+                    "ngram-v1": "ngram"}
+# Index proto details field -> (parser, the families it can hold)
+_INDEX_DETAILS = {5: (_vector_index_from_proto, {"ivf_pq"}),
+                  6: (_scalar_index_from_proto, {"btree"}),
+                  7: (_fts_index_from_proto, set(INVERTED_FAMILIES))}
+_ALL_FAMILIES = frozenset(INDEX_FAMILIES)
+
+
+def _parse_index_file(path: str, families=None) -> tuple:
+    """(record, nbytes) of one index.idx or btree shard file, uncached;
+    (None, 0) when its details cannot hold any of ``families``."""
+    meta, pos = _index_meta(path)
+    name = column = details = None
+    dsver = 0
+    for f, _wt, v in pb_items(meta):
+        if f == 1:
+            name = v.decode()
+        elif f == 2:
+            column = v.decode()
+        elif f == 3:
+            dsver = v
+        elif f in _INDEX_DETAILS:
+            details = (f, v)
+    if details is None:
+        raise LanceNativeError(
+            f"{path}: the Index proto has no vector, btree or inverted "
+            "index details")
+    parse, holds = _INDEX_DETAILS[details[0]]
+    if families is not None and holds.isdisjoint(families):
+        return None, 0
+    return parse(path, name, column, dsver, details[1], pos)
+
+
+# (meta file committing a directory, the families it can hold)
+_META_FILES = (("index.idx", _ALL_FAMILIES - {"hnsw", "ivf_hnsw"}),
+               ("hnsw.json", {"hnsw"}), ("ivf_hnsw.json", {"ivf_hnsw"}))
+_META_PARSERS = {"hnsw.json": _read_hnsw_meta,
+                 "ivf_hnsw.json": _read_ivf_hnsw_meta}
+
+# Each meta file is decoded once per process through one stat-keyed
+# LRU. The meta file is its family's commit point — the shard, run,
+# doclen and cell files it names, and the sidecars its record reads
+# (IVF_PQ's shards.json and coverage.json, IVF_HNSW's coverage.json and
+# centroids.bin), are written before it, and extends replace it
+# atomically (a new inode) — so a record cached on its stat never pairs
+# it with other files than the ones it names. A file no parser accepts
+# caches its refusal message, so lookups re-parse nothing. Entry sizes
+# (tracemalloc: 1-2.2 KiB per btree / inverted record, 35 KiB for a
+# 16-dim IVF_PQ record with a 77 KiB proto) are charged 2 KiB + 9x the
+# parsed metadata bytes; IVF arrays are views of the read bytes (2x).
+INDEX_CACHE_BYTES = 8 << 20
+_INDEXES = StatLRU(INDEX_CACHE_BYTES)
+
+
+def _decode_index_meta(path: str, families=None) -> tuple:
+    """(record, or the message refusing the file, nbytes)."""
+    try:
+        name = os.path.basename(path)
+        if name == "index.idx":
+            return _parse_index_file(path, families)
+        return _META_PARSERS[name](path)
+    except LanceNativeError as e:
+        return str(e), 2048
+    except (ValueError, OSError, KeyError, IndexError, TypeError) as e:
+        return f"{path}: unreadable index metadata ({e!r})", 2048
+
+
+def read_native_index(path: str):
+    """The record of one index meta file (`_indices/<uuid>/index.idx`,
+    `hnsw.json` or `ivf_hnsw.json`), decoded once per process; raises
+    LanceNativeError for a file no parser accepts."""
+    idx = _INDEXES.load(path, _decode_index_meta)[0]
+    if isinstance(idx, str):
+        raise LanceNativeError(idx)
+    return idx
+
+
+def _index_order(idx) -> tuple:
+    return (idx.dataset_version, os.path.basename(os.path.dirname(idx.path)))
+
+
+def list_native_indices(root: str, family=None) -> list:
+    """Every readable index on the dataset, one record per `_indices/`
+    directory, sorted by (dataset_version, directory name). ``family``
+    (one INDEX_FAMILIES name or a tuple of them) narrows the walk: only
+    meta files that can hold those families are read."""
+    want = None
+    if family is not None:
+        want = frozenset((family,) if isinstance(family, str) else family)
+        if not want <= _ALL_FAMILIES:
+            raise LanceNativeError(
+                f"unknown index families {sorted(want - _ALL_FAMILIES)}"
+                f" (have: {list(INDEX_FAMILIES)})")
+    metas = [name for name, fams in _META_FILES
+             if want is None or not want.isdisjoint(fams)]
+    # remote paths bypass the decode cache: there, parse only index.idx
+    # files whose details can hold a wanted family (no foreign sidecars)
+    remote = want is not None and nio.is_remote(root)
     idx_dir = os.path.join(root, "_indices")
-    out = []
+    found = []
     for dname in nio.listdir(idx_dir):
-        p = os.path.join(idx_dir, dname, "index.idx")
-        if nio.exists(p):
-            try:
-                out.append(read_native_fts_index(p))
-            except LanceNativeError:
-                continue  # vector/btree sidecar
-    out.sort(key=lambda i: i.dataset_version)
-    return out
+        for meta in metas:
+            p = os.path.join(idx_dir, dname, meta)
+            if nio.exists(p):
+                idx = (_decode_index_meta(p, want) if remote
+                       else _INDEXES.load(p, _decode_index_meta))[0]
+                # an unreadable meta is listed by no one; vacuum keeps it
+                if idx is not None and not isinstance(idx, str) \
+                        and (want is None or idx.family in want):
+                    found.append((idx.dataset_version, dname, idx))
+                break
+    found.sort(key=lambda t: t[:2])
+    return [idx for _v, _d, idx in found]
 
 
-def latest_native_fts_index(root: str, column: str
-                            ) -> NativeFtsIndex | None:
-    """Newest BM25-scorable index on the column. Excludes ngram-v1:
-    trigram postings are substring candidates, not term postings — a
-    trigram sidecar built LATER on the same column must never hijack
-    text search (r14 guard). keyword-v1/label-v1 stay searchable (exact
-    whole-value / whole-tag matching is a feature, s22 pins it)."""
-    for idx in reversed(list_native_fts_indices(root)):
-        if idx.column == column and idx.analyzer != "ngram-v1":
-            return idx
-    return None
+def latest_native_index(root: str, column: str, families,
+                        analyzer: str | None = None):
+    """The newest index on ``column`` among ``families`` (one name or a
+    tuple), or None: the highest dataset_version; at equal versions the
+    family listed first (VECTOR SEARCH routes IVF_PQ, then HNSW, then
+    IVF_HNSW), then the later directory name (the twin vacuum keeps).
+    ``analyzer`` narrows inverted families to that one analyzer."""
+    fams = (families,) if isinstance(families, str) else tuple(families)
+    cands = [
+        i for i in list_native_indices(root, fams)
+        if i.column == column
+        and (analyzer is None or getattr(i, "analyzer", None) == analyzer)]
+    return max(reversed(cands), default=None,
+               key=lambda i: (i.dataset_version, -fams.index(i.family)))
 
 
 def write_native_fts_index(root: str, column: str,
@@ -10321,11 +10270,10 @@ def extend_native_fts_index(root: str, column: str, spark=None,
 
     import numpy as np
 
-    idx = (latest_native_fts_index(root, column) if analyzer is None
-           else next(
-               (i for i in reversed(list_native_fts_indices(root))
-                if i.column == column and i.analyzer == analyzer),
-               None))
+    idx = (latest_native_index(root, column, TEXT_FAMILIES)
+           if analyzer is None else latest_native_index(
+               root, column, _ANALYZER_FAMILY.get(analyzer, "fts"),
+               analyzer=analyzer))
     if idx is None:
         raise LanceNativeError(
             f"no fts index on {column!r} to extend — build one with "
@@ -10474,8 +10422,8 @@ def native_fts_search(root: str, column: str, query: str, k: int = 10,
     import numpy as np
 
     live = manifest if manifest is not None else read_native_manifest(root)
-    idx = index if index is not None else latest_native_fts_index(
-        root, column)
+    idx = index if index is not None else latest_native_index(
+        root, column, TEXT_FAMILIES)
     if idx is None:
         raise LanceNativeError(f"no fts index on {column!r}")
     live_ids = {f.id for f in live.fragments}
@@ -11098,14 +11046,6 @@ def write_native_bitmap_index(root: str, column: str,
         analyzer="keyword-v1")
 
 
-def latest_native_bitmap_index(root: str, column: str
-                               ) -> NativeFtsIndex | None:
-    for idx in reversed(list_native_fts_indices(root)):
-        if idx.column == column and idx.analyzer == "keyword-v1":
-            return idx
-    return None
-
-
 def native_bitmap_lookup(root: str, column: str, values,
                          index: NativeFtsIndex | None = None):
     """{fragment_id -> sorted int64 physical rows} whose column equals
@@ -11116,8 +11056,8 @@ def native_bitmap_lookup(root: str, column: str, values,
     covered_fragments)."""
     import numpy as np
 
-    idx = index if index is not None else latest_native_bitmap_index(
-        root, column)
+    idx = index if index is not None else latest_native_index(
+        root, column, "bitmap")
     if idx is None:
         raise LanceNativeError(
             f"no bitmap (keyword-v1) index on {column!r} — build one "
@@ -11164,14 +11104,6 @@ def write_native_label_index(root: str, column: str,
         analyzer="label-v1")
 
 
-def latest_native_label_index(root: str, column: str
-                              ) -> NativeFtsIndex | None:
-    for idx in reversed(list_native_fts_indices(root)):
-        if idx.column == column and idx.analyzer == "label-v1":
-            return idx
-    return None
-
-
 def native_label_lookup(root: str, column: str, values,
                         mode: str = "any",
                         index: NativeFtsIndex | None = None):
@@ -11185,8 +11117,8 @@ def native_label_lookup(root: str, column: str, values,
     if mode not in ("any", "all"):
         raise LanceNativeError(f"label lookup mode {mode!r} not in "
                                "('any', 'all')")
-    idx = index if index is not None else latest_native_label_index(
-        root, column)
+    idx = index if index is not None else latest_native_index(
+        root, column, "label_list")
     if idx is None:
         raise LanceNativeError(
             f"no label (label-v1) index on {column!r} — build one "
@@ -11250,14 +11182,6 @@ def write_native_ngram_index(root: str, column: str,
         analyzer="ngram-v1")
 
 
-def latest_native_ngram_index(root: str, column: str
-                              ) -> NativeFtsIndex | None:
-    for idx in reversed(list_native_fts_indices(root)):
-        if idx.column == column and idx.analyzer == "ngram-v1":
-            return idx
-    return None
-
-
 def native_ngram_lookup(root: str, column: str, needle: str,
                         index: NativeFtsIndex | None = None,
                         addr_lo: int | None = None,
@@ -11277,8 +11201,8 @@ def native_ngram_lookup(root: str, column: str, needle: str,
     plain scan, which stays exact."""
     import numpy as np
 
-    idx = index if index is not None else latest_native_ngram_index(
-        root, column)
+    idx = index if index is not None else latest_native_index(
+        root, column, "ngram")
     if idx is None:
         raise LanceNativeError(
             f"no ngram (ngram-v1) index on {column!r} — build one "
@@ -11345,9 +11269,9 @@ def ensure_native_fts_index(root: str, column: str,
     the two coexist."""
     manifest = read_native_manifest(root)
     frag_ids = {f.id for f in manifest.fragments}
-    idx = next(
-        (i for i in reversed(list_native_fts_indices(root))
-         if i.column == column and i.analyzer == analyzer), None)
+    idx = latest_native_index(
+        root, column, _ANALYZER_FAMILY.get(analyzer, "fts"),
+        analyzer=analyzer)
     if idx is not None and frag_ids <= idx.covered_fragments:
         return None
     if incremental and idx is not None:
@@ -11470,7 +11394,7 @@ def native_fts_search_fresh(root: str, column: str, query: str,
     import numpy as np
 
     live = manifest if manifest is not None else read_native_manifest(root)
-    idx = latest_native_fts_index(root, column)
+    idx = latest_native_index(root, column, TEXT_FAMILIES)
     live_ids = {f.id for f in live.fragments}
     covered = (idx.covered_fragments & live_ids) if idx else set()
     uncovered = live_ids - covered

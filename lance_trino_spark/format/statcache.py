@@ -2,18 +2,26 @@
 reference's per-session index and metadata cache (`LanceRuntime.java:
 96-183`, `docs/src/performance.md` "Caching").
 
-One class serves every user: parsed native manifests and FTS index
-metadata (``lance_native``), decoded HNSW shard graphs
-(``vector_index``) and decoded postings-file term dictionaries
-(``lance_native``). Every cached file is written once under a unique
-name (manifests, postings files, native graphs) or replaced atomically
-(index metadata, own-format graphs), so the stat identity
-``(path, st_ino, st_mtime_ns, st_size)`` is sound: a DROP + re-CREATE
-at the same path gets a new inode and misses. Remote (object-store)
-paths skip the cache — they have no cheap stat identity. Each user
-bounds its cache by a byte budget of measured decoded bytes, a module
-constant next to the cache; per-call state (deletion and prefilter
-masks) is never cached.
+One class serves every user:
+
+- ``lance_native``: parsed native manifests; the index registry's
+  records, one per index meta file (``index.idx`` of every btree,
+  IVF_PQ and inverted family, ``hnsw.json``, ``ivf_hnsw.json``); and
+  decoded postings-file term dictionaries.
+- ``manifest``: parsed own-format JSON manifests (DirectoryBackend
+  only).
+- ``vector_index``: decoded HNSW shard graphs.
+
+Every cached file is written once under a unique name (manifests,
+postings files, native graphs) or replaced atomically (index metadata,
+own-format graphs), so the stat identity ``(path, st_ino, st_mtime_ns,
+st_size)`` is sound: a DROP + re-CREATE at the same path gets a new
+inode and misses. A cached index record also reads files next to its
+meta file; those are written before the meta file, its commit point.
+Remote (object-store) paths skip the cache — they have no cheap stat
+identity. Each user bounds its cache by a byte budget of measured
+decoded bytes, a module constant next to the cache; per-call state
+(deletion and prefilter masks) is never cached.
 """
 
 from __future__ import annotations

@@ -699,7 +699,7 @@ class LanceNativeScanReader(DataSourceReader):
         import numpy as np
 
         from ..format.lance_native import (
-            list_native_scalar_indices,
+            latest_native_index,
             scalar_index_lookup,
         )
 
@@ -721,8 +721,9 @@ class LanceNativeScanReader(DataSourceReader):
             and not isinstance(v, bool),
             "string": lambda v: isinstance(v, str),
         }
-        for idx in reversed(list_native_scalar_indices(partition.root)):
-            if idx.column not in by_col or frag.id not in idx.covered_fragments:
+        for col in by_col:
+            idx = latest_native_index(partition.root, col, "btree")
+            if idx is None or frag.id not in idx.covered_fragments:
                 continue
             ok = _KIND_OK[idx.kind]
             eq_vals = None
@@ -798,7 +799,7 @@ class LanceNativeScanReader(DataSourceReader):
 
         from ..format.lance_native import (
             NGRAM_N,
-            latest_native_ngram_index,
+            latest_native_index,
             native_ngram_lookup,
         )
 
@@ -815,7 +816,7 @@ class LanceNativeScanReader(DataSourceReader):
         hi = (frag.id + 1) << 32
         pre = None
         for col, needles in needles_by_col.items():
-            idx = latest_native_ngram_index(partition.root, col)
+            idx = latest_native_index(partition.root, col, "ngram")
             if idx is None or frag.id not in idx.covered_fragments:
                 continue
             for needle in needles:

@@ -3063,7 +3063,7 @@ def lf43(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..format.lance_native import (
         create_native_dataset, ensure_native_vector_index,
-        latest_native_vector_index, native_delete, native_index_search,
+        latest_native_index, native_delete, native_index_search,
         native_vector_search_fresh)
 
     path = _fresh_path(sf_dir, "lf43-ann-freshness")
@@ -3088,7 +3088,7 @@ def lf43(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.where("vec_id >= 350") \
         .repartition(1).sortWithinPartitions("vec_id") \
         .write.format("lance").mode("append").save(path)
-    idx = latest_native_vector_index(path, "embedding")
+    idx = latest_native_index(path, "embedding", "ivf_pq")
 
     # addr<->vid maps + query vectors from a bounded row_address scan
     # (reference math only — no layout assumption)
@@ -3562,12 +3562,12 @@ def lf47(spark: SparkSession, sf_dir: str) -> DataFrame:
         create_native_dataset,
         ensure_native_scalar_index,
         extend_native_vector_index,
-        latest_native_vector_index,
+        latest_native_index,
         list_native_scalar_indices,
         native_index_coverage,
         native_index_search,
         read_native_manifest,
-        read_native_vector_index,
+        read_native_index,
         write_native_scalar_index,
         write_native_vector_index,
     )
@@ -3586,7 +3586,7 @@ def lf47(spark: SparkSession, sf_dir: str) -> DataFrame:
         path, fsl_columns={"embedding": dim})
     write_native_vector_index(path, "embedding", n_cells=4, nsub=8)
     write_native_scalar_index(path, "vec_id", page_rows=64)
-    old = latest_native_vector_index(path, "embedding")
+    old = latest_native_index(path, "embedding", "ivf_pq")
     from ..sources.lance_datasource import register_lance_datasource
 
     register_lance_datasource(spark)
@@ -3600,7 +3600,7 @@ def lf47(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ingest deltas past the "ivf_extend" threshold in format/routing.py,
     # pinned in pytest)
     extend_native_vector_index(path, "embedding", spark=spark)
-    new = latest_native_vector_index(path, "embedding")
+    new = latest_native_index(path, "embedding", "ivf_pq")
 
     centroids_reused = (
         np.asarray(new.centroids).tobytes()
@@ -3649,7 +3649,7 @@ def lf47(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # parity vs a full rebuild, per query, at nprobe=all
     rb_uid = write_native_vector_index(path, "embedding", n_cells=4, nsub=8)
-    rebuilt = read_native_vector_index(
+    rebuilt = read_native_index(
         os.path.join(path, "_indices", rb_uid, "index.idx"))
     vec_by_id = {
         int(r["vec_id"]): r["embedding"]

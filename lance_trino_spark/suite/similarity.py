@@ -1118,7 +1118,7 @@ def s16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append").save(path)
     assert ln.extend_native_fts_index(path, "text", spark=spark)
 
-    idx = ln.latest_native_fts_index(path, "text")
+    idx = ln.latest_native_index(path, "text", ln.TEXT_FAMILIES)
     got, st = ln.native_fts_search(
         path, "text", " ".join(_FTS_QUERY_TERMS), k=20, index=idx)
     # access-path proof: postings slices, never a corpus scan — every
@@ -1295,7 +1295,7 @@ def s17(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # vector arm: IVF shortlist at nprobe=all (covers every row), exact
     # left-fold cosine re-rank — the bitwise-identical s01 semantics
-    idx = ln.latest_native_vector_index(path, "embedding")
+    idx = ln.latest_native_index(path, "embedding", "ivf_pq")
     qv = [float(x) for x in src.where(
         F.col("doc_id") == _S17_QVEC_ID).first()["embedding"]]
     res = ln.native_index_search(
@@ -1459,7 +1459,7 @@ def s18(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append").save(path)
     assert ln.extend_native_fts_index(path, "text", spark=spark)
 
-    idx = ln.latest_native_fts_index(path, "text")
+    idx = ln.latest_native_index(path, "text", ln.TEXT_FAMILIES)
     assert idx.n_runs == 2  # the delta rode in as an LSM run
     query = f'"{_S18_PHRASE[0]} {_S18_PHRASE[1]}" AND {_S18_TERM}'
     got, st = ln.native_fts_search(path, "text", query, k=15, index=idx)
@@ -1703,7 +1703,7 @@ def s20(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln.create_native_dataset(src, path)
     ln.write_native_fts_index(path, "text", n_buckets=8, spark=spark,
                               analyzer="simple-v1")
-    idx = ln.latest_native_fts_index(path, "text")
+    idx = ln.latest_native_index(path, "text", ln.TEXT_FAMILIES)
     assert idx.analyzer == "simple-v1"
 
     query = f'"{_S20_PHRASE[0]} {_S20_PHRASE[1]}" {_S20_TERM}'
@@ -1828,7 +1828,7 @@ def s21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the prefilter column gets its own btree index: the two index
     # kinds COMPOSE (the allowed set resolves page-bounded)
     ln.write_native_scalar_index(path, "source")
-    idx = ln.latest_native_fts_index(path, "text")
+    idx = ln.latest_native_index(path, "text", ln.TEXT_FAMILIES)
 
     query = " ".join(_S21_TERMS)
     got, st = ln.native_fts_search(
@@ -1951,7 +1951,7 @@ def s22(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln.write_native_fts_index(path, "text", n_buckets=8, spark=spark)
     ln.write_native_bitmap_index(path, "lang", n_buckets=4, spark=spark)
     # access path: the prefilter column has a BITMAP index and NO btree
-    assert ln.latest_native_bitmap_index(path, "lang") is not None
+    assert ln.latest_native_index(path, "lang", "bitmap") is not None
     assert not [i for i in ln.list_native_scalar_indices(path)
                 if i.column == "lang"]
     # bitmap lookup parity against a direct scan of the stored column
@@ -1970,7 +1970,7 @@ def s22(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = " ".join(_S22_TERMS)
     got, st = ln.native_fts_search(
         path, "text", query, k=15,
-        index=ln.latest_native_fts_index(path, "text"),
+        index=ln.latest_native_index(path, "text", ln.TEXT_FAMILIES),
         prefilter=("lang", list(_S22_LANGS)))
     assert st["mode"] == "driver"
 
@@ -2037,7 +2037,7 @@ def s23(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ln.create_native_dataset(src, path, file_version=2)
     ln.write_native_label_index(path, "tags", n_buckets=4, spark=spark)
-    idx = ln.latest_native_label_index(path, "tags")
+    idx = ln.latest_native_index(path, "tags", "label_list")
     assert idx is not None and idx.analyzer == "label-v1"
 
     m = ln.read_native_manifest(path)
@@ -2191,7 +2191,7 @@ def s24(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln.write_native_vector_index(
         path, "embedding", n_cells=4, nsub=8, spark=spark)
     ln.write_native_bitmap_index(path, "lang", n_buckets=4)
-    assert ln.latest_native_bitmap_index(path, "lang") is not None
+    assert ln.latest_native_index(path, "lang", "bitmap") is not None
     assert not [i for i in ln.list_native_scalar_indices(path)
                 if i.column == "lang"]  # the bitmap serves the filter
 
@@ -2226,7 +2226,7 @@ def s24(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the SAME allowed set, exact left-fold cosine re-rank
     allowed, _cov = ln.native_bitmap_lookup(
         path, "lang", list(_S24_LANGS))
-    idx = ln.latest_native_vector_index(path, "embedding")
+    idx = ln.latest_native_index(path, "embedding", "ivf_pq")
     emb_field = next(f for f in m.top_level_fields()
                      if f.name == "embedding")
     qv = [float(x) for x in src.where(
@@ -2376,7 +2376,7 @@ def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append").save(path)
     assert ln.extend_native_fts_index(path, "text", spark=spark)
 
-    idx = ln.latest_native_fts_index(path, "text")
+    idx = ln.latest_native_index(path, "text", ln.TEXT_FAMILIES)
     assert idx.n_runs == 2
     got, st = ln.native_fts_search(path, "text", _S25_QUERY, k=15,
                                    index=idx)
@@ -2408,7 +2408,7 @@ def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the own-format flat-HNSW (vector_index.py build_hnsw/_search_hnsw_graph,
 # 16k-row shard graphs) on REAL `.lance` datasets — `_indices/<uuid>/
 # hnsw.json` + Arrow-IPC shard graphs next to the IVF family, with the
-# full lifecycle: coverage.json vacuum rules, per-fragment O(delta)
+# full lifecycle: coverage-based vacuum rules, per-fragment O(delta)
 # extend, live-snapshot fresh union, SQL `CREATE VECTOR INDEX ... USING
 # HNSW`. Self-validating (the s11 pattern): at ef = ALL the beam search
 # must return EXACTLY the brute-force f32-cosine top-k (same float32
@@ -2515,7 +2515,7 @@ def s26(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-fragment O(delta) extend, then index-only search == brute
     assert ln.extend_native_hnsw_index(path, "embedding",
                                        spark=spark) == uid
-    idx = ln.latest_native_hnsw_index(path, "embedding")
+    idx = ln.latest_native_index(path, "embedding", "hnsw")
     extend_ok = (idx.covered_fragments
                  == {f.id for f in m.fragments})
     res = ln.native_hnsw_search(
@@ -2636,7 +2636,7 @@ def s27(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(delta) per-cell run extend, then index-only exactness
     assert ln.extend_native_ivf_hnsw_index(
         path, "embedding", spark=spark) == uid
-    idx = ln.latest_native_ivf_hnsw_index(path, "embedding")
+    idx = ln.latest_native_index(path, "embedding", "ivf_hnsw")
     extend_ok = idx.covered_fragments == {f.id for f in m.fragments}
     res = ln.native_ivf_hnsw_search(
         path, qvecs, k=_S27_K, nprobe=_S27_CELLS,
@@ -2716,10 +2716,10 @@ def s28(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ln.create_native_dataset(src, path)
     ln.write_native_ngram_index(path, "text", n_buckets=8, spark=spark)
-    idx = ln.latest_native_ngram_index(path, "text")
+    idx = ln.latest_native_index(path, "text", "ngram")
     assert idx is not None and idx.analyzer == "ngram-v1"
     # a trigram sidecar never hijacks text search (r14 guard)
-    assert ln.latest_native_fts_index(path, "text") is None
+    assert ln.latest_native_index(path, "text", ln.TEXT_FAMILIES) is None
 
     register_lance_datasource(spark)
     df = spark.read.format("lance").load(path)
@@ -2966,20 +2966,20 @@ def s30(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln.write_native_label_index(path, "tags", n_buckets=4, spark=spark)
     # access path: the list-typed prefilter column is served by the
     # LABEL index (no scalar index exists on it)
-    assert ln.latest_native_label_index(path, "tags") is not None
+    assert ln.latest_native_index(path, "tags", "label_list") is not None
     assert not [i for i in ln.list_native_scalar_indices(path)
                 if i.column == "tags"]
 
     query = " ".join(_S30_TERMS)
     got, st = ln.native_fts_search(
         path, "text", query, k=15,
-        index=ln.latest_native_fts_index(path, "text"),
+        index=ln.latest_native_index(path, "text", ln.TEXT_FAMILIES),
         prefilter=("tags", list(_S30_VALS)))
     assert st["mode"] == "driver"
     # every hit scores exactly its unfiltered score (global stats)
     unf, _ = ln.native_fts_search(
         path, "text", query, k=10_000,
-        index=ln.latest_native_fts_index(path, "text"))
+        index=ln.latest_native_index(path, "text", ln.TEXT_FAMILIES))
     by_addr = {a: s for a, _dl, s in unf}
     assert all(s == by_addr[a] for a, _dl, s in got)
 

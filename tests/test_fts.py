@@ -67,7 +67,7 @@ def test_fts_build_probe_matches_bruteforce(tmp_path):
     root = str(tmp_path / "fts.lance")
     _mk(root)
     uid = ln.write_native_fts_index(root, "text", n_buckets=4)
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert os.path.basename(os.path.dirname(idx.path)) == uid
     assert idx.n_docs == len(DOCS)
     assert idx.sum_dl == sum(len(ln._fts_tokenize(t)) for t in DOCS)
@@ -104,7 +104,7 @@ def test_fts_distributed_build_parity(tmp_path, spark, monkeypatch,
     uid2 = ln.write_native_fts_index(
         root, "text", n_buckets=4, spark=spark)
     monkeypatch.undo()
-    idxs = [i for i in ln.list_native_fts_indices(root)
+    idxs = [i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
             if i.column == "text"]
     assert len(idxs) == 2
     a, b = idxs
@@ -128,13 +128,13 @@ def test_fts_extend_runs_and_compaction(tmp_path, monkeypatch):
     ln.append_native_rows(root, {
         "doc_id": [100, 101], "text": extra1})
     uid = ln.extend_native_fts_index(root, "text")
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert os.path.basename(os.path.dirname(idx.path)) == uid
     assert idx.n_runs == 2 and idx.n_docs == len(DOCS) + 2
 
     # extended search == fresh rebuild search (bit-identical)
     rb_uid = ln.write_native_fts_index(root, "text", n_buckets=4)
-    rb = next(i for i in ln.list_native_fts_indices(root)
+    rb = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
               if os.path.dirname(i.path).endswith(rb_uid))
     for q in ["merge stream", "vector", "fresh content"]:
         re_, _ = ln.native_fts_search(root, "text", q, k=8, index=idx)
@@ -151,11 +151,11 @@ def test_fts_extend_runs_and_compaction(tmp_path, monkeypatch):
     ln.append_native_rows(root, {
         "doc_id": [102], "text": ["stream the merge again"]})
     ln.extend_native_fts_index(root, "text")  # 3rd run -> compacts
-    idx3 = next(i for i in ln.list_native_fts_indices(root)
+    idx3 = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
                 if os.path.dirname(i.path) == os.path.dirname(idx.path))
     assert idx3.n_runs == 1 and idx3.n_docs == len(DOCS) + 3
     rb2_uid = ln.write_native_fts_index(root, "text", n_buckets=4)
-    rb2 = next(i for i in ln.list_native_fts_indices(root)
+    rb2 = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
                if os.path.dirname(i.path).endswith(rb2_uid))
     for q in ["merge stream again", "vector"]:
         rc, _ = ln.native_fts_search(root, "text", q, k=8, index=idx3)
@@ -258,7 +258,7 @@ def test_fts_sql_routes(spark, tmp_path):
     import lance_trino_spark.format.lance_native as ln
 
     np_ = cat.namespace.table_location("s", "d")
-    assert ln.latest_native_fts_index(np_, "text") is None
+    assert ln.latest_native_index(np_, "text", ln.TEXT_FAMILIES) is None
     assert [i for i in ln.list_native_scalar_indices(np_)
             if i.column == "doc_id"]
     with pytest.raises(CatalogError, match="no native fts index"):
@@ -331,14 +331,14 @@ def test_fts_compaction_prunes_dead_and_refreshes_stats(tmp_path,
     _mk(root)
     ln.write_native_fts_index(root, "text", n_buckets=4)
     ln.native_delete(root, {0: np.asarray([5])})  # "merge merge merge"
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert idx.n_docs == len(DOCS)  # stats drift until compaction
 
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 2)
     ln.append_native_rows(root, {
         "doc_id": [200], "text": ["merge of fresh things"]})
     ln.extend_native_fts_index(root, "text")  # 2nd run -> compacts
-    idx2 = ln.latest_native_fts_index(root, "text")
+    idx2 = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert idx2.n_runs == 1
     assert idx2.n_docs == len(DOCS)  # 10 - 1 deleted + 1 appended
     dead_dl = len(ln._fts_tokenize(DOCS[5]))
@@ -356,7 +356,7 @@ def test_fts_compaction_prunes_dead_and_refreshes_stats(tmp_path,
                for a in post["merge"][0])
     # post-compaction scores == a fresh serial build's (DV-aware build)
     rb_uid = ln.write_native_fts_index(root, "text", n_buckets=4)
-    rb = next(i for i in ln.list_native_fts_indices(root)
+    rb = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
               if os.path.dirname(i.path).endswith(rb_uid))
     for q in ["merge stream", "fresh things"]:
         rc, _ = ln.native_fts_search(root, "text", q, k=8, index=idx2)
@@ -423,7 +423,7 @@ def test_fts_randomized_lifecycle_bruteforce(tmp_path):
             assert ln.extend_native_fts_index(root, "text")  # compacts
         finally:
             _ln.MAX_INDEX_RUNS = saved
-        idx = ln.latest_native_fts_index(root, "text")
+        idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
         assert idx.n_runs == 1 and idx.n_docs == len(live)
         ordered = sorted(live.items())  # (frag,pos) order == addr order
         texts = [t for _, t in ordered]
@@ -522,7 +522,7 @@ def test_fts_search_cap_and_distributed_parity(tmp_path, spark, monkeypatch):
     # guidance (strip fields 5-7 by rewriting postings sans skips)
     import numpy as np
 
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     dd = os.path.dirname(idx.path)
     for run in idx.run_files:
         for nm in run:
@@ -712,7 +712,7 @@ def test_fts_phrase_refuses_prepositional_postings(tmp_path):
     root = str(tmp_path / "fts_oldpost.lance")
     _mk(root)
     ln.write_native_fts_index(root, "text", n_buckets=2)
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     d = os.path.dirname(idx.path)
     # strip positions from every postings file (rewrite in place)
     for run in idx.run_files:
@@ -775,8 +775,8 @@ def test_fts_distributed_compaction_parity(tmp_path, spark, monkeypatch,
     ln.extend_native_fts_index(rb, "text", spark=spark)
     monkeypatch.undo()
 
-    ia = ln.latest_native_fts_index(ra, "text")
-    ib = ln.latest_native_fts_index(rb, "text")
+    ia = ln.latest_native_index(ra, "text", ln.TEXT_FAMILIES)
+    ib = ln.latest_native_index(rb, "text", ln.TEXT_FAMILIES)
     assert ia.n_runs == 1 and ib.n_runs == 1  # both compacted
     assert (ia.n_docs, ia.sum_dl) == (ib.n_docs, ib.sum_dl)
     assert ia.doclen_files == ib.doclen_files or \
@@ -953,7 +953,7 @@ def test_fts_simple_analyzer(tmp_path, spark):
         ln.write_native_fts_index(root, "text", analyzer="nope")
     ln.write_native_fts_index(root, "text", n_buckets=4,
                               analyzer="simple-v1")
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert idx.analyzer == "simple-v1"
     # case-insensitive term match incl. the punctuation-mangled docs
     got, _ = ln.native_fts_search(root, "text", "MERGE", k=10)
@@ -981,7 +981,7 @@ def test_fts_simple_analyzer(tmp_path, spark):
                    for a, _dl, _s in got} or any(
         (a >> 32) > 0 for a, _dl, _s in got)  # delta doc surfaced
     ln.extend_native_fts_index(root, "text")
-    idx2 = ln.latest_native_fts_index(root, "text")
+    idx2 = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert idx2.analyzer == "simple-v1" and idx2.n_runs == 2
     got, _ = ln.native_fts_search(root, "text", '"merge stream"', k=10)
     assert any((a >> 32) == 1 for a, _dl, _s in got)
@@ -1120,7 +1120,7 @@ def test_bitmap_index_family(tmp_path, spark):
         "text": [f"merge w{i % 7} filler{i}" for i in range(100)],
     })
     uid = ln.write_native_bitmap_index(root, "tag", n_buckets=4)
-    idx = ln.latest_native_bitmap_index(root, "tag")
+    idx = ln.latest_native_index(root, "tag", "bitmap")
     assert idx is not None and idx.analyzer == "keyword-v1"
     assert os.path.basename(os.path.dirname(idx.path)) == uid
 
@@ -1194,7 +1194,7 @@ def test_label_list_index_family(tmp_path, spark, routing_threshold):
     with pytest.raises(ln.LanceNativeError, match="list column"):
         ln.write_native_label_index(root, "doc_id")
     uid = ln.write_native_label_index(root, "tags", n_buckets=4)
-    idx = ln.latest_native_label_index(root, "tags")
+    idx = ln.latest_native_index(root, "tags", "label_list")
     assert idx and idx.analyzer == "label-v1"
     assert os.path.basename(os.path.dirname(idx.path)) == uid
 
@@ -1223,7 +1223,7 @@ def test_label_list_index_family(tmp_path, spark, routing_threshold):
     routing_threshold("fts", 0)
     uid2 = ln.write_native_fts_index(
         root, "tags", n_buckets=4, spark=spark, analyzer="label-v1")
-    idx2 = next(i for i in ln.list_native_fts_indices(root)
+    idx2 = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
                 if os.path.basename(os.path.dirname(i.path)) == uid2)
     rows_a, _ = ln.native_label_lookup(root, "tags", ["ml", "red"],
                                        mode="all", index=idx)
@@ -1308,7 +1308,7 @@ def test_fts_fuzzy_expansion_never_materializes_vocab(tmp_path, spark,
     ln.extend_native_fts_index(root, "text")
 
     # (a) vectorized filter == scalar reference on this real vocabulary
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     d = os.path.dirname(idx.path)
     all_tokens = set()
     file_token_sum = 0
@@ -1558,11 +1558,11 @@ def test_ngram_index_family(tmp_path, spark, monkeypatch, routing_threshold):
     with pytest.raises(ln.LanceNativeError, match="string column"):
         ln.write_native_ngram_index(root, "doc_id")
     uid = ln.write_native_ngram_index(root, "s", n_buckets=4)
-    idx = ln.latest_native_ngram_index(root, "s")
+    idx = ln.latest_native_index(root, "s", "ngram")
     assert idx is not None and idx.analyzer == "ngram-v1"
     assert os.path.basename(os.path.dirname(idx.path)) == uid
     # a trigram sidecar must never hijack text search
-    assert ln.latest_native_fts_index(root, "s") is None
+    assert ln.latest_native_index(root, "s", ln.TEXT_FAMILIES) is None
 
     def brute_ci(needle):
         return sorted(i for i, v in enumerate(vals)
@@ -1594,7 +1594,7 @@ def test_ngram_index_family(tmp_path, spark, monkeypatch, routing_threshold):
     routing_threshold("fts", 0)
     uid2 = ln.write_native_fts_index(
         root, "s", n_buckets=4, spark=spark, analyzer="ngram-v1")
-    idx2 = next(i for i in ln.list_native_fts_indices(root)
+    idx2 = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
                 if os.path.basename(os.path.dirname(i.path)) == uid2)
     a1, _ = ln.native_ngram_lookup(root, "s", "quick", index=idx)
     a2, _ = ln.native_ngram_lookup(root, "s", "quick", index=idx2)
@@ -1748,7 +1748,7 @@ def test_label_has_any_prefilter(tmp_path, spark):
     assert sorted(allowed[0].tolist()) == want
 
     # fallback arms (drop the index -> fragments uncovered)
-    idx = ln.latest_native_label_index(root, "tags")
+    idx = ln.latest_native_index(root, "tags", "label_list")
     shutil.rmtree(os.path.dirname(idx.path))
     a2 = ln._native_prefilter_rows(root, live, ("tags", vals))
     assert sorted(a2[0].tolist()) == want

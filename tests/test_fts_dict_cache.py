@@ -88,7 +88,7 @@ def _mk(root: str, rng, n: int = 600) -> None:
 
 def _postings_files(root: str) -> list[str]:
     out = []
-    for idx in ln.list_native_fts_indices(root):
+    for idx in ln.list_native_indices(root, ln.INVERTED_FAMILIES):
         d = os.path.dirname(idx.path)
         out += [os.path.join(d, b) for run in idx.run_files for b in run
                 if b]
@@ -231,7 +231,7 @@ def test_extend_new_run_terms_are_the_only_cold_decodes(tmp_path):
         "doc_id": [900], "text": ["brandnew w1"],
         "source": ["web"]})
     ln.extend_native_fts_index(root, "text")
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert idx.n_runs == 2
     got, st2 = ln.native_fts_search(root, "text", q, k=10)
     assert st2["terms_found"] == 9
@@ -258,10 +258,10 @@ def test_compacted_index_searches_like_a_fresh_build(tmp_path, monkeypatch):
         "doc_id": [700, 701], "text": ["w1 w2 w3 w4", "naïve w5"],
         "source": ["web", "news"]})
     ln.extend_native_fts_index(root, "text")  # 2nd run -> compacts
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     assert idx.n_runs == 1
     rb_uid = ln.write_native_fts_index(root, "text", n_buckets=4)
-    rb = next(i for i in ln.list_native_fts_indices(root)
+    rb = next(i for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES)
               if os.path.dirname(i.path).endswith(rb_uid))
     for q in qs:
         assert ln.native_fts_search(root, "text", q, k=10, index=idx)[0] \
@@ -286,13 +286,14 @@ def test_fts_index_metadata_is_cached_and_new_indexes_are_seen(tmp_path):
     root = str(tmp_path / "meta.lance")
     _mk(root, rng, 100)
     ln.write_native_fts_index(root, "text", n_buckets=2)
-    idx = ln.latest_native_fts_index(root, "text")
-    assert ln.latest_native_fts_index(root, "text") is idx  # cache hit
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
+    # cache hit
+    assert ln.latest_native_index(root, "text", ln.TEXT_FAMILIES) is idx
     with pytest.raises(Exception):
         idx.n_docs = 0  # frozen
-    assert ln.latest_native_bitmap_index(root, "source") is None
+    assert ln.latest_native_index(root, "source", "bitmap") is None
     ln.write_native_bitmap_index(root, "source", n_buckets=2)
-    bm = ln.latest_native_bitmap_index(root, "source")
+    bm = ln.latest_native_index(root, "source", "bitmap")
     assert bm is not None and bm.analyzer == "keyword-v1"
     # a foreign index.idx keeps being refused, with the same message
     p = os.path.join(root, "_indices", "junk", "index.idx")
@@ -301,8 +302,8 @@ def test_fts_index_metadata_is_cached_and_new_indexes_are_seen(tmp_path):
         fh.write(b"not an index at all" * 2)
     for _ in range(2):
         with pytest.raises(ln.LanceNativeError, match="LANC footer"):
-            ln.read_native_fts_index(p)
-    assert ln.latest_native_fts_index(root, "text") is idx
+            ln.read_native_index(p)
+    assert ln.latest_native_index(root, "text", ln.TEXT_FAMILIES) is idx
 
 
 def test_remote_lookups_decode_each_dictionary_once_per_call(monkeypatch):
@@ -340,7 +341,7 @@ def test_remote_lookups_decode_each_dictionary_once_per_call(monkeypatch):
             assert sum(len(r) for r in rows.values()) == 41
             assert len(reads) == len(set(reads)) == 2  # one per run
             reads.clear()
-        idx = ln.latest_native_ngram_index(root, "s")
+        idx = ln.latest_native_index(root, "s", "ngram")
         assert idx.n_runs == 2
         cands, _cov = ln.native_ngram_lookup(root, "s", "quick brown")
         assert len(ln._fts_tokenize("quick brown", "ngram-v1")) > 5

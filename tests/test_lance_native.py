@@ -3362,7 +3362,7 @@ def test_native_vector_search_fresh_lifecycle(tmp_path):
     outlier = np.full(dim, 50.0, dtype=np.float32)
     ln.append_native_rows(
         root, {"vid": [n], "emb": [[float(x) for x in outlier]]})
-    idx = ln.latest_native_vector_index(root, "emb")
+    idx = ln.latest_native_index(root, "emb", "ivf_pq")
     out_addr = (1 << 32) | 0  # fragment 1, row 0
     pinned = ln.native_index_search(
         root, idx, outlier, k=1, nprobe=idx.n_cells)
@@ -4268,11 +4268,11 @@ def test_extend_native_vector_index_incremental(spark, tmp_path):
         append_native_rows,
         ensure_native_vector_index,
         extend_native_vector_index,
-        latest_native_vector_index,
+        latest_native_index,
         native_index_coverage,
         native_index_search,
         read_native_manifest,
-        read_native_vector_index,
+        read_native_index,
         write_native_dataset,
         write_native_vector_index,
     )
@@ -4294,7 +4294,7 @@ def test_extend_native_vector_index_incremental(spark, tmp_path):
         extend_native_vector_index(root, "embedding")
 
     write_native_vector_index(root, "embedding", n_cells=4, nsub=8)
-    old = latest_native_vector_index(root, "embedding")
+    old = latest_native_index(root, "embedding", "ivf_pq")
 
     # covered: extend is a no-op
     assert extend_native_vector_index(root, "embedding") is None
@@ -4302,7 +4302,7 @@ def test_extend_native_vector_index_incremental(spark, tmp_path):
     append_native_rows(root, cols(extra, 400))
     uid = extend_native_vector_index(root, "embedding")
     assert uid is not None
-    new = latest_native_vector_index(root, "embedding")
+    new = latest_native_index(root, "embedding", "ivf_pq")
     assert os.path.basename(os.path.dirname(new.path)) == uid
 
     # trained geometry reused verbatim
@@ -4330,7 +4330,7 @@ def test_extend_native_vector_index_incremental(spark, tmp_path):
     # both order-exact over the same candidate set)
     rebuilt_uid = write_native_vector_index(
         root, "embedding", n_cells=4, nsub=8)
-    rebuilt = read_native_vector_index(
+    rebuilt = read_native_index(
         os.path.join(root, "_indices", rebuilt_uid, "index.idx"))
     for qi in (0, 250, 450):
         q = np.concatenate([base, extra])[qi]
@@ -4344,12 +4344,12 @@ def test_extend_native_vector_index_incremental(spark, tmp_path):
     # NOTE: the extended and rebuilt indexes share dataset_version, and
     # latest() tie-breaks by directory order — capture the actual base
     # the ensure will extend instead of assuming which one wins.
-    base_idx = latest_native_vector_index(root, "embedding")
+    base_idx = latest_native_index(root, "embedding", "ivf_pq")
     append_native_rows(root, cols(extra[:20], 500))
     uid2 = ensure_native_vector_index(
         root, "embedding", incremental=True, spark=spark)
     assert uid2 is not None
-    newest = read_native_vector_index(
+    newest = read_native_index(
         os.path.join(root, "_indices", uid2, "index.idx"))
     assert np.asarray(newest.centroids).tobytes() == np.asarray(
         base_idx.centroids).tobytes()
@@ -4512,11 +4512,11 @@ def test_extend_chain_stays_probe_correct(spark, tmp_path):
         append_native_rows,
         extend_native_scalar_index,
         extend_native_vector_index,
-        latest_native_vector_index,
+        latest_native_index,
         list_native_scalar_indices,
         native_index_search,
         read_native_manifest,
-        read_native_vector_index,
+        read_native_index,
         write_native_dataset,
         write_native_scalar_index,
         write_native_vector_index,
@@ -4536,7 +4536,7 @@ def test_extend_chain_stays_probe_correct(spark, tmp_path):
     write_native_dataset(root, cols(200, 0))
     write_native_vector_index(root, "embedding", n_cells=4, nsub=4)
     write_native_scalar_index(root, "vec_id", page_rows=64)
-    gen0 = latest_native_vector_index(root, "embedding")
+    gen0 = latest_native_index(root, "embedding", "ivf_pq")
 
     n = 200
     for _link in range(3):
@@ -4546,14 +4546,14 @@ def test_extend_chain_stays_probe_correct(spark, tmp_path):
         assert extend_native_scalar_index(root, "vec_id", page_rows=64) \
             is not None
 
-    newest = latest_native_vector_index(root, "embedding")
+    newest = latest_native_index(root, "embedding", "ivf_pq")
     assert np.asarray(newest.centroids).tobytes() == np.asarray(
         gen0.centroids).tobytes()
     assert sum(newest.part_lengths) == n
 
     m = read_native_manifest(root)
     rb_uid = write_native_vector_index(root, "embedding", n_cells=4, nsub=4)
-    rebuilt = read_native_vector_index(
+    rebuilt = read_native_index(
         os.path.join(root, "_indices", rb_uid, "index.idx"))
     q = np.asarray(cols(1, 0)["embedding"][0], dtype=np.float32)
     r_chain = native_index_search(
@@ -4809,7 +4809,7 @@ def test_ivf_sharded_lifecycle_and_vacuum(tmp_path, spark, monkeypatch):
 
     from lance_trino_spark.format.lance_native import (
         append_native_rows,
-        latest_native_vector_index,
+        latest_native_index,
         native_cleanup_old_versions,
         native_index_search,
         read_native_manifest,
@@ -4835,7 +4835,7 @@ def test_ivf_sharded_lifecycle_and_vacuum(tmp_path, spark, monkeypatch):
         root, "vector", n_cells=4, nsub=4, spark=spark)
     monkeypatch.undo()
 
-    idx1 = latest_native_vector_index(root, "vector")
+    idx1 = latest_native_index(root, "vector", "ivf_pq")
     d1 = _os.path.dirname(idx1.path)
     assert idx1.cell_shards and sum(idx1.part_lengths) == 500
     # orphan from a "failed attempt"
@@ -4850,7 +4850,7 @@ def test_ivf_sharded_lifecycle_and_vacuum(tmp_path, spark, monkeypatch):
     uid2 = extend_native_vector_index(root, "vector")
     # in-place LSM extend: SAME dir, delta files appended per cell
     assert uid2 == uid1
-    idx2 = latest_native_vector_index(root, "vector")
+    idx2 = latest_native_index(root, "vector", "ivf_pq")
     assert idx2.cell_shards and sum(idx2.part_lengths) == 600
     assert any(len(fs) == 2 for fs in idx2.cell_shards)  # old + delta
     m = read_native_manifest(root)
@@ -4867,7 +4867,7 @@ def test_ivf_sharded_lifecycle_and_vacuum(tmp_path, spark, monkeypatch):
     assert kept.count("index.idx") == 1 and "shards.json" in kept
     assert sum(1 for n in kept if n.startswith("cell-")) == n_files
     r = native_index_search(
-        root, latest_native_vector_index(root, "vector"), vecs[10],
+        root, latest_native_index(root, "vector", "ivf_pq"), vecs[10],
         k=3, nprobe=4, manifest=m)[0]
     assert len(r["neighbors"]) == 3
 
@@ -5041,7 +5041,7 @@ def test_sharded_indexes_on_pyarrow_fs_object_store(tmp_path, spark,
         assert len(idx2.shard_runs) == 2
         rows, _ = ln.scalar_index_lookup(idx2, eq_values=[5000])
         assert sum(len(v) for v in rows.values()) == 1
-        fts2 = ln.latest_native_fts_index(root, "text")
+        fts2 = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
         assert fts2.n_runs == 2 and fts2.n_docs == n + 1
         hits, _ = ln.native_fts_search(root, "text", "late", k=3)
         assert len(hits) == 1
@@ -5173,6 +5173,128 @@ def test_vacuum_debris_grace_window(tmp_path):
     native_cleanup_old_versions(root, keep_versions=1)
     assert not _os.path.exists(fresh)
     assert not _os.path.isdir(fresh_dir)
+
+
+def test_vacuum_never_supersedes_across_index_families(tmp_path):
+    """Supersede is per (family, column): an NGRAM index built one
+    append after an FTS index on the same column serves other queries
+    and must not get the FTS index reaped (it once was — every inverted
+    family shared one vacuum kind)."""
+    import os as _os
+
+    from lance_trino_spark.format import lance_native as ln
+
+    docs = {"id": [0, 1, 2], "text": ["red fox", "blue hen", "red hen"]}
+    root = str(tmp_path / "later.lance")
+    ln.write_native_dataset(root, docs)
+    fts_uid = ln.write_native_fts_index(root, "text", n_buckets=2)
+    ln.append_native_rows(root, {"id": [3], "text": ["green fox"]})
+    ngram_uid = ln.write_native_ngram_index(root, "text", n_buckets=2)
+    out = ln.native_cleanup_old_versions(
+        root, 1, debris_grace_seconds=0)
+    assert out["removed_index_dirs"] == 0
+    assert sorted(_os.listdir(_os.path.join(root, "_indices"))) == sorted(
+        [fts_uid, ngram_uid])
+    fts = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
+    assert fts is not None and fts.family == "fts"
+    assert _os.path.dirname(fts.path).endswith(fts_uid)
+
+
+def test_vacuum_keeps_fts_and_bitmap_built_at_one_version(tmp_path):
+    """The same-version tie of the rule above: a BITMAP and an FTS index
+    on one column at version 1 both survive, and text search keeps the
+    FTS index."""
+    import os as _os
+
+    from lance_trino_spark.format import lance_native as ln
+
+    docs = {"id": [0, 1, 2], "text": ["red fox", "blue hen", "red hen"]}
+    root = str(tmp_path / "tie.lance")
+    ln.write_native_dataset(root, docs)
+    fts_uid = ln.write_native_fts_index(root, "text", n_buckets=2)
+    bm_uid = ln.write_native_bitmap_index(root, "text", n_buckets=2)
+    out = ln.native_cleanup_old_versions(
+        root, 1, debris_grace_seconds=0)
+    assert out["removed_index_dirs"] == 0
+    assert sorted(_os.listdir(_os.path.join(root, "_indices"))) == sorted(
+        [fts_uid, bm_uid])
+    # at one version the family listed first wins the text lookup
+    fts = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
+    assert fts.analyzer == ln.FTS_ANALYZER
+    assert ln.latest_native_index(root, "text", "bitmap").analyzer \
+        == "keyword-v1"
+    got, _ = ln.native_fts_search(root, "text", "fox", k=5)
+    assert [a for a, _dl, _s in got] == [0]
+
+
+def test_vacuum_keeps_files_of_an_unreadable_index_meta(tmp_path):
+    """A directory whose index.idx no parser accepts keeps every shard,
+    postings and doclen file: with the meta unreadable nothing proves a
+    file unreferenced (the reaper once treated them all as debris)."""
+    import os as _os
+
+    from lance_trino_spark.format import lance_native as ln
+
+    root, _total = _build_scalar_ds(tmp_path)
+    ln.write_native_scalar_index(root, "k", page_rows=256, shard_rows=2048)
+    ln.write_native_fts_index(root, "name", n_buckets=2)
+    idx_root = _os.path.join(root, "_indices")
+    dirs = [_os.path.join(idx_root, d) for d in _os.listdir(idx_root)]
+    assert len(dirs) == 2
+    before = {d: sorted(_os.listdir(d)) for d in dirs}
+    for d in dirs:
+        assert any(n.startswith(("shard-", "post-")) for n in before[d])
+        with open(_os.path.join(d, "index.idx"), "wb") as fh:
+            fh.write(b"torn meta " * 4)
+    ln.native_cleanup_old_versions(root, 1, debris_grace_seconds=0)
+    assert {d: sorted(_os.listdir(d)) for d in dirs} == before
+    assert ln.list_native_indices(root) == []
+
+
+def test_index_lookup_by_column_opens_no_more_files(tmp_path, monkeypatch):
+    """The per-request lookups of the serving path stat the wanted
+    families' meta files and serve their records from the decode cache:
+    with six families built, a warm FTS, BITMAP, HNSW or IVF_HNSW lookup
+    opens no file (the per-family listers opened 0, 0, 1 and 3: HNSW
+    and IVF_HNSW metas were re-read on every lookup)."""
+    import numpy as np
+
+    from lance_trino_spark.format import lance_native as ln
+    from lance_trino_spark.format import native_io as nio
+
+    rng = np.random.default_rng(3)
+    n = 600
+    root = str(tmp_path / "six.lance")
+    ln.write_native_dataset(root, {
+        "id": list(range(n)),
+        "text": [f"w{i % 7} w{i % 11}" for i in range(n)],
+        "source": [["web", "news", "wiki"][i % 3] for i in range(n)],
+        "vec": [list(map(float, v)) for v in rng.standard_normal((n, 16))],
+    })
+    ln.write_native_scalar_index(root, "id")
+    ln.write_native_fts_index(root, "text", n_buckets=2)
+    ln.write_native_bitmap_index(root, "source", n_buckets=2)
+    ln.write_native_vector_index(root, "vec", n_cells=4, nsub=4)
+    ln.write_native_hnsw_index(root, "vec")
+    ln.write_native_ivf_hnsw_index(root, "vec", n_cells=2)
+    assert sorted(i.family for i in ln.list_native_indices(root)) == [
+        "bitmap", "btree", "fts", "hnsw", "ivf_hnsw", "ivf_pq"]
+    opened: list[str] = []
+    for name in ("open_read", "read_bytes"):
+        real = getattr(nio, name)
+
+        def counting(path, _real=real):
+            opened.append(os.path.basename(path))
+            return _real(path)
+
+        monkeypatch.setattr(nio, name, counting)
+    for col, fams in [("text", ln.TEXT_FAMILIES), ("source", "bitmap"),
+                      ("vec", "hnsw"), ("vec", "ivf_hnsw")]:
+        ln.latest_native_index(root, col, fams)  # warm
+        opened.clear()
+        idx = ln.latest_native_index(root, col, fams)
+        assert idx is not None and idx.column == col
+        assert opened == [], (fams, opened)
 
 
 def test_sharded_meta_missing_runs_field_is_loud(tmp_path):
@@ -5360,8 +5482,8 @@ def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch,
     ln.extend_native_vector_index(rb, "vector", spark=spark)
     monkeypatch.undo()
 
-    ia = ln.latest_native_vector_index(ra, "vector")
-    ib = ln.latest_native_vector_index(rb, "vector")
+    ia = ln.latest_native_index(ra, "vector", "ivf_pq")
+    ib = ln.latest_native_index(rb, "vector", "ivf_pq")
     assert ia.ivf_runs == 1 and ib.ivf_runs == 1
     # base builds used the same seed data -> same centroids/codebooks;
     # partitions must reassemble byte-identically
@@ -5382,10 +5504,10 @@ def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch,
     # legacy single-file base (serial build): the copy tasks extract
     # partition RANGES from index.idx
     rc = str(tmp_path / "legacy"); mk(rc, False)
-    ic0 = ln.latest_native_vector_index(rc, "vector")
+    ic0 = ln.latest_native_index(rc, "vector", "ivf_pq")
     assert not ic0.cell_shards  # single-file SDK layout
     ln.extend_native_vector_index(rc, "vector", spark=spark)
-    ic = ln.latest_native_vector_index(rc, "vector")
+    ic = ln.latest_native_index(rc, "vector", "ivf_pq")
     assert ic.cell_shards and sum(ic.part_lengths) == 700
     mc = ln.read_native_manifest(rc)
     sc = ln.native_index_search(rc, ic, q, k=5, nprobe=4, manifest=mc)
@@ -5514,7 +5636,7 @@ def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch,
     # under the threshold: serial twin, zero fan-outs
     uid = ln.extend_native_vector_index(root, "vector", spark=spark)
     assert uid is not None and calls["n"] == 0
-    idx = ln.latest_native_vector_index(root, "vector")
+    idx = ln.latest_native_index(root, "vector", "ivf_pq")
     assert sum(idx.part_lengths) == 300
     # over the threshold (forced): the distributed arm runs
     routing_threshold("ivf_extend", 0)
@@ -5522,7 +5644,7 @@ def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch,
         "vec_id": [300], "vector": [vecs[0].tolist()]})
     uid2 = ln.extend_native_vector_index(root, "vector", spark=spark)
     assert uid2 is not None and calls["n"] == 1
-    idx2 = ln.latest_native_vector_index(root, "vector")
+    idx2 = ln.latest_native_index(root, "vector", "ivf_pq")
     assert sum(idx2.part_lengths) == 301
     m = ln.read_native_manifest(root)
     r = ln.native_index_search(
@@ -5560,8 +5682,8 @@ def test_native_hnsw_sidecar_lifecycle(tmp_path, spark, routing_threshold):
         "vector": [v.tolist() for v in vecs[:300]]})
     uid2 = ln.write_native_hnsw_index(root2, "vector", m=8,
                                       ef_construction=32, spark=spark)
-    i1 = ln.latest_native_hnsw_index(root, "vector")
-    i2 = ln.latest_native_hnsw_index(root2, "vector")
+    i1 = ln.latest_native_index(root, "vector", "hnsw")
+    i2 = ln.latest_native_index(root2, "vector", "hnsw")
     assert [s[:3] for s in i1.shards] == [s[:3] for s in i2.shards]
     for s1, s2 in zip(i1.shards, i2.shards):
         b1 = ln._hnsw_read_graph(_os.path.join(
@@ -5589,7 +5711,7 @@ def test_native_hnsw_sidecar_lifecycle(tmp_path, spark, routing_threshold):
     assert fr[0]["uncovered_fragments"] == 1
     old_names = {s[3] for s in i1.shards}
     assert ln.extend_native_hnsw_index(root, "vector") == uid
-    i1b = ln.latest_native_hnsw_index(root, "vector")
+    i1b = ln.latest_native_index(root, "vector", "hnsw")
     assert i1b.covered_fragments == {0, 1}
     assert old_names < {s[3] for s in i1b.shards}  # old graphs untouched
     assert ln.ensure_native_hnsw_index(root, "vector") is None
@@ -5604,7 +5726,7 @@ def test_native_hnsw_sidecar_lifecycle(tmp_path, spark, routing_threshold):
     assert (1 << 32) | 50 not in r3[0]["neighbors"]
     # distributed search == serial search, over two shards (one per
     # fragment) with a deletion vector to mask
-    assert len(ln.latest_native_hnsw_index(root, "vector").shards) == 2
+    assert len(ln.latest_native_index(root, "vector", "hnsw").shards) == 2
     qs = np.concatenate([vecs[[350, 7]], rng.normal(size=(3, 12))])
     serial = ln.native_hnsw_search(root, qs, k=6, ef_search=32,
                                    column="vector", spark=spark)
@@ -5675,7 +5797,7 @@ def test_native_hnsw_on_pyarrow_fs_object_store(tmp_path, spark,
             "vec_id": list(range(250)),
             "vector": [v.tolist() for v in vecs[:250]]})
         uid = ln.write_native_hnsw_index(root, "vector", spark=spark)
-        idx = ln.latest_native_hnsw_index(root, "vector")
+        idx = ln.latest_native_index(root, "vector", "hnsw")
         q = vecs[[5, 99]]
         routing_threshold("hnsw_search", 0)
         res = ln.native_hnsw_search(root, q, k=4, ef_search=300,
@@ -5733,7 +5855,7 @@ def test_native_ivf_hnsw_composite_lifecycle(tmp_path, spark):
     root = str(tmp_path / "c.lance")
     mk(root, 500)
     uid = ln.write_native_ivf_hnsw_index(root, "vector", n_cells=4)
-    idx = ln.latest_native_ivf_hnsw_index(root, "vector")
+    idx = ln.latest_native_index(root, "vector", "ivf_hnsw")
 
     # exact parity at nprobe=all + ef=all vs brute-force f32 cosine
     q = vecs[[3, 77]]
@@ -5754,7 +5876,7 @@ def test_native_ivf_hnsw_composite_lifecycle(tmp_path, spark):
     mk(root2, 500)
     ln.write_native_ivf_hnsw_index(root2, "vector", n_cells=4,
                                    spark=spark)
-    i2 = ln.latest_native_ivf_hnsw_index(root2, "vector")
+    i2 = ln.latest_native_index(root2, "vector", "ivf_hnsw")
     assert [len(c) for c in i2.cells] == [len(c) for c in idx.cells]
     for c in range(4):
         for (n1, _r1), (n2, _r2) in zip(idx.cells[c], i2.cells[c]):
@@ -5773,7 +5895,7 @@ def test_native_ivf_hnsw_composite_lifecycle(tmp_path, spark):
     assert fr[0]["neighbors"][0] == (1 << 32) | 50
     assert fr[0]["uncovered_fragments"] == 1
     assert ln.extend_native_ivf_hnsw_index(root, "vector") == uid
-    idx2 = ln.latest_native_ivf_hnsw_index(root, "vector")
+    idx2 = ln.latest_native_index(root, "vector", "ivf_hnsw")
     assert idx2.covered_fragments == {0, 1}
     # old run graphs ride over untouched; touched cells gained one run
     for c in range(4):

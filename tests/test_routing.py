@@ -134,7 +134,7 @@ def _native_hnsw_build(spark, root):
 
 
 def _native_hnsw_search(spark, root):
-    assert ln.latest_native_hnsw_index(root, "vector").n_shards == 2
+    assert ln.latest_native_index(root, "vector", "hnsw").n_shards == 2
     res = ln.native_hnsw_search(root, _vectors(6, seed=9), k=5,
                                 ef_search=16, column="vector", spark=spark)
     return {f"q{i}": (r["neighbors"], r["sims"]) for i, r in enumerate(res)}

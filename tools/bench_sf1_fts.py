@@ -48,7 +48,7 @@ def main() -> None:
         "append").save(root)
     # make the distributed-built index the latest-by-dir deterministic
     # target: drop the serial twin
-    for i in ln.list_native_fts_indices(root):
+    for i in ln.list_native_indices(root, ln.INVERTED_FAMILIES):
         if not os.path.dirname(i.path).endswith(uid_d):
             shutil.rmtree(os.path.dirname(i.path))
     t0 = time.monotonic()
@@ -58,7 +58,7 @@ def main() -> None:
     ln.write_native_fts_index(root, "text", n_buckets=32, spark=spark)
     t_rebuild = time.monotonic() - t0
 
-    idx = ln.latest_native_fts_index(root, "text")
+    idx = ln.latest_native_index(root, "text", ln.TEXT_FAMILIES)
     n_docs = idx.n_docs
 
     def best(fn, n=5):
