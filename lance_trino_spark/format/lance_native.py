@@ -5026,38 +5026,112 @@ def list_native_vector_indices(root: str) -> list[NativeVectorIndex]:
     return list_native_indices(root, "ivf_pq")
 
 
-def _read_index_partition(index: NativeVectorIndex, cell: int):
-    """One IVF partition's (pq codes [n, nsub] u8, row ids [n] u64) via a
-    bounded range read — never the whole index file. A SHARDED index
-    reads the cell's own shard file (same body layout, same bound)."""
+# IVF_PQ search bodies (statcache.StatLRU, A18's index cache, the vector
+# part): each probed partition piece (PQ codes + row ids) and each data
+# file's vector column, decoded once per process into read-only arrays
+# that own their memory (never a view pinning a data file's mmap —
+# vacuum may reap the file). Keys name the bytes held: a cell shard file
+# is written once, so its stat is enough; a single-file partition is
+# index.idx's stat plus the cell's (offset, rows); a vector column is
+# its data file's stat plus the column index. One budget for both.
+VECTOR_CACHE_BYTES = 256 << 20
+_VECTOR_BODIES = StatLRU(VECTOR_CACHE_BYTES)
+
+
+def _owned(a):
+    """``a`` copied into memory it owns, read-only (a shared cache value)."""
+    a = a.copy()
+    a.setflags(write=False)
+    return a
+
+
+def _partition_pieces(index: NativeVectorIndex, cell: int
+                      ) -> tuple[list, int]:
+    """(one IVF partition as read-only (pq codes [n, nsub] u8, row ids
+    [n] u64) pieces in concatenation order, how many pieces this call
+    decoded cold). Each piece is one bounded read — a sharded index's
+    cell shard files, else the cell's range of index.idx — never the
+    whole index file."""
     import numpy as np
 
-    n = index.part_lengths[cell]
     nsub = index.pq_nsub
+
+    def decode(body, m):
+        codes = np.frombuffer(body, dtype="u1", count=m * nsub)
+        rids = np.frombuffer(body, dtype="<u8", count=m, offset=m * nsub)
+        return ((_owned(codes.reshape(m, nsub)), _owned(rids)),
+                m * (nsub + 8))
+
+    def decode_shard(path):
+        body = nio.read_bytes(path)
+        return decode(body, len(body) // (nsub + 8))
+
     if index.cell_shards:
-        names = index.cell_shards[cell]
-        if not names:  # empty cell: no shard file was written
-            return (np.empty((0, nsub), dtype="u1"),
-                    np.empty(0, dtype="<u8"))
         base = os.path.dirname(index.path)
-        codes_parts, rid_parts = [], []
-        for name in names:
-            part = nio.read_bytes(os.path.join(base, name))
-            m = len(part) // (nsub + 8)
-            codes_parts.append(np.frombuffer(
-                part, dtype="u1", count=m * nsub).reshape(m, nsub))
-            rid_parts.append(np.frombuffer(
-                part, dtype="<u8", count=m, offset=m * nsub))
-        codes = np.concatenate(codes_parts)
-        rids = np.concatenate(rid_parts)
-        return codes, rids
+        loaded = [_VECTOR_BODIES.load(os.path.join(base, name), decode_shard)
+                  for name in index.cell_shards[cell]]
     else:
-        with nio.open_read(index.path) as fh:
-            fh.seek(index.part_offsets[cell])
-            body = fh.read(n * (nsub + 8))
-    codes = np.frombuffer(body, dtype="u1", count=n * nsub).reshape(n, nsub)
-    rids = np.frombuffer(body, dtype="<u8", count=n, offset=n * nsub)
-    return codes, rids
+        off, n = index.part_offsets[cell], index.part_lengths[cell]
+
+        def decode_range(path):
+            with nio.open_read(path) as fh:
+                fh.seek(off)
+                return decode(fh.read(n * (nsub + 8)), n)
+
+        loaded = [_VECTOR_BODIES.load(
+            index.path, decode_range, part=(off, n))] if n else []
+    return [p for p, _ in loaded], sum(cold for _, cold in loaded)
+
+
+def _read_index_partition(index: NativeVectorIndex, cell: int):
+    """One IVF partition's (pq codes [n, nsub] u8, row ids [n] u64), its
+    pieces concatenated (see _partition_pieces)."""
+    import numpy as np
+
+    pieces, _ = _partition_pieces(index, cell)
+    if not pieces:  # empty cell: no shard file was written
+        return (np.empty((0, index.pq_nsub), dtype="u1"),
+                np.empty(0, dtype="<u8"))
+    return (np.concatenate([c for c, _ in pieces]),
+            np.concatenate([r for _, r in pieces]))
+
+
+def _vector_column(root: str, frag: NativeFragment, nfield: NativeField,
+                   manifest: NativeManifest) -> tuple[tuple, bool]:
+    """((vectors float32 [physical rows, dim], validity bool [rows]) of
+    the fixed_size_list column ``nfield`` in ``frag``, whether this call
+    decoded it cold). Both arrays are read-only; rows are file-physical
+    positions, NULL rows hold whatever the file stores."""
+    import numpy as np
+    import pyarrow as pa
+
+    dfile, col_idx = frag.file_for_field(nfield.id)
+    dim = int(nfield.logical_type.split(":")[2])
+
+    def decode(_path):
+        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
+        if isinstance(arr, pa.ChunkedArray):
+            arr = arr.combine_chunks()
+        vals = arr.values.slice(arr.offset * dim, len(arr) * dim)
+        vecs = _owned(np.asarray(vals, dtype=np.float32).reshape(-1, dim))
+        valid = _owned(np.asarray(arr.is_valid(), dtype=bool))
+        return (vecs, valid), vecs.nbytes + valid.nbytes
+
+    return _VECTOR_BODIES.load(
+        os.path.join(root, "data", dfile.path), decode, part=col_idx)
+
+
+def _stable_topk(x, k: int):
+    """Positions of the ``k`` smallest FINITE values of ``x`` in
+    ``np.argsort(x, kind="stable")`` order — ties keep position order —
+    without sorting the whole array: the k-th value bounds the rows a
+    stable sort has to see."""
+    import numpy as np
+
+    kth = np.partition(x, k - 1)[k - 1] if len(x) > k else np.inf
+    # a non-finite k-th value: fewer than k finite values, keep them all
+    rows = np.flatnonzero(x <= kth if np.isfinite(kth) else np.isfinite(x))
+    return rows[np.argsort(x[rows], kind="stable")[:k]]
 
 
 def native_index_search(
@@ -5074,12 +5148,16 @@ def native_index_search(
     allowed_by_fragment: dict | None = None,
 ):
     """ANN over a persisted `.lance` vector index: per query, probe the
-    ``nprobe`` nearest IVF cells (L2 to centroids), range-read ONLY those
-    partitions of index.idx, then REFINE candidates with exact vectors
-    late-materialized from the dataset (read_file_column at candidate row
-    indices only). Returns a list of dicts with exact-L2 top-k plus
-    access-path proof fields (cells_probed, n_candidates, n_refined,
-    index_bytes_read).
+    ``nprobe`` nearest IVF cells (L2 to centroids), read ONLY those
+    partitions, then REFINE candidates with exact vectors gathered at
+    candidate rows from the dataset's vector column. Partitions and
+    vector columns are served from the process-wide ``_VECTOR_BODIES``
+    cache (decoded once, then shared by every call). Returns a list of
+    dicts with exact-L2 top-k plus access-path proof fields
+    (cells_probed, n_candidates, n_refined, index_bytes_read — bytes of
+    the probed partitions, cached or not — and cells_decoded /
+    vectors_decoded: partition pieces and vector columns this call
+    decoded cold).
 
     ``refine_factor``: with None (default) every probed candidate is
     exactly refined — refine cost is bounded only by the probed
@@ -5118,8 +5196,14 @@ def native_index_search(
     nsub, subdim = index.pq_nsub, index.dim // index.pq_nsub
     cb = index.pq_codebook  # [nsub, 256, subdim]
     frag_by_id = {f.id: f for f in manifest.fragments}
-    part_cache: dict[int, tuple] = {}
+    nfield = next((f for f in manifest.top_level_fields()
+                   if f.name == index.column), None)
+    # per-call memos: a remote root (no process-wide cache) still reads
+    # each partition and vector column at most once per call
+    part_cache: dict[int, list] = {}
+    col_cache: dict[int, tuple] = {}
     dead_cache: dict[int, "np.ndarray"] = {}
+    cells_decoded = vectors_decoded = 0
     results = []
     for qi in range(q.shape[0]):
         qv = q[qi]
@@ -5130,17 +5214,20 @@ def native_index_search(
         for cell in cells:
             cell = int(cell)
             if cell not in part_cache:
-                part_cache[cell] = _read_index_partition(index, cell)
-            codes, rids = part_cache[cell]
+                part_cache[cell], cold = _partition_pieces(index, cell)
+                cells_decoded += cold
             bytes_read += index.part_lengths[cell] * (nsub + 8)
-            cand_rids.append(rids)
             if refine_factor is not None:
                 # residual-PQ lookup table for this cell: [nsub, 256]
                 resid = (qv - index.centroids[cell]).reshape(nsub, 1, subdim)
                 lut = ((cb - resid) ** 2).sum(axis=2)
-                d = lut[np.arange(nsub)[:, None], codes.T].sum(axis=0)
-                cand_dist.append(d)
-        rids = np.concatenate(cand_rids)
+            for codes, rids in part_cache[cell]:
+                cand_rids.append(rids)
+                if refine_factor is not None:
+                    cand_dist.append(
+                        lut[np.arange(nsub)[:, None], codes.T].sum(axis=0))
+        rids = (np.concatenate(cand_rids) if cand_rids
+                else np.empty(0, dtype="<u8"))
         n_candidates = len(rids)
         if refine_factor is not None and len(rids) > k * refine_factor:
             approx = np.concatenate(cand_dist)
@@ -5152,13 +5239,15 @@ def native_index_search(
                 f"index search would refine {len(rids)} candidates "
                 f"(> {max_candidates}); lower nprobe or raise the cap "
                 "explicitly")
-        # exact refine: group candidates per fragment, late-materialize the
-        # vector column at candidate row indices only. Stale hits (see
-        # docstring) refine to +inf so they sort past every real neighbor
-        # and are cut before the top-k is taken.
+        # exact refine: group candidates per fragment, gather their
+        # vectors from the cached column. Stale hits (see docstring)
+        # refine to +inf so they sort past every real neighbor and are
+        # cut before the top-k is taken.
         exact = np.empty(len(rids), dtype=np.float64)
         stale_dropped = 0
-        order = np.argsort(rids)
+        # unshortlisted candidates arrive as sorted runs (one per
+        # partition piece), which the stable sort merges
+        order = np.argsort(rids, kind="stable")
         srids = rids[order]
         fids = (srids >> np.uint64(32)).astype(np.int64)
         rows = (srids & np.uint64(0xFFFFFFFF)).astype(np.int64)
@@ -5191,21 +5280,21 @@ def native_index_search(
                 live_m = al_m if live_m is None else (live_m & al_m)
             if live_m is not None and not live_m.any():
                 continue
-            nfield = next(
-                f for f in manifest.top_level_fields()
-                if f.name == index.column)
-            dfile, col_idx = frag.file_for_field(nfield.id)
+            if nfield is None:
+                raise LanceNativeError(f"no such column: {index.column!r}")
+            if fid not in col_cache:
+                col_cache[fid], cold = _vector_column(
+                    root, frag, nfield, manifest)
+                vectors_decoded += cold
             sel = grp_rows if live_m is None else grp_rows[live_m]
-            arr = read_file_column(
-                root, dfile, col_idx, nfield, manifest,
-                indices=sel)
-            vec = np.asarray(
-                arr.flatten(), dtype=np.float32).reshape(-1, index.dim)
+            # a gathered copy, squared in place
+            v = np.take(col_cache[fid][0], sel, axis=0)
+            v -= qv
+            v **= 2
             dst = (order[pos:end] if live_m is None
                    else order[pos:end][live_m])
-            exact[dst] = ((vec - qv) ** 2).sum(axis=1)
-        top = np.argsort(exact, kind="stable")[:k]
-        top = top[np.isfinite(exact[top])]
+            exact[dst] = v.sum(axis=1)
+        top = _stable_topk(exact, k)
         results.append({
             "neighbors": [int(r) for r in rids[top]],
             "distances": [float(x) for x in exact[top]],
@@ -5215,6 +5304,9 @@ def native_index_search(
             "stale_dropped": int(stale_dropped),
             "index_bytes_read": int(bytes_read),
         })
+    for r in results:
+        r["cells_decoded"] = cells_decoded
+        r["vectors_decoded"] = vectors_decoded
     return results
 
 
@@ -6862,9 +6954,8 @@ def _exact_cosine_merge(root: str, live: NativeManifest, column: str,
     exact_rows = 0
     for fid in uncovered:
         frag = frag_by_id[fid]
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, live)
-        vmask = np.asarray(arr.is_valid())
+        (vecs, valid), _cold = _vector_column(root, frag, nfield, live)
+        vmask = valid.copy()  # the cached validity is shared, read-only
         if frag.deletion is not None:
             vmask[_deleted_rows_np(root, frag.deletion)] = False
         if allowed_by_frag is not None:
@@ -6875,10 +6966,8 @@ def _exact_cosine_merge(root: str, live: NativeManifest, column: str,
             vmask &= am
         if not vmask.any():
             continue
-        dim = q.shape[1]
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
         rows_sel = np.nonzero(vmask)[0]
-        v = v[vmask]
+        v = vecs[vmask]
         exact_rows += len(v)
         vn = v / np.maximum(
             np.linalg.norm(v, axis=1, keepdims=True), 1e-30)

@@ -6,18 +6,24 @@ One class serves every user:
 
 - ``lance_native``: parsed native manifests; the index registry's
   records, one per index meta file (``index.idx`` of every btree,
-  IVF_PQ and inverted family, ``hnsw.json``, ``ivf_hnsw.json``); and
-  decoded postings-file term dictionaries.
+  IVF_PQ and inverted family, ``hnsw.json``, ``ivf_hnsw.json``);
+  decoded postings-file term dictionaries; and the IVF_PQ search
+  bodies (``_VECTOR_BODIES``): probed partitions (PQ codes and row ids)
+  and the float32 vector columns the exact refines gather from.
 - ``manifest``: parsed own-format JSON manifests (DirectoryBackend
   only).
 - ``vector_index``: decoded HNSW shard graphs.
 
 Every cached file is written once under a unique name (manifests,
-postings files, native graphs) or replaced atomically (index metadata,
-own-format graphs), so the stat identity ``(path, st_ino, st_mtime_ns,
-st_size)`` is sound: a DROP + re-CREATE at the same path gets a new
-inode and misses. A cached index record also reads files next to its
-meta file; those are written before the meta file, its commit point.
+postings files, native graphs, IVF cell shard files, data files) or
+replaced atomically (index metadata, own-format graphs), so the stat
+identity ``(path, st_ino, st_mtime_ns, st_size)`` is sound: a DROP +
+re-CREATE at the same path gets a new inode and misses. A cached index
+record also reads files next to its meta file; those are written before
+the meta file, its commit point. A user that decodes one piece of a
+file passes ``part`` (a column index, a partition's offset and rows),
+which joins the key: each piece is its own entry, and all of them miss
+once the file is replaced.
 Remote (object-store) paths skip the cache — they have no cheap stat
 identity. Each user bounds its cache by a byte budget of measured
 decoded bytes, a module constant next to the cache; per-call state
@@ -44,16 +50,19 @@ class StatLRU:
         self._entries: OrderedDict = OrderedDict()  # key -> (value, nbytes)
         self._lock = threading.Lock()
 
-    def load(self, path: str, decode) -> tuple:
+    def load(self, path: str, decode, part=None) -> tuple:
         """(decoded value of the file at ``path``, whether this call
-        decoded it cold); ``decode(path)`` returns ``(value, nbytes)``."""
+        decoded it cold); ``decode(path)`` returns ``(value, nbytes)``.
+        ``part`` (hashable) names which piece of the file ``decode``
+        reads — a column index, a byte range — and joins the key, so
+        two parts of one file are two entries."""
         try:
             st = None if is_remote(path) else os.stat(path)
         except OSError:
             st = None
         if st is None:
             return decode(path)[0], True
-        key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+        key = (path, st.st_ino, st.st_mtime_ns, st.st_size, part)
         with self._lock:
             hit = self._entries.get(key)
             if hit is not None:

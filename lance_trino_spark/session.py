@@ -122,6 +122,16 @@ def install_pyds_scan_rebind(spark: SparkSession) -> bool:
         return False  # degraded: the upstream aliasing hazard remains
 
 
+def _default_driver_mem() -> str:
+    """48g, capped at half the machine's physical memory: a JVM heap
+    allowed to outgrow the machine gets the whole process killed."""
+    try:
+        half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+    except (ValueError, OSError):
+        return "48g"
+    return f"{min(48 << 10, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "lance_trino_spark",
     cpus: int | None = None,
@@ -133,7 +143,8 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
