@@ -5096,29 +5096,48 @@ def _read_index_partition(index: NativeVectorIndex, cell: int):
             np.concatenate([r for _, r in pieces]))
 
 
+def _vector_columns_fit(root: str, frags, dim: int, extra: int = 0
+                        ) -> bool:
+    """Whether the float32 vector columns (and validity) of ``frags``
+    plus ``extra`` bytes fit ``VECTOR_CACHE_BYTES`` together, judged from
+    the manifest's physical row counts. A search visits its fragments in
+    the same order on every call: with a working set over the budget
+    that cyclic pattern misses an LRU every time, so such a search (and
+    a remote root, which has no cache) reads past the cache instead."""
+    rows = [f.physical_rows for f in frags]
+    if nio.is_remote(root) or None in rows:
+        return False
+    return sum(rows) * (dim * 4 + 1) + extra <= VECTOR_CACHE_BYTES
+
+
 def _vector_column(root: str, frag: NativeFragment, nfield: NativeField,
-                   manifest: NativeManifest) -> tuple[tuple, bool]:
+                   manifest: NativeManifest, cache: bool = True
+                   ) -> tuple[tuple, bool]:
     """((vectors float32 [physical rows, dim], validity bool [rows]) of
     the fixed_size_list column ``nfield`` in ``frag``, whether this call
-    decoded it cold). Both arrays are read-only; rows are file-physical
-    positions, NULL rows hold whatever the file stores."""
+    decoded it cold). Cached arrays are read-only copies; with ``cache``
+    False the column is decoded for this caller alone. Rows are
+    file-physical positions, NULL rows hold whatever the file stores."""
     import numpy as np
     import pyarrow as pa
 
     dfile, col_idx = frag.file_for_field(nfield.id)
     dim = int(nfield.logical_type.split(":")[2])
+    own = _owned if cache else (lambda a: a)
 
     def decode(_path):
         arr = read_file_column(root, dfile, col_idx, nfield, manifest)
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
         vals = arr.values.slice(arr.offset * dim, len(arr) * dim)
-        vecs = _owned(np.asarray(vals, dtype=np.float32).reshape(-1, dim))
-        valid = _owned(np.asarray(arr.is_valid(), dtype=bool))
+        vecs = own(np.asarray(vals, dtype=np.float32).reshape(-1, dim))
+        valid = own(np.asarray(arr.is_valid(), dtype=bool))
         return (vecs, valid), vecs.nbytes + valid.nbytes
 
-    return _VECTOR_BODIES.load(
-        os.path.join(root, "data", dfile.path), decode, part=col_idx)
+    path = os.path.join(root, "data", dfile.path)
+    if not cache:
+        return decode(path)[0], True
+    return _VECTOR_BODIES.load(path, decode, part=col_idx)
 
 
 def _stable_topk(x, k: int):
@@ -5152,12 +5171,16 @@ def native_index_search(
     partitions, then REFINE candidates with exact vectors gathered at
     candidate rows from the dataset's vector column. Partitions and
     vector columns are served from the process-wide ``_VECTOR_BODIES``
-    cache (decoded once, then shared by every call). Returns a list of
-    dicts with exact-L2 top-k plus access-path proof fields
+    cache (decoded once, then shared by every call) — vector columns
+    only while the indexed fragments' columns and the index fit the
+    cache together (``_vector_columns_fit``); otherwise, and for a
+    remote root, each refine reads just the candidate rows. Returns a
+    list of dicts with exact-L2 top-k plus access-path proof fields
     (cells_probed, n_candidates, n_refined, index_bytes_read — bytes of
     the probed partitions, cached or not — and cells_decoded /
-    vectors_decoded: partition pieces and vector columns this call
-    decoded cold).
+    vectors_decoded: partition pieces decoded cold, and vector reads
+    from data files — a whole column decoded cold, or one candidate-row
+    read per fragment and query when columns are not cached).
 
     ``refine_factor``: with None (default) every probed candidate is
     exactly refined — refine cost is bounded only by the probed
@@ -5198,8 +5221,13 @@ def native_index_search(
     frag_by_id = {f.id: f for f in manifest.fragments}
     nfield = next((f for f in manifest.top_level_fields()
                    if f.name == index.column), None)
+    covered = index.covered_fragments
+    cache_cols = _vector_columns_fit(
+        root, [f for f in manifest.fragments
+               if covered is None or f.id in covered],
+        index.dim, sum(index.part_lengths) * (nsub + 8))
     # per-call memos: a remote root (no process-wide cache) still reads
-    # each partition and vector column at most once per call
+    # each partition at most once per call
     part_cache: dict[int, list] = {}
     col_cache: dict[int, tuple] = {}
     dead_cache: dict[int, "np.ndarray"] = {}
@@ -5240,14 +5268,12 @@ def native_index_search(
                 f"(> {max_candidates}); lower nprobe or raise the cap "
                 "explicitly")
         # exact refine: group candidates per fragment, gather their
-        # vectors from the cached column. Stale hits (see docstring)
-        # refine to +inf so they sort past every real neighbor and are
-        # cut before the top-k is taken.
+        # vectors from the cached column (or read only the candidate
+        # rows). Stale hits (see docstring) refine to +inf so they sort
+        # past every real neighbor and are cut before the top-k is taken.
         exact = np.empty(len(rids), dtype=np.float64)
         stale_dropped = 0
-        # unshortlisted candidates arrive as sorted runs (one per
-        # partition piece), which the stable sort merges
-        order = np.argsort(rids, kind="stable")
+        order = np.argsort(rids)
         srids = rids[order]
         fids = (srids >> np.uint64(32)).astype(np.int64)
         rows = (srids & np.uint64(0xFFFFFFFF)).astype(np.int64)
@@ -5282,14 +5308,23 @@ def native_index_search(
                 continue
             if nfield is None:
                 raise LanceNativeError(f"no such column: {index.column!r}")
-            if fid not in col_cache:
-                col_cache[fid], cold = _vector_column(
-                    root, frag, nfield, manifest)
-                vectors_decoded += cold
             sel = grp_rows if live_m is None else grp_rows[live_m]
-            # a gathered copy, squared in place
-            v = np.take(col_cache[fid][0], sel, axis=0)
-            v -= qv
+            if cache_cols:
+                if fid not in col_cache:
+                    col_cache[fid], cold = _vector_column(
+                        root, frag, nfield, manifest)
+                    vectors_decoded += cold
+                # a gathered copy, differenced in place
+                v = np.take(col_cache[fid][0], sel, axis=0)
+                v -= qv
+            else:
+                dfile, col_idx = frag.file_for_field(nfield.id)
+                arr = read_file_column(
+                    root, dfile, col_idx, nfield, manifest, indices=sel)
+                vectors_decoded += 1
+                v = np.asarray(
+                    arr.flatten(), dtype=np.float32).reshape(-1, index.dim)
+                v = v - qv
             v **= 2
             dst = (order[pos:end] if live_m is None
                    else order[pos:end][live_m])
@@ -6951,10 +6986,13 @@ def _exact_cosine_merge(root: str, live: NativeManifest, column: str,
     qn = q / np.maximum(
         np.linalg.norm(q, axis=1, keepdims=True), 1e-30)
     frag_by_id = {f.id: f for f in live.fragments}
+    cache_cols = _vector_columns_fit(
+        root, [frag_by_id[fid] for fid in uncovered], q.shape[1])
     exact_rows = 0
     for fid in uncovered:
         frag = frag_by_id[fid]
-        (vecs, valid), _cold = _vector_column(root, frag, nfield, live)
+        (vecs, valid), _cold = _vector_column(
+            root, frag, nfield, live, cache_cols)
         vmask = valid.copy()  # the cached validity is shared, read-only
         if frag.deletion is not None:
             vmask[_deleted_rows_np(root, frag.deletion)] = False

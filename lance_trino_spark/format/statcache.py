@@ -9,7 +9,9 @@ One class serves every user:
   IVF_PQ and inverted family, ``hnsw.json``, ``ivf_hnsw.json``);
   decoded postings-file term dictionaries; and the IVF_PQ search
   bodies (``_VECTOR_BODIES``): probed partitions (PQ codes and row ids)
-  and the float32 vector columns the exact refines gather from.
+  and the float32 vector columns the exact refines gather from (only
+  while a search's columns and index fit the budget together — a
+  cyclic visit over more would miss every time).
 - ``manifest``: parsed own-format JSON manifests (DirectoryBackend
   only).
 - ``vector_index``: decoded HNSW shard graphs.

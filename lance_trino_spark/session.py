@@ -123,13 +123,21 @@ def install_pyds_scan_rebind(spark: SparkSession) -> bool:
 
 
 def _default_driver_mem() -> str:
-    """48g, capped at half the machine's physical memory: a JVM heap
-    allowed to outgrow the machine gets the whole process killed."""
+    """48g, capped at half the memory this process may use — the
+    machine's physical memory, or its cgroup's limit when that is lower:
+    a JVM heap allowed to outgrow either gets the whole process killed."""
+    cap = 48 << 30
     try:
-        half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+        cap = min(cap, os.sysconf("SC_PHYS_PAGES")
+                  * os.sysconf("SC_PAGE_SIZE") >> 1)
     except (ValueError, OSError):
-        return "48g"
-    return f"{min(48 << 10, half_mb)}m"
+        pass
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:  # cgroup v2
+            cap = min(cap, int(fh.read()) >> 1)
+    except (OSError, ValueError):  # no cgroup v2 limit, or "max"
+        pass
+    return f"{cap >> 20}m"
 
 
 def get_spark(

@@ -440,3 +440,131 @@ def test_fresh_graph_search_exact_arm_matches_the_per_call_decode(tmp_path):
     for f, before in zip(live.fragments, valid_before):
         after = ln._vector_column(root, f, nfield, live)[0][1]
         assert np.array_equal(after, before)
+
+
+def _column_reads(monkeypatch):
+    """Record, per ``read_file_column`` call, whether it read only the
+    given row indices (``True``) or the whole column (``False``)."""
+    calls = []
+    real = ln.read_file_column
+
+    def spy(*a, indices=None, **kw):
+        calls.append(indices is not None)
+        return real(*a, indices=indices, **kw)
+
+    monkeypatch.setattr(ln, "read_file_column", spy)
+    return calls
+
+
+def _cached_columns(root: str) -> list:
+    data = os.path.join(root, "data")
+    return [key for key in ln._VECTOR_BODIES._entries
+            if key[0].startswith(data)]
+
+
+@pytest.mark.parametrize("layout", ["single", "extended"])
+def test_search_over_the_budget_reads_only_candidate_rows(
+        tmp_path, monkeypatch, layout):
+    """Columns and index that together exceed ``VECTOR_CACHE_BYTES`` are
+    not cached (a cyclic visit would miss an LRU every time): each
+    refine reads only the candidate rows, with the same results. The
+    bound is the manifest's row counts — at exactly the working set the
+    columns are cached."""
+    root, idx, ties = _corpus(tmp_path, 1, layout)
+    man = ln.read_native_manifest(root)
+    need = (sum(f.physical_rows for f in man.fragments) * (DIM * 4 + 1)
+            + sum(idx.part_lengths) * (idx.pq_nsub + 8))
+    q = np.concatenate([ties, np.random.default_rng(8).normal(
+        size=(3, DIM)).astype(np.float32)])
+    allowed = {f.id: np.arange(0, f.physical_rows, 2)
+               for f in man.fragments}
+    monkeypatch.setattr(ln, "VECTOR_CACHE_BYTES", need - 1)
+    reads = _column_reads(monkeypatch)
+    for kw in (dict(k=1, nprobe=1), dict(k=10, nprobe=4),
+               dict(k=10_000, nprobe=idx.n_cells),
+               dict(k=10, nprobe=4, refine_factor=2),
+               dict(k=10, nprobe=idx.n_cells, allowed_by_fragment=allowed)):
+        for _ in range(2):
+            got = ln.native_index_search(root, idx, q, **kw)
+            assert {r["vectors_decoded"] for r in got} != {0}, kw
+            _assert_same(got, _reference_search(root, idx, q, **kw), kw)
+    assert reads and all(reads)
+    assert not _cached_columns(root)
+    ln.native_delete(root, {1: np.arange(0, 160, 3)})
+    cur = ln.read_native_manifest(root)
+    kw = dict(k=10, nprobe=4, manifest=cur, mask_deletions=True)
+    _assert_same(ln.native_index_search(root, idx, q, **kw),
+                 _reference_search(root, idx, q, **kw), "deleted")
+    assert all(reads) and not _cached_columns(root)
+
+    monkeypatch.setattr(ln, "VECTOR_CACHE_BYTES", need)
+    del reads[:]
+    ln.native_index_search(root, idx, q, k=10, nprobe=idx.n_cells)
+    got = ln.native_index_search(root, idx, q, k=10, nprobe=idx.n_cells)
+    assert {r["vectors_decoded"] for r in got} == {0}
+    assert reads and not any(reads)  # whole columns, once
+    assert len(_cached_columns(root)) == len(man.fragments)
+
+
+def test_remote_root_reads_only_candidate_rows(monkeypatch):
+    """A remote root has no process-wide cache: its refine keeps reading
+    just the candidate rows, never the whole column per call."""
+    from lance_trino_spark.format.backend import MemoryObjectStore
+
+    nio.register_object_store_root("memory://ivfbucket", MemoryObjectStore())
+    try:
+        root = "memory://ivfbucket/t.lance"
+        v = _vectors(np.random.default_rng(12), 200)
+        for lo, write in ((0, ln.write_native_dataset),
+                          (100, ln.append_native_rows)):
+            write(root, {"id": list(range(lo, lo + 100)),
+                         "vec": [r.tolist() for r in v[lo:lo + 100]]})
+        ln.write_native_vector_index(root, "vec", n_cells=4, nsub=4,
+                                     sample=200, iters=3)
+        idx = ln.latest_native_index(root, "vec", "ivf_pq")
+        reads = _column_reads(monkeypatch)
+        for kw in (dict(k=5, nprobe=2), dict(k=10_000, nprobe=4),
+                   dict(k=5, nprobe=4, refine_factor=2)):
+            got = ln.native_index_search(root, idx, v[:6], **kw)
+            _assert_same(got, _reference_search(root, idx, v[:6], **kw), kw)
+        assert reads and all(reads)
+        assert not any(key[0].startswith(root)
+                       for key in ln._VECTOR_BODIES._entries)
+    finally:
+        nio.unregister_object_store_root("memory://ivfbucket")
+
+
+def test_fresh_exact_arm_over_the_budget_is_not_cached(tmp_path,
+                                                       monkeypatch):
+    root, _idx, ties = _corpus(tmp_path, 1, "single")
+    live = ln.read_native_manifest(root)
+    uncovered = [f.id for f in live.fragments]
+    monkeypatch.setattr(ln, "VECTOR_CACHE_BYTES", 1)
+    args = (root, live, "vec", ties, 10, uncovered, None)
+    assert (ln._exact_cosine_merge(*args, [[] for _ in ties])
+            == _reference_cosine_merge(*args, [[] for _ in ties]))
+    assert not _cached_columns(root)
+
+
+def test_driver_memory_default_is_half_the_smaller_limit(monkeypatch):
+    import io
+
+    from lance_trino_spark import session
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    real = open
+
+    def cgroup_limit(text):
+        def fake(path, *a, **kw):
+            if path == "/sys/fs/cgroup/memory.max":
+                return io.StringIO(text)
+            return real(path, *a, **kw)
+        return fake
+
+    half = min(48 << 30, phys >> 1) >> 20
+    monkeypatch.setattr(session, "open", cgroup_limit("max\n"),
+                        raising=False)
+    assert session._default_driver_mem() == f"{half}m"
+    monkeypatch.setattr(session, "open", cgroup_limit("2147483648\n"),
+                        raising=False)
+    assert session._default_driver_mem() == f"{min(half, 1024)}m"
