@@ -28,3 +28,10 @@ the Spark-native equivalent:
 """
 
 __version__ = "0.1.0"
+
+from lance_trino_spark.zipimport_cache import install_zip_directory_cache
+
+# Every PySpark worker that runs code of this package imports it first
+# (the pickled DataSource, every mapInPandas/mapInArrow function), so this
+# is where each worker's later calls stop re-reading pyspark.zip.
+install_zip_directory_cache()
