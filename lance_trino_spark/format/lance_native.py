@@ -5356,6 +5356,31 @@ def _fragment_runs(fids) -> list[tuple[int, int]]:
     return list(zip([0] + bounds, bounds + [len(fids)]))
 
 
+# Row-chunk bound for _nearest's [rows, k, dim] distance temporaries: one
+# shot over an 8,192-row sample and 256 128-dim centroids built 1 GiB each.
+NEAREST_CHUNK_BYTES = 64 << 20
+
+
+def _nearest(data, cent):
+    """Per row of ``data``, the index of its nearest row of ``cent``:
+    ``((data[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+    .argmin(axis=1)``, evaluated over row chunks so each [rows, k, dim]
+    temporary stays under ``NEAREST_CHUNK_BYTES``. Each row's distances
+    are computed as in the one-shot expression, so the argmin is the
+    same."""
+    import numpy as np
+
+    k, dim = cent.shape
+    per_row = k * dim * np.result_type(data, cent).itemsize
+    step = max(1, NEAREST_CHUNK_BYTES // max(1, per_row))
+    out = np.empty(len(data), dtype=np.intp)
+    for i in range(0, len(data), step):
+        x = data[i:i + step]
+        out[i:i + step] = (
+            (x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    return out
+
+
 def _kmeans(data, k: int, iters: int, seed: int):
     """Tiny deterministic k-means (numpy, k-means++ -lite seeding by
     evenly spaced sorted-norm picks). Good enough to TRAIN indexes the
@@ -5374,8 +5399,7 @@ def _kmeans(data, k: int, iters: int, seed: int):
     if len(cent) < k:  # fewer rows than centroids: pad with repeats
         cent = np.concatenate([cent, data[rng.integers(0, n, k - len(cent))]])
     for _ in range(iters):
-        d = ((data[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
+        assign = _nearest(data, cent)
         for c in range(k):
             m = assign == c
             if m.any():
@@ -5451,7 +5475,7 @@ def write_native_vector_index(
             f"column {column!r} has no non-null vectors to index")
     tr = np.concatenate(train)
     cent = _kmeans(tr, n_cells, iters, seed)
-    assign = ((tr[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    assign = _nearest(tr, cent)
     resid = tr - cent[assign]
     codebook = np.stack([
         _kmeans(resid[:, s * subdim:(s + 1) * subdim], 256, iters, seed + 1 + s)
@@ -5482,13 +5506,11 @@ def _pq_encode_block(v: "np.ndarray", cent: "np.ndarray",
     import numpy as np
 
     nsub, _k, subdim = codebook.shape
-    a = ((v[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    a = _nearest(v, cent)
     r = v - cent[a]
     codes = np.empty((len(v), nsub), dtype=np.uint8)
     for s in range(nsub):
-        sub = r[:, s * subdim:(s + 1) * subdim]
-        d = ((sub[:, None, :] - codebook[s][None, :, :]) ** 2).sum(axis=2)
-        codes[:, s] = d.argmin(axis=1)
+        codes[:, s] = _nearest(r[:, s * subdim:(s + 1) * subdim], codebook[s])
     return a, codes
 
 
