@@ -107,12 +107,6 @@ def _prefilter_vals(raw: str) -> list:
     return vals
 
 
-def _ident(name: str, what: str) -> str:
-    if not re.fullmatch(_IDENT, name):
-        raise CatalogError(f"invalid {what} name: {name!r}")
-    return name
-
-
 class LanceCatalog:
     """A directory namespace of Lance datasets with a SQL routing front-end.
 

@@ -5114,7 +5114,8 @@ def _vector_column(root: str, frag: NativeFragment, nfield: NativeField,
                    manifest: NativeManifest, cache: bool = True
                    ) -> tuple[tuple, bool]:
     """((vectors float32 [physical rows, dim], validity bool [rows]) of
-    the fixed_size_list column ``nfield`` in ``frag``, whether this call
+    the vector column ``nfield`` (fixed_size_list, or list<float> with
+    equal-length rows) in ``frag``, whether this call
     decoded it cold). Cached arrays are read-only copies; with ``cache``
     False the column is decoded for this caller alone. Rows are
     file-physical positions, NULL rows hold whatever the file stores."""
@@ -5122,13 +5123,15 @@ def _vector_column(root: str, frag: NativeFragment, nfield: NativeField,
     import pyarrow as pa
 
     dfile, col_idx = frag.file_for_field(nfield.id)
-    dim = int(nfield.logical_type.split(":")[2])
     own = _owned if cache else (lambda a: a)
 
     def decode(_path):
         arr = read_file_column(root, dfile, col_idx, nfield, manifest)
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
+        # a list<float> column (SQL CREATE TABLE) has no fixed width
+        dim = (arr.type.list_size if pa.types.is_fixed_size_list(arr.type)
+               else len(arr.values) // max(1, len(arr)))
         vals = arr.values.slice(arr.offset * dim, len(arr) * dim)
         vecs = own(np.asarray(vals, dtype=np.float32).reshape(-1, dim))
         valid = own(np.asarray(arr.is_valid(), dtype=bool))
@@ -5356,38 +5359,16 @@ def _fragment_runs(fids) -> list[tuple[int, int]]:
     return list(zip([0] + bounds, bounds + [len(fids)]))
 
 
-# Row-chunk bound for _nearest's [rows, k, dim] distance temporaries: one
-# shot over an 8,192-row sample and 256 128-dim centroids built 1 GiB each.
-NEAREST_CHUNK_BYTES = 64 << 20
-
-
-def _nearest(data, cent):
-    """Per row of ``data``, the index of its nearest row of ``cent``:
-    ``((data[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-    .argmin(axis=1)``, evaluated over row chunks so each [rows, k, dim]
-    temporary stays under ``NEAREST_CHUNK_BYTES``. Each row's distances
-    are computed as in the one-shot expression, so the argmin is the
-    same."""
-    import numpy as np
-
-    k, dim = cent.shape
-    per_row = k * dim * np.result_type(data, cent).itemsize
-    step = max(1, NEAREST_CHUNK_BYTES // max(1, per_row))
-    out = np.empty(len(data), dtype=np.intp)
-    for i in range(0, len(data), step):
-        x = data[i:i + step]
-        out[i:i + step] = (
-            (x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    return out
-
-
 def _kmeans(data, k: int, iters: int, seed: int):
-    """Tiny deterministic k-means (numpy, k-means++ -lite seeding by
-    evenly spaced sorted-norm picks). Good enough to TRAIN indexes the
+    """Tiny deterministic float32 k-means: the first ``k`` rows of a
+    seeded permutation (padded with seeded repeats when there are fewer
+    rows), then ``vector_index.lloyd``. Good enough to TRAIN indexes the
     reader/search path consumes — quality is pinned by recall tests, and
     determinism (fixed seed, fixed iteration count) keeps suite queries
     oracle-stable."""
     import numpy as np
+
+    from .vector_index import lloyd
 
     data = np.asarray(data, dtype=np.float32)
     n = len(data)
@@ -5398,13 +5379,31 @@ def _kmeans(data, k: int, iters: int, seed: int):
     cent = data[init].copy()
     if len(cent) < k:  # fewer rows than centroids: pad with repeats
         cent = np.concatenate([cent, data[rng.integers(0, n, k - len(cent))]])
-    for _ in range(iters):
-        assign = _nearest(data, cent)
-        for c in range(k):
-            m = assign == c
-            if m.any():
-                cent[c] = data[m].mean(axis=0)
-    return cent
+    return lloyd(data, cent, iters)
+
+
+def _training_sample(root: str, manifest: NativeManifest, nfield,
+                     sample: int):
+    """The bounded, deterministic IVF training sample: the first
+    ``sample`` NON-NULL vectors of ``nfield`` in fragment order, float32
+    [rows, dim]. A NULL embedding must never train or be indexed as a
+    placeholder zero-vector polluting ANN results; like the scalar index,
+    null rows are simply unindexed."""
+    import numpy as np
+
+    train = []
+    got = 0
+    for frag in manifest.fragments:
+        if got >= sample:
+            break
+        (v, valid), _ = _vector_column(root, frag, nfield, manifest,
+                                       cache=False)
+        train.append(v[valid][: sample - got])
+        got += len(train[-1])
+    if got == 0:
+        raise LanceNativeError(
+            f"column {nfield.name!r} has no non-null vectors to index")
+    return np.concatenate(train)
 
 
 def write_native_vector_index(
@@ -5453,30 +5452,12 @@ def write_native_vector_index(
         raise LanceNativeError(f"dim {dim} not divisible by nsub {nsub}")
     subdim = dim // nsub
 
-    # pass 1: bounded training sample (first `sample` NON-NULL rows,
-    # deterministic — a NULL embedding must never train or be indexed as
-    # a placeholder zero-vector polluting ANN results; like the scalar
-    # index, null rows are simply unindexed)
-    train = []
-    got = 0
-    for frag in manifest.fragments:
-        if got >= sample:
-            break
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        # .values, not .flatten(): flatten DROPS null slots, desyncing
-        # positions; values keeps every physical slot for exact masking
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        v = v[np.asarray(arr.is_valid())]
-        train.append(v[: sample - got])
-        got += len(train[-1])
-    if got == 0:
-        raise LanceNativeError(
-            f"column {column!r} has no non-null vectors to index")
-    tr = np.concatenate(train)
+    from .vector_index import nearest
+
+    # pass 1: bounded training sample
+    tr = _training_sample(root, manifest, nfield, sample)
     cent = _kmeans(tr, n_cells, iters, seed)
-    assign = _nearest(tr, cent)
-    resid = tr - cent[assign]
+    resid = tr - cent[nearest(tr, cent)]
     codebook = np.stack([
         _kmeans(resid[:, s * subdim:(s + 1) * subdim], 256, iters, seed + 1 + s)
         for s in range(nsub)
@@ -5503,15 +5484,10 @@ def _pq_encode_block(v: "np.ndarray", cent: "np.ndarray",
     """Assign each row to its nearest IVF cell and residual-PQ-encode it
     — shared by the full build and the incremental extend, so identical
     vectors yield bit-identical codes under either path."""
-    import numpy as np
+    from .vector_index import nearest, pq_encode
 
-    nsub, _k, subdim = codebook.shape
-    a = _nearest(v, cent)
-    r = v - cent[a]
-    codes = np.empty((len(v), nsub), dtype=np.uint8)
-    for s in range(nsub):
-        codes[:, s] = _nearest(r[:, s * subdim:(s + 1) * subdim], codebook[s])
-    return a, codes
+    a = nearest(v, cent)
+    return a, pq_encode(v - cent[a], codebook)
 
 
 def _encode_fragments_into_buckets(
@@ -5572,13 +5548,10 @@ def _encode_fragments_into_buckets(
             buckets[c][1].append(np.frombuffer(row["addrs"], dtype="<u8"))
     else:
         for frag in frags:
-            dfile, col_idx = frag.file_for_field(nfield.id)
-            arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-            v = np.asarray(
-                arr.values, dtype=np.float32).reshape(-1, dim)
+            (v, vmask), _ = _vector_column(root, frag, nfield, manifest,
+                                           cache=False)
             addr = (np.uint64(frag.id) << np.uint64(32)) + np.arange(
                 len(v), dtype=np.uint64)
-            vmask = np.asarray(arr.is_valid())
             v, addr = v[vmask], addr[vmask]  # NULLs are unindexed
             if not len(v):
                 continue
@@ -7135,15 +7108,12 @@ def _ivf_hnsw_cell_rows(root: str, manifest: NativeManifest, nfield,
     cosine == argmin L2 on the normalized pair)."""
     import numpy as np
 
-    dim = cent.shape[1]
     buckets = [([], []) for _ in range(len(cent))]
     for frag in frags:
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
+        (v, vmask), _ = _vector_column(root, frag, nfield, manifest,
+                                       cache=False)
         addr = (np.uint64(frag.id) << np.uint64(32)) + np.arange(
             len(v), dtype=np.uint64)
-        vmask = np.asarray(arr.is_valid())
         v, addr = v[vmask], addr[vmask]
         if not len(v):
             continue
@@ -7237,25 +7207,8 @@ def write_native_ivf_hnsw_index(root: str, column: str,
         None)
     if nfield is None:
         raise LanceNativeError(f"no such column: {column!r}")
-    # bounded training sample (first `sample` non-null rows), NORMALIZED
-    train = []
-    got = 0
-    dim = None
-    for frag in manifest.fragments:
-        if got >= sample:
-            break
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        if dim is None:
-            dim = len(arr.values) // max(1, len(arr))
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        v = v[np.asarray(arr.is_valid())]
-        train.append(v[: sample - got])
-        got += len(train[-1])
-    if got == 0:
-        raise LanceNativeError(
-            f"column {column!r} has no non-null vectors to index")
-    tr = np.concatenate(train)
+    # bounded training sample, NORMALIZED
+    tr = _training_sample(root, manifest, nfield, sample)
     tr = tr / np.maximum(
         np.linalg.norm(tr, axis=1, keepdims=True), 1e-30)
     cent = _kmeans(tr, n_cells, iters, seed)

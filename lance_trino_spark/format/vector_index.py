@@ -83,36 +83,85 @@ def _atomic_write_table(tbl, out_path: str, row_group_size: int) -> None:
     os.replace(tmp, out_path)
 
 
+# Row-chunk bound for nearest's [rows, k, dim] distance temporaries: one
+# shot over an 8,192-row sample and 256 128-dim centroids built 1 GiB each.
+NEAREST_CHUNK_BYTES = 64 << 20
+
+
+def nearest(data, cent, n: int | None = None):
+    """Per row of ``data``, the index of its nearest row of ``cent``
+    (``n`` None: ``d.argmin(axis=1)``) or of its ``n`` nearest
+    (``np.argsort(d, axis=1)[:, :n]``), where ``d`` is the squared L2
+    distance ``((data[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)``.
+    ``d`` is evaluated over row chunks so each [rows, k, dim] temporary
+    stays under ``NEAREST_CHUNK_BYTES``; each row's distances are computed
+    as in the one-shot expression, so the result is the same. The one
+    nearest-centroid kernel of both storage planes: IVF assignment,
+    k-means and PQ encoding all go through it."""
+    import numpy as np
+
+    k, dim = cent.shape
+    per_row = k * dim * np.result_type(data, cent).itemsize
+    step = max(1, NEAREST_CHUNK_BYTES // max(1, per_row))
+    shape = (len(data),) if n is None else (len(data), min(n, k))
+    out = np.empty(shape, dtype=np.intp)
+    for i in range(0, len(data), step):
+        x = data[i:i + step]
+        d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+        out[i:i + step] = (d.argmin(axis=1) if n is None
+                           else np.argsort(d, axis=1)[:, :n])
+    return out
+
+
+def lloyd(x, cent, iters: int):
+    """``iters`` Lloyd iterations from ``cent`` (updated in place and
+    returned): assign every row of ``x`` to its nearest centroid, then
+    move each centroid that got rows to their mean; an empty cell keeps
+    its centroid. Callers own the initialisation and the dtype."""
+    for _ in range(iters):
+        assign = nearest(x, cent)
+        for c in range(len(cent)):
+            m = assign == c
+            if m.any():
+                cent[c] = x[m].mean(axis=0)
+    return cent
+
+
+def pq_encode(resid, books):
+    """uint8 [rows, nsub] product-quantization codes of ``resid``: column
+    ``s`` is the nearest code of ``books[s]`` (shape [nsub, codes, sub])
+    to the ``s``-th ``sub``-wide slice of each row."""
+    import numpy as np
+
+    nsub, _codes, sub = books.shape
+    codes = np.empty((len(resid), nsub), dtype=np.uint8)
+    for s in range(nsub):
+        codes[:, s] = nearest(resid[:, s * sub:(s + 1) * sub], books[s])
+    return codes
+
+
 def kmeans_deterministic(x, n_cells: int, iters: int):
-    """Deterministic k-means: first-n init, fixed iteration count — the
-    same contract as `operators/similarity.train_ivf_centroids`, shared by
-    the coarse quantizer and every PQ sub-quantizer so an index built twice
-    from the same sample is byte-identical."""
+    """Deterministic k-means in float64: first-n init, fixed iteration
+    count. Trains the own-format coarse quantizer, every PQ
+    sub-quantizer and `operators/similarity.train_ivf_centroids`, so an
+    index built twice from the same sample is byte-identical."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
     if len(x) < n_cells:
         raise ValueError(f"sample ({len(x)}) smaller than n_cells ({n_cells})")
-    centroids = x[:n_cells].copy()
-    for _ in range(iters):
-        d = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for j in range(n_cells):
-            members = x[assign == j]
-            if len(members):
-                centroids[j] = members.mean(0)
-    return centroids
+    return lloyd(x, x[:n_cells].copy(), iters)
 
 
 def nearest_cells(vecs, centroids, n: int = 1):
-    """(len(vecs), n) int32 matrix of the n nearest centroid ids."""
+    """(len(vecs), n) int32 matrix of the n nearest centroid ids (n=1
+    keeps argmin's first-index tie rule)."""
     import numpy as np
 
     m = np.asarray(vecs, dtype=np.float64)
-    d = ((m[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
     if n == 1:
-        return d.argmin(1).astype("int32")[:, None]
-    return np.argsort(d, axis=1)[:, :n].astype("int32")
+        return nearest(m, centroids).astype("int32")[:, None]
+    return nearest(m, centroids, n).astype("int32")
 
 
 # --------------------------------------------------------------------- train
@@ -140,7 +189,7 @@ def train_index(
     if dim % pq_m:
         raise ValueError(f"dim {dim} not divisible by pq_m {pq_m}")
     sub = dim // pq_m
-    resid = x - centroids[nearest_cells(x, centroids)[:, 0]]
+    resid = x - centroids[nearest(x, centroids)]
     n_codes = min(256, len(x))
     books = np.stack([
         kmeans_deterministic(resid[:, i * sub:(i + 1) * sub], n_codes, pq_iters)
@@ -257,11 +306,7 @@ def build_fragment_postings(
         if len(row_idx)
         else np.zeros((0, centroids.shape[1]), dtype=np.float64)
     )
-    n = len(row_idx)
-    if n == 0:
-        cells = np.zeros(0, dtype=np.int32)
-    else:
-        cells = nearest_cells(vecs, centroids)[:, 0]
+    cells = nearest(vecs, centroids).astype(np.int32)
     order = np.argsort(cells, kind="stable")
     cols = {
         "cell": pa.array(cells[order], type=pa.int32()),
@@ -269,23 +314,13 @@ def build_fragment_postings(
     }
     if pq_books is None:
         cols["vec"] = pa.array(
-            [vecs[i].astype(np.float32).tolist() for i in order]
-            if n else [],
+            [vecs[i].astype(np.float32).tolist() for i in order],
             type=pa.list_(pa.float32()),
         )
     else:
-        pq_m = pq_books.shape[0]
-        sub = pq_books.shape[2]
-        resid = vecs - centroids[cells] if n else vecs.reshape(0, 0)
-        codes = np.zeros((n, pq_m), dtype=np.uint8)
-        for i in range(pq_m):
-            seg = resid[:, i * sub:(i + 1) * sub] if n else resid
-            d = ((seg[:, None, :] - pq_books[i][None, :, :]) ** 2).sum(-1)
-            codes[:, i] = d.argmin(1).astype(np.uint8)
+        codes = pq_encode(vecs - centroids[cells], pq_books)
         cols["pq_code"] = pa.array(
-            [codes[i].tobytes() for i in order] if n else [],
-            type=pa.binary(),
-        )
+            [codes[i].tobytes() for i in order], type=pa.binary())
     rel = postings_rel(column, frag_rel_path)
     _atomic_write_table(pa.table(cols), os.path.join(root, rel), row_group_size)
     return rel

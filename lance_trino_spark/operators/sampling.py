@@ -49,13 +49,6 @@ def stratified_sample(
     return df.filter(bucket < threshold)
 
 
-def deterministic_shuffle(df: DataFrame, id_col: str, salt: str = "shuffle") -> DataFrame:
-    """Global reproducible shuffle: ORDER BY a salted hash of the row id.
-    Spark executes this as a range-partitioned sort — the standard scalable
-    global sort — and changing the salt gives an independent permutation."""
-    return df.orderBy(h32(F.concat(F.lit(salt), F.col(id_col).cast("string"))), id_col)
-
-
 def source_mix_weights(
     df: DataFrame,
     strata_col: str,

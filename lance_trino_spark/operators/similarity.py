@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..format.vector_index import kmeans_deterministic, nearest
 from ..functions import dot_product, l2_norm
 
 
@@ -132,18 +133,8 @@ def train_ivf_centroids(
         .limit(sample)
         .collect()
     )
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    if len(x) < n_cells:
-        raise ValueError(f"sample ({len(x)}) smaller than n_cells ({n_cells})")
-    centroids = x[:n_cells].copy()
-    for _ in range(iters):
-        d = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for j in range(n_cells):
-            members = x[assign == j]
-            if len(members):
-                centroids[j] = members.mean(0)
-    return centroids
+    return kmeans_deterministic(
+        np.array([r[1] for r in rows], dtype=np.float64), n_cells, iters)
 
 
 def _cell_assigner(centroids, nprobe: int):
@@ -157,9 +148,7 @@ def _cell_assigner(centroids, nprobe: int):
         import numpy as np
 
         m = np.stack(v.to_numpy())
-        d = ((m[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
-        order = np.argsort(d, axis=1)[:, :nprobe].astype("int32")
-        return pd.Series(list(order))
+        return pd.Series(list(nearest(m, centroids, nprobe).astype("int32")))
 
     return cells_of
 

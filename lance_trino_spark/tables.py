@@ -23,20 +23,6 @@ from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from .session import apply_runtime_confs
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-
 def _normalize_events(df: DataFrame) -> DataFrame:
     """Expose ``ts_ns`` (BIGINT nanos) + ``ts`` (microsecond TIMESTAMP) for
     any physical encoding of the events timestamp column."""
@@ -78,19 +64,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = _normalize_events(df)
         _TABLE_CACHE[key] = df
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Register temp views so suite queries can be written in Spark SQL."""
-    dfs = load_tables(spark, sf_dir, names)
-    for n, df in dfs.items():
-        df.createOrReplaceTempView(n)
-    return dfs
