@@ -540,7 +540,7 @@ public class LanceJvmCatalog implements TableCatalog, SupportsNamespaces,
       Files.createDirectories(dir.resolve("_versions"));
       Files.createDirectories(dir.resolve("data"));
       // Atomic publish: write sidecar then ATOMIC_MOVE into place, the same
-      // no-partial-state contract as format/backend.py's hard-link commit.
+      // no-partial-state contract as format/native_io.py's hard-link commit.
       Path tmp = dir.resolve("_versions").resolve(".1.manifest.json.tmp");
       Files.write(tmp, MAPPER.writeValueAsBytes(m));
       Files.move(tmp, dir.resolve("_versions").resolve("1.manifest.json"),

@@ -22,8 +22,8 @@
  *      (fragment_id, row_index) schema the Python reader consumes; fully
  *      deleted fragments drop out of the manifest.
  *   4. The new manifest version commits via the same hard-link
- *      create-if-absent protocol as format/backend.py
- *      (DirectoryBackend.commit_manifest_json) — Files.createLink fails
+ *      create-if-absent protocol as format/manifest.py
+ *      (native_io.publish_if_absent) — Files.createLink fails
  *      with FileAlreadyExistsException when another writer won, so the
  *      two committers interoperate safely on one table.
  *
@@ -256,7 +256,7 @@ final class LanceJvmDelete {
   static void commitManifest(Path tableDir, long version,
       ObjectNode payload) {
     // Hard-link create-if-absent: the identical atomic protocol as
-    // format/backend.py DirectoryBackend.commit_manifest_json, so the JVM
+    // format/native_io.py publish_if_absent, so the JVM
     // and Python committers conflict-detect against each other.
     Path vdir = tableDir.resolve("_versions");
     Path tmp = vdir.resolve(".tmp-" + UUID.randomUUID() + ".json");

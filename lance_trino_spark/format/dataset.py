@@ -42,6 +42,7 @@ from .blob import (
     stage_blob_columns,
     virtual_columns,
 )
+from . import native_io as nio
 from .fragments import as_fragments, stage_via_tasks
 
 RETIRED_PROP = "retired_columns"  # manifest.properties: dropped column names
@@ -54,6 +55,7 @@ from .manifest import (
     Fragment,
     Manifest,
     commit_manifest,
+    delete_manifest,
     latest_version,
     list_versions,
     read_manifest,
@@ -408,7 +410,7 @@ class LanceDataset:
         `LanceMetadata.java:1368-1380`)."""
         if LanceDataset.exists(path):
             raise FileExistsError(f"dataset already exists at {path}")
-        os.makedirs(path, exist_ok=True)
+        nio.makedirs(path)
         m = Manifest(version=1, schema_json=schema.jsonValue(), operation="create",
                      properties=properties or {})
         commit_manifest(path, m)
@@ -513,8 +515,6 @@ class LanceDataset:
         scale the unlink loop would be dispatched as tasks, but the
         reference's coordinator does maintenance single-node too.
         """
-        from .backend import get_backend
-
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
         from .refs import tagged_versions
@@ -589,9 +589,8 @@ class LanceDataset:
                     ):
                         os.unlink(os.path.join(dirpath, name))
                         removed_files += 1
-        backend = get_backend()
         for v in dropped:
-            backend.delete_manifest(path, v)
+            delete_manifest(path, v)
         return {
             "removed_versions": len(dropped),
             "removed_files": removed_files,

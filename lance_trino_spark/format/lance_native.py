@@ -55,6 +55,7 @@ import time as _time
 from dataclasses import dataclass, field
 
 from . import native_io as nio
+from .backend import CommitConflictError
 from .routing import route
 from .statcache import StatLRU
 
@@ -384,7 +385,7 @@ def native_create_tag(root: str, name: str, version: int | None = None
     try:
         # create-once (posix hard link / conditional PUT): loses races loudly
         nio.publish_if_absent(path, blob)
-    except nio.NativeIOConflictError:
+    except CommitConflictError:
         raise LanceNativeError(f"tag {name!r} already exists")
     return v
 
@@ -2815,12 +2816,12 @@ def _write_v1_manifest(
     blob += struct.pack("<QHH", 0, 0, 1) + b"LANC"
     final = os.path.join(root, "_versions", f"{version}.manifest")
     try:
-        # first-writer-wins optimistic commit, same stance as the
-        # own-format backend's protocol (format/backend.py): posix =
+        # first-writer-wins optimistic commit, the same primitive as
+        # the own-format manifest commit (format/manifest.py): posix =
         # tmp + hard link (atomic, loses races loudly), object store =
         # conditional PUT (If-None-Match: *)
         nio.publish_if_absent(final, blob)
-    except nio.NativeIOConflictError:
+    except CommitConflictError:
         raise LanceNativeError(
             f"concurrent commit: version {version} already exists")
     nio.write_bytes(os.path.join(root, "_latest.manifest"), blob)

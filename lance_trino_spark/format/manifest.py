@@ -13,11 +13,12 @@ the scan path):
 Commit protocol (reference: single-commit optimistic transactions,
 `LanceMetadata.java:1489-1513` conflict detection):
   1. writer prepares all data/deletion files (any executor, any order)
-  2. driver publishes the next manifest atomically via the installed
-     `StorageBackend` (backend.py — the default DirectoryBackend uses
-     hard-link creation, which fails with EEXIST if another writer
-     committed N+1 first → CommitConflictError, no partial state ever
-     visible; a real-`lance`-SDK backend maps to `LanceDataset.commit`).
+  2. driver publishes the next manifest with `native_io.publish_if_absent`
+     (posix: hard-link creation, which fails with EEXIST if another
+     writer committed N+1 first; object store: conditional PUT) →
+     CommitConflictError, no partial state ever visible. The JVM catalog
+     commits with the same hard-link create, so the two conflict-detect
+     against each other.
 
 Readers pin a version at open time (snapshot isolation — the reference pins
 `datasetVersion` in the table handle at planning time,
@@ -26,15 +27,16 @@ Readers pin a version at open time (snapshot isolation — the reference pins
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
 
-# Exceptions live with the backend seam; re-exported here for compatibility.
+from . import native_io as nio
+
+# The exceptions live in backend.py; re-exported here for callers.
 from .backend import (  # noqa: F401
     CommitConflictError,
-    DirectoryBackend,
     VersionNotFoundError,
-    get_backend,
     now_ms,
 )
 from .statcache import StatLRU
@@ -158,11 +160,10 @@ def schemas_compatible(a: dict, b: dict) -> bool:
     evolution is unsupported, like the reference
     (`TestLanceConnectorTest.java:139-146`) — appends with a different
     schema must fail loudly, never commit mismatched fragments."""
-    import json as _json
 
     def key(schema: dict):
         return [
-            (f["name"], _json.dumps(f["type"], sort_keys=True))
+            (f["name"], json.dumps(f["type"], sort_keys=True))
             for f in schema.get("fields", [])
         ]
 
@@ -178,7 +179,10 @@ def manifest_path(root: str, version: int) -> str:
 
 
 def list_versions(root: str) -> list[int]:
-    return get_backend().list_versions(root)
+    stems = (name[: -len(".manifest.json")]
+             for name in nio.listdir(versions_dir(root))
+             if name.endswith(".manifest.json"))
+    return sorted(int(s) for s in stems if s.isdecimal())
 
 
 def latest_version(root: str) -> int:
@@ -211,28 +215,28 @@ def version_at_timestamp(root: str, ts_ms: int) -> int:
 
 # Dataset-handle cache (A18, `LanceRuntime.java:96-183` — the reference keys
 # its Guava cache by (user, path, version) with immutable-version snapshot
-# isolation). DirectoryBackend manifests are published once by hard link
-# and never rewritten, so statcache.StatLRU's stat identity is sound: DROP
+# isolation). Manifests are published once by `nio.publish_if_absent` and
+# never rewritten, so statcache.StatLRU's stat identity is sound: DROP
 # TABLE followed by CREATE at the same path reuses version 1 but gets a new
 # inode, and a stat is far cheaper than re-reading and parsing a
-# 10k-fragment manifest. Other backends read uncached (no cheap stat
-# identity). Cached manifests are shared objects — treat them as immutable
-# (all writers build fresh Manifest instances; nothing in the codebase
-# mutates a read one). A parsed manifest retains 3.3-4.7x its JSON bytes
-# (tracemalloc, 1-400 fragments with three-column zone-map stats); entries
-# are charged 2 KiB + 8x file bytes.
+# 10k-fragment manifest. Remote roots read uncached (StatLRU skips them:
+# no cheap stat identity). Cached manifests are shared objects — treat them
+# as immutable (all writers build fresh Manifest instances; nothing in the
+# codebase mutates a read one). A parsed manifest retains 3.3-4.7x its JSON
+# bytes (tracemalloc, 1-400 fragments with three-column zone-map stats);
+# entries are charged 2 KiB + 8x file bytes.
 MANIFEST_CACHE_BYTES = 32 << 20
 _MANIFESTS = StatLRU(MANIFEST_CACHE_BYTES)
 
 
 def read_manifest(root: str, version: int) -> Manifest:
-    backend = get_backend()
-    if not isinstance(backend, DirectoryBackend):
-        return Manifest.from_json(backend.read_manifest_json(root, version))
-
     def decode(p: str) -> tuple:
-        raw = backend.read_manifest_json(root, version)
-        return Manifest.from_json(raw), 2048 + 8 * os.path.getsize(p)
+        try:
+            raw = bytes(nio.read_bytes(p))
+        except FileNotFoundError:
+            raise VersionNotFoundError(
+                f"version {version} does not exist at {root}") from None
+        return Manifest.from_json(json.loads(raw)), 2048 + 8 * len(raw)
 
     return _MANIFESTS.load(manifest_path(root, version), decode)[0]
 
@@ -241,4 +245,11 @@ def commit_manifest(root: str, manifest: Manifest) -> None:
     """Atomically publish `manifest` as its version; raise
     CommitConflictError if that version was committed concurrently."""
     manifest.timestamp_ms = now_ms()
-    get_backend().commit_manifest_json(root, manifest.version, manifest.to_json())
+    nio.publish_if_absent(manifest_path(root, manifest.version),
+                          json.dumps(manifest.to_json()).encode())
+
+
+def delete_manifest(root: str, version: int) -> None:
+    """Remove a version's manifest (vacuum); a missing version is a
+    no-op."""
+    nio.delete(manifest_path(root, version))

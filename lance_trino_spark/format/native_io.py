@@ -1,13 +1,15 @@
-"""Filesystem abstraction for the NATIVE (binary .lance) path.
+"""The one storage seam: every path both planes read, write, commit
+or delete goes through this module.
 
 The reference's deployment matrix is object-store-first — its query
 runner wires MinIO/S3 roots straight into the connector
 (`LanceQueryRunner.java:174-193`, `docker-compose.yml:1-17`) and the
 Lance SDK underneath speaks ranged GETs + conditional PUTs. The native
-path here historically assumed posix (`open`, `os.link`); this module is
-the seam that lifts it to object stores while keeping posix exactly as
-fast (every helper short-circuits to the native call when the path has
-no scheme).
+path here historically assumed posix (`open`, `os.link`); this module
+lifts both storage planes (own-format JSON manifests and tags, native
+`.lance` files) to object stores while keeping posix exactly as fast
+(every helper short-circuits to the native call when the path has no
+scheme).
 
 Design:
 
@@ -15,29 +17,27 @@ Design:
   (object-store keys use the same `/` separator), and every helper
   resolves the backing store from the path itself — no threading of
   filesystem handles through 60 call sites.
-- **ObjectStore reuse.** Remote roots are served by the SAME
-  `ObjectStore` protocol the metadata plane already defines
+- **ObjectStore protocol.** Remote roots are served by an `ObjectStore`
   (`backend.py`: `put_if_absent` / `get` / `list_prefix` / `delete`) —
-  one conditional-put primitive covers the own-format manifest commit
-  AND the native manifest commit. Optional methods (`put`, `get_range`,
-  `size`) are consulted when present: `get_range` keeps footer-seek
-  reads O(metadata bytes) (the ranged-GET shape; posix twin is mmap),
-  `put` serves overwrite-hint files (`_latest.manifest`).
+  one conditional-put primitive covers the manifest and tag commits of
+  both planes. Optional methods (`put`, `get_range`, `size`) are
+  consulted when present: `get_range` keeps footer-seek reads
+  O(metadata bytes) (the ranged-GET shape; posix twin is mmap), `put`
+  serves overwrite-hint files (`_latest.manifest`).
 - **Registration, not guessing.** A remote root must be registered in
   THIS process via `register_object_store_root` (tests use
-  `MemoryObjectStore`; production would register an import-gated
-  fsspec/pyarrow-fs adapter). Unregistered schemes fail loudly —
-  shipping a silently-broken path is what `storage_options.py`'s
-  refusal already promised not to do. Executors that scan remote roots
+  `MemoryObjectStore`; a real store registers `PyArrowFsObjectStore`
+  or an adapter with a native conditional PUT). Unregistered schemes fail loudly rather than
+  be misread as posix paths. Executors that scan remote roots
   must register the store in their own process (the fan-out closures
   are the natural place); `MemoryObjectStore` is process-local by
   construction and therefore a DRIVER-SIDE conformance double only.
 
-The commit primitive (`publish_if_absent`) is the native twin of
-`DirectoryBackend.commit_manifest_json`: posix = tmp file + `os.link`
-(create-once, EEXIST loses the race loudly); object store = conditional
-PUT (S3 `If-None-Match: *`, GCS `if-generation-match: 0`) — the same
-first-writer-wins contract the reference's coordinator relies on
+The commit primitive (`publish_if_absent`) is the only create-once
+write in the package: posix = tmp file + `os.link` (create-once, EEXIST
+loses the race loudly with `CommitConflictError`); object store =
+conditional PUT (S3 `If-None-Match: *`, GCS `if-generation-match: 0`) —
+the same first-writer-wins contract the reference's coordinator relies on
 (`LanceMetadata.java:1489-1513`).
 """
 
@@ -46,17 +46,10 @@ from __future__ import annotations
 import io
 import os
 import uuid
-from typing import TYPE_CHECKING
 
-if TYPE_CHECKING:  # pragma: no cover
-    from .backend import ObjectStore
+from .backend import CommitConflictError, ObjectStore
 
-
-class NativeIOConflictError(RuntimeError):
-    """Another writer published the same path first (first-writer-wins)."""
-
-
-_REGISTERED: dict[str, "ObjectStore"] = {}
+_REGISTERED: dict[str, ObjectStore] = {}
 _VENDORS: dict[str, object] = {}  # root -> RefreshingOptions
 
 
@@ -64,7 +57,7 @@ def is_remote(path: str) -> bool:
     return "://" in path and not path.startswith("file://")
 
 
-def register_object_store_root(root: str, store: "ObjectStore",
+def register_object_store_root(root: str, store: ObjectStore,
                                options_provider=None) -> None:
     """Serve every path under ``root`` (a scheme URI like
     ``memory://bucket/prefix``) from ``store`` in THIS process.
@@ -153,7 +146,7 @@ def restore_binding_option(options) -> None:
         restore_binding(pickle.loads(base64.b64decode(v)))
 
 
-def _resolve(path: str) -> tuple["ObjectStore", str] | None:
+def _resolve(path: str) -> tuple[ObjectStore, str] | None:
     """(store, key) for a remote path; None for posix. Longest
     registered root wins (nested registrations compose)."""
     if not is_remote(path):
@@ -168,8 +161,8 @@ def _resolve(path: str) -> tuple["ObjectStore", str] | None:
         scheme = path.split("://", 1)[0]
         raise NotImplementedError(
             f"unregistered object-store root for {scheme}:// path "
-            f"{path!r}; register_object_store_root() a backend "
-            "(MemoryObjectStore for tests, an fsspec/pyarrow-fs adapter "
+            f"{path!r}; register_object_store_root() a store "
+            "(MemoryObjectStore for tests, a pyarrow-fs adapter "
             "for real stores) in this process first"
         )
     root, store = best
@@ -187,7 +180,7 @@ class _RangedReader(io.RawIOBase):
     — footer-seek metadata reads stay O(bytes asked)); otherwise one
     full GET is cached and served from memory."""
 
-    def __init__(self, store: "ObjectStore", key: str):
+    def __init__(self, store: ObjectStore, key: str):
         self._store, self._key, self._pos = store, key, 0
         self._full: bytes | None = None
         self._size: int | None = None
@@ -284,7 +277,7 @@ def write_bytes(path: str, data: bytes) -> None:
         return
     store.delete(key)
     if not store.put_if_absent(key, bytes(data)):  # pragma: no cover
-        raise NativeIOConflictError(f"lost overwrite race on {path}")
+        raise CommitConflictError(f"lost overwrite race on {path}")
 
 
 def replace_bytes(path: str, data: bytes) -> None:
@@ -318,30 +311,33 @@ def read_text(path: str) -> str:
 
 def publish_if_absent(path: str, data: bytes) -> None:
     """First-writer-wins create — THE commit primitive. Raises
-    NativeIOConflictError when the path already exists (someone else's
-    commit landed first)."""
+    CommitConflictError when the path already exists (someone else's
+    commit landed first). A failed write publishes nothing."""
     r = _resolve(path)
     if r is None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         if os.path.exists(path):
-            raise NativeIOConflictError(f"{path} already committed")
+            raise CommitConflictError(f"{path} already committed")
         tmp = os.path.join(
             os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-            fh.flush()
-            os.fsync(fh.fileno())
         try:
+            with open(tmp, "wb") as fh:
+                fh.write(data)
+                fh.flush()
+                os.fsync(fh.fileno())
             os.link(tmp, path)  # atomic: loses races loudly (EEXIST)
         except FileExistsError as e:
-            raise NativeIOConflictError(
+            raise CommitConflictError(
                 f"{path} was committed by another transaction") from e
         finally:
-            os.unlink(tmp)
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
         return
     store, key = r
     if not store.put_if_absent(key, bytes(data)):
-        raise NativeIOConflictError(
+        raise CommitConflictError(
             f"{path} was committed by another transaction")
 
 

@@ -1,10 +1,12 @@
 """Named version refs (tags) — Lance's tags re-expressed on the manifest
 store: a tag is an immutable alias for one committed version, stored as one
-JSON file under `_refs/`. Creation is atomic-exclusive (O_EXCL), so two
-writers racing the same tag name conflict loudly; deletion unlinks. Tags
-resolve at read-planning time, so `VERSION AS OF 'release-1'` pins the same
-snapshot forever regardless of later commits (and VACUUM refuses to drop a
-tagged version's manifest — see `LanceDataset.vacuum`).
+JSON file under `_refs/`. Creation is create-once through
+`native_io.publish_if_absent` (the same primitive as manifest commits), so
+two writers racing the same tag name conflict loudly and a failed write
+publishes no tag; deletion removes the file. Tags resolve at read-planning
+time, so `VERSION AS OF 'release-1'` pins the same snapshot forever
+regardless of later commits (and VACUUM refuses to drop a tagged version's
+manifest — see `LanceDataset.vacuum`).
 """
 
 from __future__ import annotations
@@ -12,7 +14,8 @@ from __future__ import annotations
 import json
 import os
 
-from .backend import VersionNotFoundError
+from . import native_io as nio
+from .backend import CommitConflictError
 
 REFS_DIR = "_refs"
 _NAME_OK = __import__("re").compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,99}$")
@@ -34,41 +37,35 @@ def create_tag(root: str, name: str, version: int) -> None:
     from .manifest import read_manifest
 
     read_manifest(root, version)  # must exist — raises VersionNotFoundError
-    path = _tag_path(root, name)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
     try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
+        nio.publish_if_absent(_tag_path(root, name),
+                              json.dumps({"version": int(version)}).encode())
+    except CommitConflictError:
         raise TagError(f"tag {name!r} already exists") from None
-    with os.fdopen(fd, "w") as f:
-        json.dump({"version": int(version)}, f)
 
 
 def delete_tag(root: str, name: str) -> None:
-    try:
-        os.unlink(_tag_path(root, name))
-    except FileNotFoundError:
-        raise TagError(f"no such tag: {name!r}") from None
+    path = _tag_path(root, name)
+    if not nio.exists(path):
+        raise TagError(f"no such tag: {name!r}")
+    nio.delete(path)
+
+
+def _read_tag(path: str) -> int:
+    return int(json.loads(bytes(nio.read_bytes(path)))["version"])
 
 
 def resolve_tag(root: str, name: str) -> int:
     try:
-        with open(_tag_path(root, name)) as f:
-            return int(json.load(f)["version"])
+        return _read_tag(_tag_path(root, name))
     except FileNotFoundError:
         raise TagError(f"no such tag: {name!r}") from None
 
 
 def list_tags(root: str) -> dict[str, int]:
     d = os.path.join(root, REFS_DIR)
-    if not os.path.isdir(d):
-        return {}
-    out = {}
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".json"):
-            with open(os.path.join(d, fn)) as f:
-                out[fn[:-5]] = int(json.load(f)["version"])
-    return out
+    return {fn[:-5]: _read_tag(os.path.join(d, fn))
+            for fn in sorted(nio.listdir(d)) if fn.endswith(".json")}
 
 
 def tagged_versions(root: str) -> set[int]:

@@ -12,8 +12,7 @@ One class serves every user:
   and the float32 vector columns the exact refines gather from (only
   while a search's columns and index fit the budget together — a
   cyclic visit over more would miss every time).
-- ``manifest``: parsed own-format JSON manifests (DirectoryBackend
-  only).
+- ``manifest``: parsed own-format JSON manifests.
 - ``vector_index``: decoded HNSW shard graphs.
 
 Every cached file is written once under a unique name (manifests,

@@ -14,10 +14,9 @@ re-vended. Executors can hold their own `RefreshingOptions` (the provider
 ships in the task closure), matching the reference's
 refresh-inside-the-worker placement.
 
-The posix `DirectoryBackend` needs none of this (``filesystem_for``
-returns None → native file IO). An object-store backend supplies its
-pyarrow filesystem through the same hook; in THIS environment no object
-store exists, so a non-posix root fails loudly rather than misread.
+Posix roots need none of this. An object-store root gets vending by
+passing a provider to `native_io.register_object_store_root`, which
+pushes the fresh option set to the store before every storage open.
 """
 
 from __future__ import annotations
@@ -78,16 +77,3 @@ class RefreshingOptions:
             self._cache[root] = cur
         return cur.options
 
-
-def filesystem_for(root: str, options: dict | None = None):
-    """pyarrow filesystem for a dataset root: None for posix paths (native
-    file IO — the only storage present in this environment); any
-    object-store scheme fails loudly until a filesystem adapter backend is
-    plugged in (see README "Lance interop status")."""
-    if "://" not in root or root.startswith("file://"):
-        return None
-    scheme = root.split("://", 1)[0]
-    raise NotImplementedError(
-        f"no filesystem adapter for {scheme}:// roots in this environment; "
-        "supply a pyarrow filesystem via a StorageBackend implementation"
-    )

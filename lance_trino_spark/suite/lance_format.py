@@ -3396,7 +3396,7 @@ def lf45(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hard link, and footer-seek metadata reads through ranged GETs. The
 # MemoryObjectStore is the conformance double for the conditional-put
 # protocol; a production store plugs in through the same ObjectStore
-# seam (format/backend.py), import-gated like FsspecObjectStore.
+# protocol (format/backend.py), e.g. PyArrowFsObjectStore.
 # ---------------------------------------------------------------------------
 @register(
     "lf46_native_object_store",

@@ -1,184 +1,178 @@
-"""Storage-backend seam tests: the metadata plane routes through the
-installed StorageBackend, so a non-filesystem backend (here: in-memory)
-drives version listing, manifest reads, time travel, and conflict detection
-without touching `_versions/` on disk — the drop-in point for a real
-`lance`-SDK adapter."""
+"""Storage-seam tests: both planes list, read, commit and delete through
+`native_io`, so an object-store root registered in this process (here: an
+in-memory store and a pyarrow filesystem) drives version listing, manifest
+reads, time travel and conflict detection exactly like a posix root."""
 
 from __future__ import annotations
 
-import os
+import json
+import uuid
+import warnings
 
+import pyarrow.fs as pafs
 import pytest
 
 from lance_trino_spark.format import backend as be
+from lance_trino_spark.format import manifest as M
+from lance_trino_spark.format import native_io as nio
 from lance_trino_spark.format.dataset import LanceDataset
 from lance_trino_spark.format.manifest import (
     CommitConflictError,
+    DeletionFile,
+    Fragment,
     Manifest,
     commit_manifest,
+    delete_manifest,
     list_versions,
     read_manifest,
 )
 
 
-class InMemoryBackend:
-    def __init__(self):
-        self.store: dict[tuple[str, int], dict] = {}
-
-    def list_versions(self, root):
-        return sorted(v for (r, v) in self.store if r == root)
-
-    def read_manifest_json(self, root, version):
-        try:
-            return self.store[(root, version)]
-        except KeyError:
-            raise be.VersionNotFoundError(f"{version} at {root}")
-
-    def commit_manifest_json(self, root, version, payload):
-        if (root, version) in self.store:
-            raise be.CommitConflictError(f"{version} at {root}")
-        self.store[(root, version)] = payload
-
-    def delete_manifest(self, root, version):
-        self.store.pop((root, version), None)
-
-
 @pytest.fixture
-def mem_backend():
-    b = InMemoryBackend()
-    prev = be.set_backend(b)
-    yield b
-    be.set_backend(prev)
+def mem_root():
+    """A fresh `MemoryObjectStore` registered at a unique memory:// root."""
+    store = be.MemoryObjectStore()
+    base = f"memory://seam-{uuid.uuid4().hex}"
+    nio.register_object_store_root(base, store)
+    yield store, base
+    nio.unregister_object_store_root(base)
 
 
-def test_metadata_plane_routes_through_backend(mem_backend, tmp_path, spark):
+def test_metadata_plane_routes_through_backend(mem_root):
     from pyspark.sql.types import LongType, StructField, StructType
 
-    root = str(tmp_path / "t.lance")
+    store, base = mem_root
+    root = f"{base}/t.lance"
     schema = StructType([StructField("a", LongType())])
     ds = LanceDataset.create_empty(root, schema)
     assert ds.version == 1 and ds.count_rows() == 0
-    # the manifest lives in the backend, not on disk
-    assert (root, 1) in mem_backend.store
-    assert not os.path.isdir(os.path.join(root, "_versions"))
-    # conflict detection comes from the backend too
+    # the manifest lives in the registered store, at the on-disk layout's key
+    assert store.list_prefix(base) == [f"{root}/_versions/1.manifest.json"]
+    assert LanceDataset.open(root).schema == schema
+    # conflict detection comes from the store's conditional put
     with pytest.raises(CommitConflictError):
-        mem_backend.commit_manifest_json(root, 1, {})
+        commit_manifest(root, Manifest(version=1, schema_json={}))
 
 
-def test_backend_version_resolution(mem_backend):
-    root = "/virtual/t.lance"
+def test_backend_version_resolution(mem_root, monkeypatch):
+    root = f"{mem_root[1]}/t.lance"
     for v, ts in [(1, 100), (2, 200), (3, 300)]:
-        m = Manifest(version=v, schema_json={"type": "struct", "fields": []})
-        commit_manifest(root, m)
-        mem_backend.store[(root, v)]["timestamp_ms"] = ts  # pin for the test
+        monkeypatch.setattr(M, "now_ms", lambda ts=ts: ts)  # pin the clock
+        commit_manifest(
+            root, Manifest(version=v, schema_json={"type": "struct", "fields": []}))
     assert list_versions(root) == [1, 2, 3]
     assert read_manifest(root, 2).version == 2
-    from lance_trino_spark.format.manifest import version_at_timestamp
-
-    assert version_at_timestamp(root, 250) == 2
-    assert version_at_timestamp(root, 99999) == 3
+    assert M.version_at_timestamp(root, 250) == 2
+    assert M.version_at_timestamp(root, 99999) == 3
     with pytest.raises(be.VersionNotFoundError):
-        version_at_timestamp(root, 50)
+        M.version_at_timestamp(root, 50)
 
 
 @pytest.fixture(params=["directory", "memory", "objectstore"])
-def any_backend(request, tmp_path):
-    """Every registered backend implementation, paired with a root it owns."""
+def any_root(request, tmp_path):
+    """A dataset root on each kind of storage `native_io` serves: a posix
+    directory, a registered `MemoryObjectStore` and a registered
+    `PyArrowFsObjectStore` (pyarrow's local filesystem standing in for
+    S3/GCS)."""
     if request.param == "directory":
-        yield be.DirectoryBackend(), str(tmp_path / "conformance.lance")
-    elif request.param == "objectstore":
-        # the PRODUCT object-store backend over a conditional-put store —
-        # the seam beyond posix (no filesystem, keys only); an fsspec
-        # binding exists behind an import-try (FsspecObjectStore)
-        yield (
-            be.ObjectStoreBackend(be.MemoryObjectStore()),
-            "mem://bucket/conformance.lance",
-        )
+        yield str(tmp_path / "conformance.lance")
+        return
+    base = f"{request.param}://conf-{uuid.uuid4().hex}"
+    if request.param == "memory":
+        store = be.MemoryObjectStore()
     else:
-        yield InMemoryBackend(), "/virtual/conformance.lance"
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            store = be.PyArrowFsObjectStore(
+                pafs.LocalFileSystem(), base, str(tmp_path / "bucket"))
+    nio.register_object_store_root(base, store)
+    try:
+        yield f"{base}/conformance.lance"
+    finally:
+        nio.unregister_object_store_root(base)
+
+
+def _manifest(version: int, n_fragments: int) -> Manifest:
+    """A manifest exercising what real ones carry: nested fragment entries,
+    a deletion-file pointer, zone-map stats, unicode and null."""
+    frags = [
+        Fragment(i, f"data/f-{i:04d}.parquet", 1024 + i,
+                 DeletionFile(f"_deletions/d-{i}.parquet", 7) if i % 2 else None,
+                 {"α": {"min": -i, "max": i, "nulls": 0}})
+        for i in range(n_fragments)
+    ]
+    return Manifest(
+        version=version,
+        schema_json={"type": "struct", "fields": [
+            {"name": "α", "type": "long", "nullable": True, "metadata": {}}]},
+        fragments=frags,
+        operation="append",
+        read_version=version - 1 or None,
+        max_fragment_id=n_fragments - 1,
+        properties={"note": "ünïcode"},
+    )
 
 
 class TestBackendConformance:
-    """The StorageBackend contract, stated without reference to any layout.
+    """The storage contract of `manifest.py`, stated for every kind of
+    root: the same calls, the same results, whether `native_io` resolves
+    the root to the filesystem or to a registered object store. Mirrors
+    the reference's commit semantics (`LanceMetadata.java:1489-1513`
+    optimistic version commit)."""
 
-    A real `lance`-SDK adapter (metadata plane over `lance.dataset(uri)` /
-    `LanceDataset.commit`, see `format/backend.py` module docstring) must pass
-    this suite unchanged — parametrize `any_backend` with it when the SDK is
-    installed. Mirrors the reference's commit semantics
-    (`LanceMetadata.java:1489-1513` optimistic version commit)."""
+    def test_fresh_root_has_no_versions(self, any_root):
+        assert list_versions(any_root) == []
 
-    # A manifest-shaped payload exercising what real manifests carry:
-    # nested fragment entries, a deletion-file pointer, unicode, and null.
-    PAYLOAD_V1 = {
-        "version": 1,
-        "schema_json": {"type": "struct", "fields": [{"name": "α", "type": "long"}]},
-        "fragments": [
-            {"path": "data/f-0001.parquet", "rows": 1024, "deletion": None},
-            {
-                "path": "data/f-0002.parquet",
-                "rows": 512,
-                "deletion": {"path": "_deletions/d-1.json", "count": 7},
-            },
-        ],
-        "timestamp_ms": 1700000000000,
-    }
-    PAYLOAD_V2 = {"version": 2, "schema_json": {}, "fragments": [], "timestamp_ms": 1700000001000}
-
-    def test_fresh_root_has_no_versions(self, any_backend):
-        b, root = any_backend
-        assert b.list_versions(root) == []
-
-    def test_missing_version_raises(self, any_backend):
-        b, root = any_backend
+    def test_missing_version_raises(self, any_root):
         with pytest.raises(be.VersionNotFoundError):
-            b.read_manifest_json(root, 1)
+            read_manifest(any_root, 1)
 
-    def test_commit_read_roundtrip_exact(self, any_backend):
+    def test_commit_read_roundtrip_exact(self, any_root):
         """Version immutability: what was committed is what every later read
-        returns, structure-exact (incl. deletion-file pointers and unicode)."""
-        b, root = any_backend
-        b.commit_manifest_json(root, 1, self.PAYLOAD_V1)
-        assert b.read_manifest_json(root, 1) == self.PAYLOAD_V1
-        assert b.list_versions(root) == [1]
+        returns, structure-exact (incl. deletion-file pointers and unicode),
+        stored as the `json.dumps` bytes of the manifest at
+        `_versions/<N>.manifest.json`."""
+        m = _manifest(1, 3)
+        commit_manifest(any_root, m)
+        assert read_manifest(any_root, 1).to_json() == m.to_json()
+        assert list_versions(any_root) == [1]
+        stored = nio.read_bytes(f"{any_root}/_versions/1.manifest.json")
+        assert bytes(stored) == json.dumps(m.to_json()).encode()
 
-    def test_versions_listed_sorted_and_complete(self, any_backend):
-        b, root = any_backend
-        for v in (3, 1, 2):
-            payload = dict(self.PAYLOAD_V1, version=v)
-            b.commit_manifest_json(root, v, payload)
-        assert b.list_versions(root) == [1, 2, 3]
+    def test_versions_listed_sorted_and_complete(self, any_root):
+        for v in (3, 1, 2, 10):
+            commit_manifest(any_root, _manifest(v, 1))
+        assert list_versions(any_root) == [1, 2, 3, 10]
 
-    def test_concurrent_commit_conflicts_and_keeps_winner(self, any_backend):
+    def test_concurrent_commit_conflicts_and_keeps_winner(self, any_root):
         """Optimistic concurrency: the second committer of a version gets
-        CommitConflictError and the FIRST payload stays visible untouched."""
-        b, root = any_backend
-        b.commit_manifest_json(root, 1, self.PAYLOAD_V1)
+        CommitConflictError and the FIRST manifest stays visible untouched."""
+        first = _manifest(1, 3)
+        commit_manifest(any_root, first)
         with pytest.raises(be.CommitConflictError):
-            b.commit_manifest_json(root, 1, self.PAYLOAD_V2)
-        assert b.read_manifest_json(root, 1) == self.PAYLOAD_V1
-        assert b.list_versions(root) == [1]
+            commit_manifest(any_root, _manifest(1, 0))
+        assert read_manifest(any_root, 1).to_json() == first.to_json()
+        assert list_versions(any_root) == [1]
 
-    def test_delete_manifest_removes_and_is_idempotent(self, any_backend):
-        b, root = any_backend
-        b.commit_manifest_json(root, 1, self.PAYLOAD_V1)
-        b.commit_manifest_json(root, 2, self.PAYLOAD_V2)
-        b.delete_manifest(root, 1)
-        assert b.list_versions(root) == [2]
+    def test_delete_manifest_removes_and_is_idempotent(self, any_root):
+        commit_manifest(any_root, _manifest(1, 3))
+        commit_manifest(any_root, _manifest(2, 0))
+        delete_manifest(any_root, 1)
+        assert list_versions(any_root) == [2]
         with pytest.raises(be.VersionNotFoundError):
-            b.read_manifest_json(root, 1)
-        b.delete_manifest(root, 1)  # missing version: no-op, no raise
-        b.delete_manifest(root, 99)
+            read_manifest(any_root, 1)
+        delete_manifest(any_root, 1)  # missing version: no-op, no raise
+        delete_manifest(any_root, 99)
 
-    def test_commit_after_delete_is_allowed(self, any_backend):
+    def test_commit_after_delete_is_allowed(self, any_root):
         """Vacuumed version numbers may be reused (the format layer never
-        does, but the backend contract is commit-if-absent, not
-        commit-once-ever)."""
-        b, root = any_backend
-        b.commit_manifest_json(root, 1, self.PAYLOAD_V1)
-        b.delete_manifest(root, 1)
-        b.commit_manifest_json(root, 1, self.PAYLOAD_V2)
-        assert b.read_manifest_json(root, 1) == self.PAYLOAD_V2
+        does, but the contract is commit-if-absent, not commit-once-ever)."""
+        commit_manifest(any_root, _manifest(1, 3))
+        assert len(read_manifest(any_root, 1).fragments) == 3
+        delete_manifest(any_root, 1)
+        second = _manifest(1, 0)
+        commit_manifest(any_root, second)
+        assert read_manifest(any_root, 1).to_json() == second.to_json()
 
 
 class TestStorageOptions:
@@ -227,14 +221,6 @@ class TestStorageOptions:
         ro = RefreshingOptions(StaticProvider({"region": "us-east-1"}))
         assert ro.fresh("r", now_ms=0) == {"region": "us-east-1"}
         assert ro.fresh("r", now_ms=10**15) == {"region": "us-east-1"}
-
-    def test_filesystem_for_posix_and_loud_object_store(self):
-        from lance_trino_spark.format.storage_options import filesystem_for
-
-        assert filesystem_for("/data/t.lance") is None
-        assert filesystem_for("file:///data/t.lance") is None
-        with pytest.raises(NotImplementedError, match="s3"):
-            filesystem_for("s3://bucket/t.lance")
 
 
 def test_manifest_cache_hit_and_recreate_invalidation(spark, tmp_path):
@@ -391,11 +377,7 @@ def test_object_store_mtime_backs_debris_grace(tmp_path):
     orphaned shard files FOREVER on object-store datasets. The
     production-shaped adapters must report real epoch-second mtimes."""
     import time
-    import warnings
 
-    import pyarrow.fs as pafs
-
-    from lance_trino_spark.format import native_io as nio
     from lance_trino_spark.format.backend import PyArrowFsObjectStore
 
     base = str(tmp_path / "bucket")
@@ -412,19 +394,3 @@ def test_object_store_mtime_backs_debris_grace(tmp_path):
         assert store.mtime("pafs://mt/a/missing.idx") is None
     finally:
         nio.unregister_object_store_root("pafs://mt")
-
-    # fsspec adapter: same contract, gated on the optional dependency
-    try:
-        import fsspec  # noqa: F401
-    except ImportError:
-        return
-    from lance_trino_spark.format.backend import FsspecObjectStore
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", RuntimeWarning)
-        fstore = FsspecObjectStore("file")
-    key = str(tmp_path / "fsspec-file.idx")
-    with fstore.fs.open(key, "wb") as f:
-        f.write(b"x")
-    got = fstore.mtime(key)
-    assert got is None or got > 0  # modified() may be unimplemented

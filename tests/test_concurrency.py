@@ -3,13 +3,17 @@
 The reference's contract (A17): appends are optimistic and retry through
 conflicts (they commute); row-level Updates conflict with ANY concurrent
 write and surface the error. The append stress test drives real concurrent
-commits through the atomic hard-link protocol. The hypothesis test checks
+commits through the atomic hard-link protocol; the race tests line eight
+writers up on one manifest version or one tag name, on a posix root and on
+an object-store root, and check that exactly one wins. The hypothesis test checks
 the MoR delete semantics against a plain filter for arbitrary data/predicate
 combinations.
 """
 
 from __future__ import annotations
 
+import threading
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -17,8 +21,74 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from lance_trino_spark.format import native_io as nio
+from lance_trino_spark.format.backend import MemoryObjectStore
 from lance_trino_spark.format.dataset import LanceDataset
+from lance_trino_spark.format.manifest import (
+    CommitConflictError,
+    Manifest,
+    commit_manifest,
+    read_manifest,
+)
+from lance_trino_spark.format.refs import TagError, create_tag, resolve_tag
 from lance_trino_spark.operators import dml
+
+RACERS = 8
+
+
+@pytest.fixture(params=["posix", "memory"])
+def race_root(request, tmp_path):
+    if request.param == "posix":
+        yield str(tmp_path / "race.lance")
+        return
+    base = f"memory://race-{uuid.uuid4().hex}"
+    nio.register_object_store_root(base, MemoryObjectStore())
+    try:
+        yield f"{base}/race.lance"
+    finally:
+        nio.unregister_object_store_root(base)
+
+
+def _race(attempt) -> tuple[list[int], list[int]]:
+    """Run ``attempt(i)`` in RACERS threads released together; return
+    (indices that returned, indices that raised the expected conflict)."""
+    gate = threading.Barrier(RACERS)
+
+    def run(i):
+        gate.wait()
+        try:
+            attempt(i)
+            return True
+        except (CommitConflictError, TagError):
+            return False
+
+    with ThreadPoolExecutor(max_workers=RACERS) as ex:
+        won = list(ex.map(run, range(RACERS)))
+    return ([i for i, w in enumerate(won) if w],
+            [i for i, w in enumerate(won) if not w])
+
+
+def test_racing_manifest_commits_one_winner(race_root):
+    schema = {"type": "struct", "fields": []}
+
+    def commit(i):
+        commit_manifest(race_root, Manifest(
+            version=1, schema_json=schema, properties={"writer": str(i)}))
+
+    winners, losers = _race(commit)
+    assert len(winners) == 1 and len(losers) == RACERS - 1
+    got = read_manifest(race_root, 1)
+    assert got.properties == {"writer": str(winners[0])}
+
+
+def test_racing_tag_creates_one_winner(race_root):
+    schema = {"type": "struct", "fields": []}
+    for v in range(1, RACERS + 1):
+        commit_manifest(race_root, Manifest(version=v, schema_json=schema))
+
+    winners, losers = _race(lambda i: create_tag(race_root, "rel", i + 1))
+    assert len(winners) == 1 and len(losers) == RACERS - 1
+    assert resolve_tag(race_root, "rel") == winners[0] + 1
 
 
 def test_concurrent_appends_all_land(spark, tmp_path):

@@ -370,6 +370,51 @@ def test_tags_lifecycle_and_vacuum_pinning(spark, tmp_path):
         LanceDataset.open(path, version=1)
 
 
+_FAILING_TAG_WRITE = """
+import errno, resource, signal, sys
+from lance_trino_spark.format.refs import create_tag
+signal.signal(signal.SIGXFSZ, signal.SIG_IGN)
+resource.setrlimit(resource.RLIMIT_FSIZE,
+                   (0, resource.getrlimit(resource.RLIMIT_FSIZE)[1]))
+try:
+    create_tag(sys.argv[1], "rel", 1)
+except OSError as e:
+    sys.exit(0 if e.errno == errno.EFBIG else 1)
+sys.exit(2)
+"""
+
+
+def test_failed_tag_write_leaves_no_tag(tmp_path):
+    """A tag whose payload write fails (here: a zero file-size limit, the
+    disk-full shape) must publish nothing — not an empty tag file that
+    every later list/resolve/vacuum trips over and that blocks
+    re-creating the tag."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from lance_trino_spark.format.manifest import Manifest, commit_manifest
+    from lance_trino_spark.format.refs import list_tags, resolve_tag
+
+    path = str(tmp_path / "t.lance")
+    ds = LanceDataset.create_empty(
+        path, StructType([StructField("a", LongType())]))
+    for v in (2, 3):
+        commit_manifest(path, Manifest(version=v, schema_json=ds.schema.jsonValue()))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "-c", _FAILING_TAG_WRITE, path],
+                          cwd=repo, capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr  # the write failed with EFBIG
+    assert list_tags(path) == {}
+    ds.create_tag("rel", 1)  # re-creatable
+    assert resolve_tag(path, "rel") == 1
+    assert list_tags(path) == {"rel": 1}
+    out = LanceDataset.vacuum(path, keep_versions=1)
+    assert out["retained_versions"] == [1, 3]
+
+
 def test_commit_metadata_provenance(spark, tmp_path):
     from lance_trino_spark.catalog import LanceCatalog
     from lance_trino_spark.format.dataset import LanceDataset
